@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -81,59 +82,69 @@ def run_pipeline(
     docs = tables.load(spark, sf_dir, "documents")
     n_raw = docs.count()
 
-    cleaned = _clean(docs)
-    toks = P.with_tokens(cleaned)
-    n_clean = toks.count()
+    # This pass owns both caches and releases them on every exit. The
+    # token frame is counted once it is persisted, so the count fills
+    # the cache fit_lda's estimators read instead of running the text
+    # chain once more.
+    toks = P.with_tokens(_clean(docs)).persist(StorageLevel.MEMORY_AND_DISK)
+    themed = None
+    try:
+        n_clean = toks.count()
 
-    lda_model, transformed = P.fit_lda(toks)
-    themed = P.assign_topics(transformed).cache()
+        lda_model, transformed = P.fit_lda(toks)
+        themed = P.assign_topics(transformed).cache()
 
-    split = P.md5_split(themed.select("doc_id", "lang", "unigrams"), "doc_id")
-    clf_model, predictions, train = P.fit_classifier(split)
-    metrics_df = P.classification_metrics(predictions)
-    m = metrics_df.collect()[0]
-
-    processed_path = f"{out_dir}/processed"
-    sinks.write_parquet(
-        themed.select("doc_id", "lang", "source", "topic", "theme"),
-        processed_path,
-    )
-    dist_path = f"{out_dir}/theme_distribution"
-    sinks.write_csv(theme_distribution(themed), dist_path, single_file=True)
-    words_path = f"{out_dir}/top_words"
-    sinks.write_csv(top_words(themed), words_path, single_file=True)
-    model_path = f"{out_dir}/models/classifier"
-    sinks.save_model(clf_model, model_path)
-
-    metrics = {
-        "rows_raw": n_raw,
-        "rows_clean": n_clean,
-        "n_test": m["n_test"],
-        "accuracy": m["accuracy"],
-        "weighted_f1": m["weighted_f1"],
-    }
-    metrics_path = sinks.write_metrics_json(
-        metrics, f"{out_dir}/metrics/pipeline_metrics.json"
-    )
-    result: dict[str, Any] = {
-        "metrics": metrics,
-        "processed_path": processed_path,
-        "theme_distribution_path": dist_path,
-        "top_words_path": words_path,
-        "model_path": model_path,
-        "metrics_path": metrics_path,
-    }
-    if bucket_url is not None:
-        from ..sources.objectstore import ObjectBucket, publish_run
-
-        bucket = ObjectBucket(spark, bucket_url).ensure()
-        result["store_locations"] = publish_run(
-            bucket,
-            execution_ts,
-            processed_df=themed.select(
-                "doc_id", "lang", "source", "topic", "theme"
-            ),
-            metrics=metrics,
-            models_dir=model_path,
+        split = P.md5_split(
+            themed.select("doc_id", "lang", "unigrams"), "doc_id"
         )
-    return result
+        clf_model, predictions, train = P.fit_classifier(split)
+        m = P.classification_metrics(predictions).collect()[0]
+
+        processed_path = f"{out_dir}/processed"
+        sinks.write_parquet(
+            themed.select("doc_id", "lang", "source", "topic", "theme"),
+            processed_path,
+        )
+        dist_path = f"{out_dir}/theme_distribution"
+        sinks.write_csv(theme_distribution(themed), dist_path, single_file=True)
+        words_path = f"{out_dir}/top_words"
+        sinks.write_csv(top_words(themed), words_path, single_file=True)
+        model_path = f"{out_dir}/models/classifier"
+        sinks.save_model(clf_model, model_path)
+
+        metrics = {
+            "rows_raw": n_raw,
+            "rows_clean": n_clean,
+            "n_test": m["n_test"],
+            "accuracy": m["accuracy"],
+            "weighted_f1": m["weighted_f1"],
+        }
+        metrics_path = sinks.write_metrics_json(
+            metrics, f"{out_dir}/metrics/pipeline_metrics.json"
+        )
+        result: dict[str, Any] = {
+            "metrics": metrics,
+            "processed_path": processed_path,
+            "theme_distribution_path": dist_path,
+            "top_words_path": words_path,
+            "model_path": model_path,
+            "metrics_path": metrics_path,
+        }
+        if bucket_url is not None:
+            from ..sources.objectstore import ObjectBucket, publish_run
+
+            bucket = ObjectBucket(spark, bucket_url).ensure()
+            result["store_locations"] = publish_run(
+                bucket,
+                execution_ts,
+                processed_df=themed.select(
+                    "doc_id", "lang", "source", "topic", "theme"
+                ),
+                metrics=metrics,
+                models_dir=model_path,
+            )
+        return result
+    finally:
+        if themed is not None:
+            themed.unpersist()
+        toks.unpersist()

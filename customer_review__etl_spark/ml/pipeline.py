@@ -71,10 +71,14 @@ def fit_lda(df_tokens: DataFrame) -> tuple[PipelineModel, DataFrame]:
     vectors (maxIter LDA jobs) bounds the recompute: both are
     per-document rows (tokens ≤ doc length, vectors ≤ vocab 1000
     sparse), MEMORY_AND_DISK so an over-memory corpus spills instead
-    of failing."""
+    of failing. A token frame the caller already persisted is used as
+    is and stays the caller's to release."""
     from pyspark import StorageLevel
 
-    toks = df_tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    own_toks = not df_tokens.is_cached
+    toks = df_tokens
+    if own_toks:
+        toks = df_tokens.persist(StorageLevel.MEMORY_AND_DISK)
     cv = CountVectorizer(
         inputCol="tokens",
         outputCol="tf",
@@ -97,7 +101,8 @@ def fit_lda(df_tokens: DataFrame) -> tuple[PipelineModel, DataFrame]:
     # the fit is done; consumers of `transformed` recompute the (one)
     # feature pass lazily — the iterative phase above is what needed
     # the pin
-    toks.unpersist()
+    if own_toks:
+        toks.unpersist()
     feats.unpersist()
     return model, transformed
 
@@ -277,46 +282,35 @@ def fit_classifier(
 def classification_metrics(predictions: DataFrame) -> DataFrame:
     """M9: accuracy + weighted F1 from the confusion counts — computed
     with exact integer counts and deterministic divisions (no
-    evaluator RNG), returned as a single-row DataFrame."""
-    conf = predictions.groupBy("label", "prediction").agg(
-        F.count(F.lit(1)).alias("n")
+    evaluator RNG), returned as a single-row DataFrame.
+
+    One action: the (label, prediction) counts (at most classes² rows)
+    are collected once and the arithmetic runs on the driver, so the
+    lazy scoring pass behind `predictions` runs once, not once per
+    metric. F1 is summed per label in sorted label order."""
+    conf = (
+        predictions.groupBy("label", "prediction")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     )
-    total = conf.agg(F.sum("n").alias("t")).collect()[0]["t"]
-    correct = (
-        conf.filter(F.col("label") == F.col("prediction"))
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("c"))
-        .collect()[0]["c"]
-    )
-    per_class = (
-        conf.groupBy("label")
-        .agg(F.sum("n").alias("support"))
-        .join(
-            conf.groupBy("prediction").agg(F.sum("n").alias("predicted")),
-            F.col("label") == F.col("prediction"),
-            "left",
-        )
-        .join(
-            conf.filter(F.col("label") == F.col("prediction"))
-            .select("label", F.col("n").alias("tp")),
-            "label",
-            "left",
-        )
-        .select(
-            "label",
-            "support",
-            F.coalesce("predicted", F.lit(0)).alias("predicted"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-        )
-    )
-    rows = per_class.collect()
+    support: dict[float, int] = {}
+    predicted: dict[float, int] = {}
+    tp: dict[float, int] = {}
+    for r in conf:
+        support[r["label"]] = support.get(r["label"], 0) + r["n"]
+        predicted[r["prediction"]] = predicted.get(r["prediction"], 0) + r["n"]
+        if r["label"] == r["prediction"]:
+            tp[r["label"]] = r["n"]
+    total = sum(support.values())
+    correct = sum(tp.values())
     f1_weighted = 0.0
-    for r in rows:
-        prec = r["tp"] / r["predicted"] if r["predicted"] else 0.0
-        rec = r["tp"] / r["support"] if r["support"] else 0.0
+    for label in sorted(support):
+        t, p_n, s_n = tp.get(label, 0), predicted.get(label, 0), support[label]
+        prec = t / p_n if p_n else 0.0
+        rec = t / s_n
         f1 = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
-        f1_weighted += f1 * r["support"] / total
-    sess = predictions.sparkSession
-    return sess.createDataFrame(
-        [(total, int(correct), correct / total if total else 0.0, f1_weighted)],
+        f1_weighted += f1 * s_n / total
+    return predictions.sparkSession.createDataFrame(
+        [(total, correct, correct / total if total else 0.0, f1_weighted)],
         "n_test BIGINT, n_correct BIGINT, accuracy DOUBLE, weighted_f1 DOUBLE",
     )

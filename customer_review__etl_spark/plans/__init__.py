@@ -294,56 +294,66 @@ PRIORITY: tuple[str, ...] = (
     #   occupancy-adaptive anchor-gram re-keying; oracle-backed, added
     #   after this head was pinned, never driver-sampled — the
     #   planner's never-sampled-first rule slots it automatically).
-    "d10_adaptive_block_jaccard",
-    "io13_partition_pruned_read",
-    "gr02_triangle_count",
-    "pl01_training_pipeline",
-    "pl02_incremental_refresh",
-    "pl04_data_recipe",
-    "p16_scalable_ordinal",
-    "p12_deterministic_sample",
-    "p19_sequence_pack",
-    "a14_running_distinct",
-    "a15_revenue_concentration",
-    "a16_mad_outliers",
-    "u07_arrow_batch_clip",
-    "q21_waiting_supplier",
-    "q22_idle_customers",
-    "q11_important_stock",
-    "q16_parts_supplier",
-    "q20_potential_promotion",
-    "j13_bloom_semi_join",
-    "w09_range_frame",
-    "w11_ohlc_bars",
-    "w08_rolling_median",
-    "u06_ewma_partitioned",
-    "u04_sentence_udtf",
-    "q4_order_priority",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "t06_fingerprint",
-    "t07_positional_hash",
-    "t09_pii_scrub",
-    "t10_repetition_score",
-    "t12_vocab_coverage",
-    "t17_reading_ease",
-    "t20_novelty_ratio",
-    "t22_bpe_encode",
-    "d04_ngram_jaccard",
-    "d09_substring_excision",
-    "dc03_verbatim_decontaminate",
-    "s07_multiprobe_ann",
-    "st12_stream_quarantine",
-    "st10_keyed_upsert",
-    "ml12_hashed_features",
-    "ml08_linreg",
-    "ml09_knn_label",
-    "ml10_classifier_gate",
-    "mm04_blob_chunks",
-    "io03_jsonl_roundtrip",
-    "io04_orc_roundtrip",
-    "io07_compaction",
-    "f03_json_map_funcs",
+    #   r18 (head taken VERBATIM from tools/rotation_plan.py; the
+    #   registry has no driver round after r17, so these are the
+    #   planner's r18 proposal): d11_adaptive_containment (the one
+    #   never-driver-sampled entry), the six pinned r17 deferrals
+    #   (io08/io12/io16/gr05/gr03/gr04, last sampled r12), then the
+    #   r13 cohort oldest-first, with f01_string_date_math for the f
+    #   family. The plan is infeasible by arithmetic: 55 entries are
+    #   hard-stale at r18 (6 from r12, 49 from r13) for 50 slots, so
+    #   seven r13 entries stay out (t26, ml02, ml03, ml04, io02, pl03,
+    #   pl05) and tests/test_plans.py's planner gate stays red.
+    "d11_adaptive_containment",
+    "io08_dynamic_partition_overwrite",
+    "io12_nested_projection",
+    "io16_quarantine_write",
+    "gr05_connected_components",
+    "gr03_khop_reachability",
+    "gr04_item_similarity",
+    "p02_drop_columns",
+    "p05_lowercase_rename",
+    "p07_filter_nonempty",
+    "p08_filter_eq",
+    "p09_select",
+    "p10_limit_topk",
+    "p11_derived_json",
+    "p13_group_quota_sample",
+    "p14_weighted_mix",
+    "a02_count_distinct",
+    "a03_null_counts",
+    "a05_distinct_sort",
+    "a07_summary_stats",
+    "q15_top_supplier",
+    "j03_left_semi",
+    "j04_left_anti",
+    "j05_full_outer",
+    "j06_theta_range",
+    "q7_volume_shipping",
+    "q19_disjunctive_pred",
+    "w02_lag_lead",
+    "w04_rank_dense",
+    "set01_union_all",
+    "g02_cube",
+    "g03_grouping_sets",
+    "w06_moving_avg",
+    "w12_retention_cohorts",
+    "a09_approx_stats",
+    "u01_grouped_minmax",
+    "q6_forecast_revenue",
+    "q10_returned_items",
+    "q2_min_cost_supplier",
+    "t02_stemmed_chain",
+    "t04_quality_scores",
+    "t23_inverted_index",
+    "t24_bm25_topk",
+    "t25_quality_rules",
+    "mm03_frame_sample",
+    "d08_repeated_substrings",
+    "s08_rrf_fusion",
+    "st02_sliding_window",
+    "ml01_lda_themes",
+    "f01_string_date_math",
 )
 
 

@@ -18,7 +18,9 @@ point must be bit-identical. Two rules make that true:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import threading
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -181,3 +183,33 @@ def sql_cc_min_label(
         f"cluster AS (SELECT node, lbl AS mn FROM lab{rounds})"
     )
     return ",\n".join(ctes)
+
+
+# One cached relation per op, swapped on re-invocation (round-10
+# ADVICE #2): a plan builder that caches a relation its plan reads
+# several times returns a LAZY frame, so it cannot unpersist in a
+# try/finally — the cache would be gone before the caller runs the
+# plan. A long-lived session (bench loops, scale-probe reps) would
+# otherwise accumulate one cached relation per call until an external
+# clearCache. Unpersisting the PREVIOUS call's cache bounds storage at
+# one relation per op; a still-held stale DataFrame simply recomputes.
+_CACHE_SLOTS: dict[str, DataFrame] = {}
+# plans are built from multiple threads (round-11 ADVICE #1): an
+# unguarded pop/assign pair can leak a cached relation or unpersist one
+# an in-flight concurrent job is reading (correct but slow — Spark
+# recomputes).
+_CACHE_LOCK = threading.Lock()
+
+
+def cache_slot(key: str, df: DataFrame) -> DataFrame:
+    """`df.cache()`, owned by the slot `key`: the slot's previous
+    relation is released first."""
+    with _CACHE_LOCK:
+        prev = _CACHE_SLOTS.pop(key, None)
+        if prev is not None:
+            try:
+                prev.unpersist()
+            except Exception:
+                pass  # session already stopped — nothing to release
+        _CACHE_SLOTS[key] = df.cache()
+        return _CACHE_SLOTS[key]

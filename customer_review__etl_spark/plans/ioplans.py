@@ -85,12 +85,6 @@ def io04_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IO05_BUCKETS = 8
 
-# sf_dir -> (orders_table, lineitem_table): bucketed tables are written
-# ONCE per process per corpus — that is the entire point of bucketing
-# ("the shuffle is paid once, not per query"), and it keeps bench reps /
-# repeated tests from re-shuffling and leaking catalog entries.
-_BUCKETED_CACHE: dict[str, tuple[str, str]] = {}
-
 
 def io05_bucketed_tables(
     spark: SparkSession, sf_dir: str
@@ -104,22 +98,35 @@ def io05_bucketed_tables(
     no Exchange). `bucketBy` requires the table catalog, so the tables
     land as uniquely-named EXTERNAL tables over run-scratch paths: the
     in-memory catalog entry dies with the session while the files are
-    swept like any other scratch."""
-    if sf_dir in _BUCKETED_CACHE:
-        t_orders, t_line = _BUCKETED_CACHE[sf_dir]
-        # Catalog entries are session-scoped while this cache is
-        # process-scoped: a fresh SparkSession (e.g. between test
-        # modules) no longer knows the tables, so fall through and
-        # rebuild rather than raising AnalysisException.
-        if spark.catalog.tableExists(t_orders) and spark.catalog.tableExists(
-            t_line
-        ):
-            return spark.table(t_orders), spark.table(t_line)
-        del _BUCKETED_CACHE[sf_dir]
+    swept like any other scratch.
+
+    The tables are written ONCE per identity of the corpus's tables
+    (tables.derived) — that is the entire point of bucketing, and it
+    keeps bench reps / repeated tests from re-shuffling and leaking
+    catalog entries; a rewritten source table buckets again."""
+    # Catalog entries are session-scoped while the derived value is
+    # process-scoped: a fresh SparkSession (e.g. between test modules)
+    # no longer knows the tables, so rebuild rather than raising
+    # AnalysisException.
+    t_orders, t_line = tables.derived(
+        sf_dir,
+        "io05_bucketed",
+        lambda: _write_bucketed(spark, sf_dir),
+        valid=lambda names: all(spark.catalog.tableExists(t) for t in names),
+    )
+    return spark.table(t_orders), spark.table(t_line)
+
+
+def _write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     out = run_scratch("io05_bucket_")
     tag = uuid.uuid4().hex[:8]
     t_orders, t_line = f"io05_orders_{tag}", f"io05_lineitem_{tag}"
 
+    # Two threads registering tables at once is safe in the in-memory
+    # catalog; a Derby-backed Hive metastore is single-connection.
+    assert (
+        spark.conf.get("spark.sql.catalogImplementation") == "in-memory"
+    ), "io05's concurrent saveAsTable calls assume the in-memory catalog"
     # The two CTAS writes are independent jobs — submit them from two
     # driver threads so the second back-fills the first's task tail
     # (guide §2.6 "overlap independent jobs") instead of running
@@ -151,8 +158,7 @@ def io05_bucketed_tables(
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [pool.submit(_write_orders), pool.submit(_write_lineitem)]:
             f.result()
-    _BUCKETED_CACHE[sf_dir] = (t_orders, t_line)
-    return spark.table(t_orders), spark.table(t_line)
+    return t_orders, t_line
 
 
 def io05_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,12 +22,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tables.load_parallel(spark, sf_dir, "documents")
 
 
-_LDA_MODELS: dict[str, object] = {}
-_LDA_GUARD = __import__("threading").Lock()
-
-
 def lda_model_m(spark: SparkSession, sf_dir: str):
-    """ONE LDA pipeline fit per process per corpus — the
+    """ONE LDA pipeline fit per corpus identity (tables.derived) — the
     _rf_label_prediction move applied to the topic model: ml01 and
     ml02 each re-fitted the identical seed-42 CV→IDF→LDA pipeline
     (the single most expensive part of both queries), exactly as the
@@ -35,15 +31,12 @@ def lda_model_m(spark: SparkSession, sf_dir: str):
     per-doc themes and the top-words table from it. The fitted model
     is a JVM artifact, not a result: every consumer still computes
     its own output from the parquet corpus through model.transform /
-    describeTopics. bench.py pays and times the fit as its own
-    `lda_fit_build` row (the ml_fit_build pattern)."""
-    if sf_dir not in _LDA_MODELS:
-        with _LDA_GUARD:
-            if sf_dir not in _LDA_MODELS:
-                toks = P.with_tokens(_docs(spark, sf_dir))
-                model, _ = P.fit_lda(toks)
-                _LDA_MODELS[sf_dir] = model
-    return _LDA_MODELS[sf_dir]
+    describeTopics."""
+    return tables.derived(
+        sf_dir,
+        "lda_model",
+        lambda: P.fit_lda(P.with_tokens(_docs(spark, sf_dir)))[0],
+    )
 
 
 def ml01_lda_themes(spark: SparkSession, sf_dir: str) -> DataFrame:

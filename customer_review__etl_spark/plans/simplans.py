@@ -39,7 +39,7 @@ from pyspark.sql.window import Window
 from ..functions.vectors import cosine_from_norms, l2_norm
 from ..sources import tables
 from . import QuerySpec
-from .helpers import sql_cc_min_label
+from .helpers import cache_slot, sql_cc_min_label
 
 N_QUERIES = 16   # s01 brute-force query set: vec_id < 16
 TOPK = 5         # s01 neighbors per query
@@ -49,31 +49,8 @@ NEAR_BANDS = 2   # s03: 2 bands × 3 planes
 NEAR_COS = 0.4   # s03 near-pair threshold (matches testdata's top tail)
 
 
-# One cached relation per op, swapped on re-invocation (round-10
-# ADVICE #2): s09/s10 cache their bucketed embedding scan because the
-# plan reads it 3-4 times, but a long-lived session (bench loops,
-# scale-probe reps) would otherwise accumulate one cached relation per
-# call until an external clearCache. Unpersisting the PREVIOUS call's
-# cache bounds storage at one relation per op; a still-held stale
-# DataFrame simply recomputes.
-_CACHE_SLOTS: dict[str, DataFrame] = {}
-# bench builds plans from multiple threads (round-11 ADVICE #1): an
-# unguarded pop/assign pair can leak a cached relation or unpersist one
-# an in-flight concurrent job is reading (correct but slow — Spark
-# recomputes). Mirrors materialized_df's per-kind locking.
+# The depth memo below is shared by concurrent plan builds.
 _CACHE_LOCK = threading.Lock()
-
-
-def _cache_slot(key: str, df: DataFrame) -> DataFrame:
-    with _CACHE_LOCK:
-        prev = _CACHE_SLOTS.pop(key, None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
-        _CACHE_SLOTS[key] = df.cache()
-        return _CACHE_SLOTS[key]
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,7 +186,7 @@ def s03_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     would force an all-pairs nested loop. Only (vec_id, band, bucket)
     triples are shuffled for candidate generation; the 64-dim vectors
     are joined back solely for the per-candidate cosine check."""
-    emb = _cache_slot(
+    emb = cache_slot(
         "s03",
         _emb(spark, sf_dir).select(
             "vec_id",
@@ -401,29 +378,15 @@ def _cascade_effective_depth(
 # a full-corpus job, and s09/s10 are built far more often than their
 # corpus changes — every bench rep, every explain-only plan_audit
 # build, every oracle run in a sweep. Memoize per (op, corpus
-# signature); the signature is the embeddings parquet file listing
-# (name, size, mtime_ns), so a probe that overwrites the same path
-# invalidates naturally. Signature failure (remote path, racing
+# identity); the identity is the source catalog's stat of the
+# embeddings files (tables.identity), so a probe that overwrites the
+# same path invalidates naturally. No identity (remote path, racing
 # writer) falls back to scanning — never to a stale answer.
 _DEPTH_MEMO: dict[tuple, int] = {}
 
 
-def _emb_signature(sf_dir: str) -> tuple | None:
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            return tuple(sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            ))
-        st = os.stat(path)
-        return ((path, st.st_size, st.st_mtime_ns),)
-    except OSError:
-        return None
-
-
 def _memo_depth(op: str, sf_dir: str, knobs: tuple, scan) -> int:
-    sig = _emb_signature(sf_dir)
+    sig = tables.identity(os.path.join(sf_dir, "embeddings.parquet"))
     if sig is None:
         return scan()
     key = (op, sf_dir, knobs, sig)
@@ -612,7 +575,7 @@ def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts of dormant machinery (the r11 bench's one real
     per-query regression)."""
     D = _s09_effective_depth(spark, sf_dir)
-    emb = _cache_slot(
+    emb = cache_slot(
         "s09",
         _emb(spark, sf_dir).select(
             "vec_id",
@@ -1148,7 +1111,7 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, and below the level-1 cap the compiled plan is literally
     s02's."""
     D = _s10_effective_depth(spark, sf_dir)
-    emb = _cache_slot(
+    emb = cache_slot(
         "s10",
         _emb(spark, sf_dir).select(
             "vec_id",

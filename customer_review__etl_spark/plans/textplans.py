@@ -27,6 +27,7 @@ from ..functions.stemmer import stem_tokens
 from ..sources import tables
 from . import QuerySpec
 from .helpers import (
+    cache_slot,
     sql_clean_tokens,
     sql_normalize,
     sql_raw_tokens,
@@ -605,8 +606,9 @@ def t27_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles plus one broadcast join."""
     # cached: the score table feeds BOTH the ranking branch and the
     # final left join — uncached, the whole t15 LM-scoring chain
-    # compiled (and ran) twice per execution (r17, guide §1.2).
-    base = _t15_scores(spark, sf_dir).cache()
+    # compiled (and ran) twice per execution (r17, guide §1.2). The
+    # slot releases the previous call's copy (helpers.cache_slot).
+    base = cache_slot("t27_scores", _t15_scores(spark, sf_dir))
     scored = base.filter(F.col("n_bigrams") > 0).withColumn(
         "bkt", F.floor("mean_bits").cast("long")
     )
@@ -1051,24 +1053,16 @@ def t21_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_round")
 
 
-_BPE_CACHE: dict[str, tuple] = {}
-_BPE_GUARD = __import__("threading").Lock()
-
-
 def bpe_learned_m(spark: SparkSession, sf_dir: str):
-    """ONE BPE training per process per corpus for the APPLY side
-    (t22): the learned merge table is the tokenizer artifact — exact
-    and deterministic (integer counts, count-desc/pair-asc tie-break),
-    so sharing the trained artifact cannot change any result. t21
-    keeps calling _learn_bpe directly: training is the operator it
-    times. bench.py pays the one shared training as its own
-    `bpe_train_build` row when t22 runs first (the ml_fit_build
-    pattern)."""
-    if sf_dir not in _BPE_CACHE:
-        with _BPE_GUARD:
-            if sf_dir not in _BPE_CACHE:
-                _learn_bpe(spark, sf_dir)
-    return _BPE_CACHE[sf_dir]
+    """ONE BPE training per corpus identity for the APPLY side (t22,
+    tables.derived): the learned merge table is the tokenizer artifact
+    — exact and deterministic (integer counts, count-desc/pair-asc
+    tie-break), so sharing the trained artifact cannot change any
+    result. t21 keeps calling _learn_bpe directly: training is the
+    operator it times."""
+    return tables.derived(
+        sf_dir, "bpe_learned", lambda: _learn_bpe(spark, sf_dir)
+    )
 
 
 def _learn_bpe(spark: SparkSession, sf_dir: str):
@@ -1141,7 +1135,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
             ).alias("enc"),
             "wc",
         )
-    _BPE_CACHE[sf_dir] = (learned, enc)
     return learned, enc
 
 

@@ -1,9 +1,22 @@
-"""Typed source registry over the driver's parquet testdata.
+"""Typed source registry over the driver's parquet testdata, with a
+small catalog keyed on input identity.
 
 Mirrors the reference's ingest discipline fix (SURVEY.md §1.3): the
 reference inferred schema at every boundary (pd.read_csv with no dtypes,
 cleaner.py:302) and patched case drift ad hoc; here every table has one
 canonical schema, normalized once at load.
+
+The catalog keys what it holds on the identity of a table's files
+(`identity`): (path, inode, size, mtime_ns) of the file, or the sorted
+stats of every part file when the table is a directory. It holds
+- each table's inferred schema, so `load` reads with an explicit
+  schema instead of paying Spark's one-task footer job on every call;
+- values derived from the tables under one sf_dir (`derived`: scratch
+  landings, bucketed tables, fitted models), rebuilt on the next call
+  after any of those tables is rewritten.
+A path that cannot be stat'ed (a remote object store) has no identity:
+its schema is inferred on every read, and values derived from it are
+kept for the life of the process.
 
 Scale: `spark.read.parquet` is the vectorized columnar scan — Catalyst
 pushes filters and prunes columns into it, so plan code never needs to
@@ -13,8 +26,15 @@ extract.py:62-66).
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from ..session import ensure_confs
 
@@ -32,23 +52,85 @@ TABLE_NAMES = [
 ]
 
 
+def identity(path: str) -> tuple | None:
+    """The stats of a table's files, as sorted (path, inode, size,
+    mtime_ns) tuples: one for a single file, one per data file below a
+    directory (names starting with '_' or '.' are skipped, as Spark
+    skips them). None when the path cannot be stat'ed."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_ino, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for n in names:
+                if not n.startswith(("_", ".")):
+                    f = os.path.join(root, n)
+                    s = os.stat(f)
+                    files.append((f, s.st_ino, s.st_size, s.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+# path -> (identity, inferred schema); a rewrite replaces the entry.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, tuple | None]:
+    """(physical schema, identity) of the parquet table at `path`; the
+    schema is inferred once per identity."""
+    ensure_confs(spark)  # nanosAsLong decides the inferred ts type
+    ident = identity(path)
+    hit = _SCHEMAS.get(path)
+    if ident is not None and hit is not None and hit[0] == ident:
+        return hit[1], ident
+    schema = spark.read.parquet(path).schema
+    if ident is not None:
+        _SCHEMAS[path] = (ident, schema)
+    return schema, ident
+
+
+def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The table's physical schema as the parquet reader sees it
+    (`events.ts` is a long when stored as TIMESTAMP(NANOS))."""
+    return _schema(spark, f"{sf_dir}/{name}.parquet")[0]
+
+
+def _read(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, tuple | None]:
+    path = f"{sf_dir}/{name}.parquet"
+    schema, ident = _schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and "ts" in schema.fieldNames() and isinstance(
+        schema["ts"].dataType, LongType
+    ):
+        df = df.withColumn(
+            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
+        )
+    return df, ident
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with canonical types.
+
+    Reads with the catalog's schema for the table's current files, so
+    a warm call launches no Spark job; a rewritten table is inferred
+    again on its next load.
 
     `events.ts` is stored as parquet TIMESTAMP(NANOS), which Spark's
     reader rejects; with spark.sql.legacy.parquet.nanosAsLong it arrives
     as a long that we convert with exact integer division (float
     division at 1e18 ns magnitudes loses sub-microsecond precision).
-    Result is timestamp_ntz to match the other tables' date columns and
-    the oracle's naive reading.
+    The branch decides on the cached physical type. Result is
+    timestamp_ntz to match the other tables' date columns and the
+    oracle's naive reading.
     """
-    ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
-        df = df.withColumn(
-            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
-        )
-    return df
+    return _read(spark, sf_dir, name)[0]
 
 
 def _size_bytes(conf_val: str) -> int:
@@ -70,21 +152,19 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     split-chunks — every real-scale input — this is a no-op: no shuffle
     is ever added to a big scan.
 
-    The smallness probe is an O(1) file-size stat (local paths; remote
-    object stores skip the stat and the repartition — at that scale
-    inputs are multi-file anyway), never a plan/RDD materialization.
+    The smallness probe is the catalog's stat of the table's files
+    (local paths; remote object stores have no identity and skip the
+    repartition — at that scale inputs are multi-file anyway), never a
+    plan/RDD materialization.
     """
-    import os
-
-    df = load(spark, sf_dir, name)
+    df, ident = _read(spark, sf_dir, name)
+    if ident is None:
+        return df
     want = spark.sparkContext.defaultParallelism
     max_pb = _size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    try:
-        n_splits = os.path.getsize(f"{sf_dir}/{name}.parquet") // max_pb + 1
-    except OSError:
-        return df
+    n_splits = sum(f[2] for f in ident) // max_pb + 1
     if n_splits < want:
         df = df.repartition(want)
     return df
@@ -98,3 +178,36 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() entry points."""
     for name, df in load_all(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
+
+
+# (sf_dir, kind) -> (snapshot of sf_dir's tables, value)
+_DERIVED: dict[tuple, tuple[tuple, Any]] = {}
+_DERIVED_LOCKS: dict[tuple, threading.Lock] = {}
+_DERIVED_GUARD = threading.Lock()
+
+
+def derived(
+    sf_dir: str,
+    kind: Any,
+    build: Callable[[], Any],
+    valid: Callable[[Any], bool] | None = None,
+) -> Any:
+    """`build()` once per (sf_dir, kind) and identity of the tables
+    under sf_dir: a rewrite of any of them makes the next call build
+    again, so nothing derived from old files is served. `valid` can
+    reject a kept value whose backing lives outside the files (a
+    catalog table in a stopped session).
+
+    One lock per key, not a global one: unrelated kinds build
+    concurrently from separate threads (a builder may itself ask for
+    another kind), while one kind never builds twice."""
+    key = (sf_dir, kind)
+    with _DERIVED_GUARD:
+        lock = _DERIVED_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
+        hit = _DERIVED.get(key)
+        stale = hit is None or hit[0] != snap
+        if stale or (valid is not None and not valid(hit[1])):
+            hit = _DERIVED[key] = (snap, build())
+        return hit[1]

@@ -28,9 +28,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from ..plans.helpers import cents
 from ..session import ensure_confs
+from ..sources import tables
 
 # Event-time schema of events.parquet, parameterized on the physical
 # ts type: driver testdata has stored ts as TIMESTAMP(NANOS) (arriving
@@ -92,14 +94,13 @@ def stream_events(
     import os
 
     path = f"{sf_dir}/events.parquet"
-    # Probe the physical schema with a one-footer batch read (O(1), no
-    # data scan) and branch exactly like the batch loader: nanos-long
+    # Branch on the physical ts type exactly like the batch loader,
+    # from the same catalog schema (no inferring read here): nanos-long
     # files stream as BIGINT and convert; timestamp files stream as
     # TIMESTAMP pass-through. tests/test_source_parity.py pins the two
     # paths to identical ts values for whichever layout is present.
-    ts_is_long = dict(spark.read.parquet(path).dtypes).get("ts") in (
-        "bigint",
-        "long",
+    ts_is_long = isinstance(
+        tables.schema(spark, sf_dir, "events")["ts"].dataType, LongType
     )
     schema = _SCHEMA_TEMPLATE.format(
         ts_type="BIGINT" if ts_is_long else "TIMESTAMP"

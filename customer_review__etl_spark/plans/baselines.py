@@ -18,8 +18,8 @@ remains executable:
   pins s09 ⊆ s03 with a recall floor; tests/test_round10_ops.py pins
   s10 == s02 below the caps; tests/test_differential_edges.py runs both
   against their DuckDB twins on the adversarial edge corpus);
-- tools/scale_probe.py keeps probing them so the 472× conviction stays
-  a measured, reproducible number rather than repo lore.
+- SCALING.md records the scale-probe measurements behind the 472×
+  conviction (the probe script itself is in git history).
 
 Reference scope note: the reference repo has no ANN at all (its
 similarity surface is sklearn TF-IDF vectorization, cleaner.py:176,252);

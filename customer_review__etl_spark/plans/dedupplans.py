@@ -30,8 +30,6 @@ pipelines per the north star in BASELINE.json.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -307,7 +305,7 @@ def d02_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # check is an order-insensitive value hash, and a global sort of
     # the result costs a range exchange whose boundary sampling
     # re-executes the expensive verify stage a second time. Applies to
-    # every query in this family (see OPTIMIZATION_r16.md).
+    # every query in this family.
     return _verify_jaccard(sh, cand, "doc_a", "doc_b")
 
 
@@ -446,11 +444,11 @@ def d03_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-# Max docs per (lang, lbucket, gram) usable as candidates. Corpus-tunable
-# via env (set before import; the oracle SQL snapshots the same value):
-# larger corpora/blocks want a larger cap for recall, at quadratic
-# candidate cost per gram — fan-out per block per gram is ≤ C(cap, 2).
-NGRAM_DF_CAP = int(os.environ.get("SPARK_GRAFT_NGRAM_DF_CAP", "64"))
+# Max docs per (lang, lbucket, gram) usable as candidates; the oracle SQL
+# uses the same value. A larger cap raises recall on larger corpora and
+# blocks, at quadratic candidate cost per gram: fan-out per block per
+# gram is ≤ C(cap, 2).
+NGRAM_DF_CAP = 64
 
 
 def _d04_gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,8 +652,7 @@ def d04_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard ≥ 0.4 that shares ONLY grams commoner than NGRAM_DF_CAP in
     its block is never considered — the cap trades unbounded worst-case
     recall for bounded candidate fan-out. In practice near-dups share
-    rare grams (typos, names, numbers); tune the cap per corpus via
-    SPARK_GRAFT_NGRAM_DF_CAP. MEASURED (round 7): recall vs the
+    rare grams (typos, names, numbers). MEASURED (round 7): recall vs the
     uncapped candidate join at cap=64 on the sf0.01 corpus is 1.0
     (4579/4579 pairs at jaccard ≥ 0.4);
     tests/test_dedup.py::test_d04_cap_recall_floor_on_corpus pins a
@@ -735,42 +732,6 @@ def _covered_docs(grams: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     )
 
 
-def _d10_level1(spark, sf_dir, arrays):
-    """d10's level-1 stage: (cand1, uncovered, elig1) — d04's candidate
-    pairs plus the docs with NO [2, cap]-df gram (their whole candidate
-    potential was lost to the cap), re-derivable for the probe's
-    instrumentation counts as well as the plan itself. elig1 (the
-    cached eligible-group arrays, buffer-bounded via the two-pass
-    _capped_gram_groups) is returned so callers that finish with it —
-    d10_level2_stats — can unpersist it (r15 ADVICE #4)."""
-    g1 = arrays.select(
-        "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
-    )
-    elig1 = _capped_gram_groups(g1, NGRAM_DF_CAP).cache()
-    cand1 = _expand_group_pairs(elig1)
-    covered = elig1.select(F.explode("ds").alias("doc_id")).distinct()
-    L = D10_L2_LEN
-    # anti-join FIRST, normalize after (r16): projecting the normalize
-    # below the join ran the whole text-normalization chain over the
-    # full corpus a second time (the arrays pass already normalized it
-    # once) only to discard every covered row; deferring it to after
-    # the anti-join normalizes ONLY the uncovered docs. Filter and
-    # anti-join commute (both key on doc_id / its own row).
-    uncovered = (
-        _docs_par(spark, sf_dir)
-        .select("doc_id", "lang", "text")
-        .join(covered, "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            "lang",
-            T.normalize_text(F.col("text")).alias("norm"),
-        )
-        .withColumn("lbucket", F.floor(F.length("norm") / 100))
-        .filter(F.length("norm") >= L)
-    )
-    return cand1, uncovered, elig1
-
-
 def _d10_cand2(uncovered):
     """d10's level-2 recovery candidates: (lang, lbucket, 6-gram)
     groups over the uncovered stream under the same DF cap."""
@@ -789,28 +750,6 @@ def _d10_cand2(uncovered):
         ).alias("g"),
     )
     return _expand_group_pairs(_capped_gram_groups(g2, NGRAM_DF_CAP))
-
-
-def d10_level2_stats(spark: SparkSession, sf_dir: str) -> dict:
-    """Probe instrumentation (r15): how much of the corpus fell
-    through to d10's recovery pass, and how many candidates it emitted
-    — the counts behind d10's wall ratio (the level-2 stream grows
-    with SATURATION, not with corpus size per se)."""
-    arrays = _d04_gram_arrays(spark, sf_dir).cache()
-    cand1, uncovered, elig1 = _d10_level1(spark, sf_dir, arrays)
-    try:
-        return {
-            "uncovered_docs": uncovered.count(),
-            "cands_l1": cand1.distinct().count(),
-            "cands_l2": _d10_cand2(uncovered).distinct().count(),
-        }
-    finally:
-        # probe sessions run this helper over base+repl+org corpora
-        # back-to-back — without the unpersist each run would pin its
-        # own copy of the gram arrays in executor storage for the rest
-        # of the process (r15 ADVICE #4)
-        elig1.unpersist()
-        arrays.unpersist()
 
 
 def d10_adaptive_block_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,27 +934,8 @@ def _d07_elig_groups(arrays: DataFrame) -> DataFrame:
 def _d07_candidates(arrays: DataFrame) -> DataFrame:
     """d07's blocked candidate pair set: (lang, rare gram) groups
     expanded to C(n,2) ordered pairs JVM-side, capped at NGRAM_DF_CAP
-    docs per gram. Split out (r15) so the scale probe can count
-    candidate volumes for the merge-pinned verify shape directly."""
+    docs per gram."""
     return _expand_group_pairs(_d07_elig_groups(arrays)).distinct()
-
-
-def d04_candidates_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe instrumentation (r15, r14 VERDICT ask #8): d04's banded
-    candidate pair set BEFORE verify — the row count that must stay
-    ~linear in the corpus for the merge-pinned gram-array verify join
-    to stay shuffle-bounded."""
-    arrays = _d04_gram_arrays(spark, sf_dir)
-    grams = arrays.select(
-        "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
-    )
-    return _d04_candidates(grams, NGRAM_DF_CAP)
-
-
-def d07_candidates_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe instrumentation (r15): d07's blocked candidate pair set
-    BEFORE verify (see d04_candidates_df)."""
-    return _d07_candidates(_d04_gram_arrays(spark, sf_dir))
 
 
 def d07_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1093,31 +1013,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _d11_level1(spark, sf_dir, arrays):
-    """d11's level-1 stage: (cand1, uncovered, elig1) — d07's
-    candidate pairs plus the docs with NO [2, cap]-df (lang, 3-gram)
-    group membership, i.e. the docs whose whole containment-candidate
-    potential was lost to the DF cap. elig1 (cached, buffer-bounded
-    via the two-pass _capped_gram_groups) is returned so callers that
-    finish with it — d11_level2_stats — can unpersist it."""
-    elig1 = _d07_elig_groups(arrays).cache()
-    cand1 = _expand_group_pairs(elig1)
-    covered = elig1.select(F.explode("ds").alias("doc_id")).distinct()
-    # anti-join before the normalize, as in _d10_level1 (r16)
-    uncovered = (
-        _docs_par(spark, sf_dir)
-        .select("doc_id", "lang", "text")
-        .join(covered, "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            "lang",
-            T.normalize_text(F.col("text")).alias("norm"),
-        )
-        .filter(F.length("norm") >= D10_L2_LEN)
-    )
-    return cand1, uncovered, elig1
-
-
 def _d11_cand2(uncovered):
     """d11's level-2 recovery candidates: (lang, 6-gram) groups over
     the uncovered stream under the same DF cap — still NO length
@@ -1139,24 +1034,6 @@ def _d11_cand2(uncovered):
     return _expand_group_pairs(
         _capped_gram_groups(g2, NGRAM_DF_CAP, keys=("lang", "g"))
     )
-
-
-def d11_level2_stats(spark: SparkSession, sf_dir: str) -> dict:
-    """Probe instrumentation (r16): how much of the corpus fell
-    through to d11's containment recovery pass and how many candidates
-    it emitted — the counts behind the saturation transition (the
-    level-2 stream grows with SATURATION, not corpus size per se)."""
-    arrays = _d04_gram_arrays(spark, sf_dir).cache()
-    cand1, uncovered, elig1 = _d11_level1(spark, sf_dir, arrays)
-    try:
-        return {
-            "uncovered_docs": uncovered.count(),
-            "cands_l1": cand1.distinct().count(),
-            "cands_l2": _d11_cand2(uncovered).distinct().count(),
-        }
-    finally:
-        elig1.unpersist()
-        arrays.unpersist()
 
 
 def d11_adaptive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1288,8 +1165,7 @@ ORDER BY doc_a, doc_b
 
 def d02_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized d02 MinHash near-dup pair set — one mining pass
-    per process per corpus, shared by d05 + d06 (and timed as its own
-    scratch_build intermediate in bench.py)."""
+    per process per corpus, shared by d05 + d06."""
     return materialized_df(
         spark, sf_dir, "d02", d02_minhash_near_dup, ["doc_a", "doc_b"]
     )

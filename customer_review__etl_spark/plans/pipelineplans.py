@@ -132,7 +132,7 @@ def pl01_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Trailing presentation sorts removed across the registry in r16:
     # the driver's correctness hash is order-insensitive and a global
     # sort of the result adds a range exchange whose boundary sampling
-    # re-executes the final stage (see OPTIMIZATION_r16.md).
+    # re-executes the final stage.
     return clean.select(
         "doc_id", "lang", "n_tokens", split.alias("split")
     )
@@ -612,21 +612,6 @@ def t25_keep_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialized_df(spark, sf_dir, "t25_keep", _build, ["doc_id"])
 
 
-def _pin_id(df: DataFrame) -> DataFrame:
-    """The r13 stage-1–4 merge pin (54cca5a), as a measurement valve:
-    SPARK_GRAFT_UNPIN_RECIPE=1 reverts the recipe's id join sides to
-    estimate-driven build choices so the pin's cost can be A/B'd on
-    ONE host (round-13 VERDICT ask #3 — the r13/r12 cross-round delta
-    confounds pin cost with ~1.2× ambient host drift). Never set in
-    normal runs: the pin exists because sf0.01 estimates flipped a
-    corpus-with-text broadcast (the dc03 class)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_UNPIN_RECIPE", "") == "1":
-        return df
-    return df.hint("merge")
-
-
 def _pl04_mixed(
     spark: SparkSession, sf_dir: str, unified: bool = False
 ) -> DataFrame:
@@ -660,23 +645,18 @@ def _pl04_mixed(
     dc1 = dc01_ids_m(spark, sf_dir)
     dc3 = dc03_ids_m(spark, sf_dir)
     gate = t25_keep_ids_m(spark, sf_dir)
-    # Every join side here grows with the corpus (survivor ids, gate
-    # ids, contamination flags), and the text-carrying stream must
-    # never become a broadcast build side: at sf0.01 Catalyst's
-    # estimates flipped exactly that — the round-13 pinned wide-audit
-    # caught a BroadcastExchange of (doc_id, lang, text) that the
-    # round-12 blanket prepack exemption had hidden (the dc03 class:
-    # estimate-driven build choices are not stable across scales).
-    # hint("merge") on each id side pins every stage-1-4 join to SMJ
-    # on doc_id; only the bounded rates table below is broadcast.
+    # hint("merge") pins every stage-1-4 join to SMJ on doc_id: each id
+    # side grows with the corpus, and at sf0.01 Catalyst's estimates
+    # broadcast the corpus with its text, (doc_id, lang, text), as a
+    # build side. Only the bounded rates table below is broadcast.
     clean = (
         tables.load(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")
         .filter(F.col("doc_id") % DECON_EVAL_MOD != 0)
-        .join(_pin_id(surv), "doc_id")
-        .join(_pin_id(gate), "doc_id")
-        .join(_pin_id(dc1), "doc_id", "left_anti")
-        .join(_pin_id(dc3), "doc_id", "left_anti")
+        .join(surv.hint("merge"), "doc_id")
+        .join(gate.hint("merge"), "doc_id")
+        .join(dc1.hint("merge"), "doc_id", "left_anti")
+        .join(dc3.hint("merge"), "doc_id", "left_anti")
     )
     # p14's mix device over the post-gate corpus: uniform-language
     # targets, content-addressed membership (16-bit md5 fraction)

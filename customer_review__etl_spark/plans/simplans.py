@@ -376,7 +376,7 @@ def _cascade_effective_depth(
 
 # Effective-depth memo (round-12 ADVICE #2): the occupancy pre-scan is
 # a full-corpus job, and s09/s10 are built far more often than their
-# corpus changes — every bench rep, every explain-only plan_audit
+# corpus changes — every benchmark pass, every explain-only plan_audit
 # build, every oracle run in a sweep. Memoize per (op, corpus
 # identity); the identity is the source catalog's stat of the
 # embeddings files (tables.identity), so a probe that overwrites the
@@ -1085,9 +1085,9 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s02's sign-LSH ANN with OCCUPANCY-ADAPTIVE buckets — the s09
     construction applied to the ANN (directed top-k) shape, closing the
     round-9 probe's conviction of s02 (fixed 64 buckets → per-bucket
-    occupancy grows with the corpus → 472× wall at 30×,
-    SCALE_PROBE_30x.json): any bucket path whose occupancy exceeds
-    S10_BUCKET_CAP splits 8 ways on that level's planes (level lv →
+    occupancy grows with the corpus → 472× wall at 30×, SCALING.md):
+    any bucket path whose occupancy exceeds S10_BUCKET_CAP splits 8
+    ways on that level's planes (level lv →
     planes 3·lv+3 .. 3·lv+5, i.e. 6–8 then 9–11), and QUERIES in
     refined paths multiprobe their own + the 3 hamming-1 sub-keys per
     level (neighbors stay home-keyed: the q→n candidate edge is

@@ -66,7 +66,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
     """Build a local session shaped like the target deployment.
 
-    Tests and bench.py use this; the driver supplies its own session to
+    Tests and perfbench use this; the driver supplies its own session to
     `__spark_entry__` (then `ensure_confs` runs on it).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -87,19 +87,16 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
         # (measured 3-6× on scan-heavy queries). A 100 TB deployment
         # reads many ≥128 MB files and should unset this (default 128m
         # keeps task count = file-chunk count there).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # FAIR job scheduling: bench.py's scratch warm-up (and any
-        # caller building independent intermediates from threads) runs
+        # FAIR job scheduling: io05's two CTAS writes and landings built
+        # from separate threads (materialized_df's per-kind locks) run
         # concurrent jobs. NOTE (r9 ADVICE #2): FAIR round-robins
         # BETWEEN pools; intra-pool order in the default pool is FIFO,
         # which still lets queued jobs grab slots as the head job's
         # stages drain. Callers that want true round-robin set a
-        # per-thread spark.scheduler.pool (bench.py's warm threads do;
-        # unnamed pools are created on demand with default weight).
+        # per-thread spark.scheduler.pool (unnamed pools are created on
+        # demand with default weight).
         # With a single job at a time this is indistinguishable from
         # FIFO.
         .config("spark.scheduler.mode", "FAIR")

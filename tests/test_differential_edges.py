@@ -766,7 +766,7 @@ TPCH_ONLY_QUERIES = [
     # (bloom probe + semi join both drop it, like the oracle's IN);
     # the tiny dim set exercises a near-empty bloom
     "j13_bloom_semi_join",
-    # round-8 coverage sweep (tools/coverage_report.py never_edge list):
+    # round-8 coverage sweep (entries the edge corpus had never run):
     # md5 sampling over NULL/dup keys, the two-pass exact median and the
     # observe() accounting on the adversarial lineitem, ORC roundtrip
     # of the edge part table

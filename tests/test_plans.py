@@ -60,101 +60,6 @@ def test_registry_head_covers_every_family():
     assert rows_only_in_head <= ROWS_ONLY_HEAD_WHITELIST
 
 
-def test_coverage_tripwire_reports():
-    """Cumulative-coverage tripwire (round-7 VERDICT ask #5, escalated
-    per round-8 ask #7): every registry query should have a driver row
-    within the last 2 rounds OR be freshly added, and a bench timing
-    row somewhere — those emit warnings so a scheduling backlog is
-    loud in every pytest run. The HARD gate: a query whose driver row
-    is ≥ coverage_report.HARD_STALE rounds old and that is NOT
-    scheduled in the current PRIORITY head FAILS — rotating stale
-    veterans back in is no longer optional once they age out."""
-    import sys
-    import warnings
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import coverage_report
-
-    rep = coverage_report.report()
-    for key in ("never_driver_sampled", "stale_driver_ge2_rounds",
-                "never_benched"):
-        vals = rep[key]
-        if vals:
-            warnings.warn(
-                f"coverage tripwire: {len(vals)} queries {key}: "
-                f"{' '.join(vals[:20])}{' …' if len(vals) > 20 else ''}",
-                stacklevel=1,
-            )
-    # hard floor: the tool itself must see the whole registry
-    assert rep["registry_total"] >= 185
-    assert rep["overdue_hard"] == [], (
-        f"{len(rep['overdue_hard'])} queries are ≥{coverage_report.HARD_STALE}"
-        f" driver-rounds stale and not scheduled in the PRIORITY head — "
-        f"rotate them in (oldest-first) before doing anything else: "
-        f"{' '.join(rep['overdue_hard'])}"
-    )
-
-
-def test_latest_driver_artifacts_are_git_tracked():
-    """Round-13 VERDICT ask #2: the per-round driver artifacts
-    (CORRECTNESS_r{N}.json / BENCH_r{N}.json and the bench history
-    files they update) were left uncommitted at review time for five
-    rounds running. This makes the round-end checklist executable: if
-    the newest artifact on disk is not known to git, pytest fails
-    loudly until it is committed.
-
-    Round-14 VERDICT timing fix, re-based on ROUND NUMBERS (r15
-    ADVICE #2 — the earlier mtime-vs-HEAD exemption was vacuous on a
-    fresh clone, where every mtime resets newer than HEAD, and a bare
-    `touch` silenced it): the driver writes the NEW round's artifacts
-    AFTER the builder's last commit, so exactly the artifacts whose
-    round number exceeds the newest GIT-TRACKED round are legitimately
-    uncommitted. Any untracked artifact at or below the newest tracked
-    round was skipped by a past round-end checklist and fails loudly;
-    no filesystem timestamp can forge a round number."""
-    import re
-    import subprocess
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    tracked = set(
-        subprocess.run(
-            ["git", "ls-files"], cwd=root, capture_output=True, text=True
-        ).stdout.split()
-    )
-    if not tracked:  # not a git checkout (e.g. exported tree) — nothing to gate
-        return
-
-    def round_of(name: str) -> int:
-        return int(re.search(r"r(\d+)", name).group(1))
-
-    art_re = re.compile(r"(?:CORRECTNESS|BENCH)_r\d+\.json$")
-    max_tracked = max(
-        (round_of(n) for n in tracked if art_re.fullmatch(n)), default=0
-    )
-    new_round_on_disk = False
-    for pattern in ("CORRECTNESS_r*.json", "BENCH_r*.json"):
-        for p in sorted(root.glob(pattern), key=lambda p: round_of(p.name)):
-            if p.name in tracked:
-                continue
-            if round_of(p.name) > max_tracked:
-                new_round_on_disk = True  # the driver's fresh round
-                continue
-            raise AssertionError(
-                f"{p.name} exists, belongs to an already-committed round "
-                f"(≤ r{max_tracked}), and is not git-tracked — commit the "
-                f"driver artifacts (round-end checklist)"
-            )
-    # The round-less history files are rewritten by the same driver
-    # pass that writes the new round's artifacts — exempt them exactly
-    # when such a fresh round is on disk, require them tracked otherwise.
-    for hist in ("bench_canary_history.json", "bench_full.json"):
-        hp = root / hist
-        if hp.exists() and not new_round_on_disk:
-            assert hist in tracked, f"{hist} exists but is not git-tracked"
-
-
 def test_dimension_join_is_broadcast(spark):
     plan = _plan(relational.j01_broadcast_theme_label(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
@@ -392,160 +297,3 @@ def test_q16_anti_join_and_early_distinct(spark):
     plan = _plan(relational.q16_parts_supplier(spark, SF_DIR))
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_rotation_planner_respects_head_gates():
-    """tools/rotation_plan.py proposes next round's head; whatever it
-    proposes must itself satisfy the head gates (slot count, family
-    coverage, rows-only whitelist) — otherwise the tool would plan a
-    head that this file's own tests reject."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import rotation_plan
-
-    from customer_review__etl_spark.plans import all_queries
-
-    from customer_review__etl_spark.plans import (
-        HEAD_FAMILIES,
-        ROWS_ONLY_HEAD_WHITELIST,
-    )
-
-    specs = all_queries()
-    p = rotation_plan.propose(50)
-    head = p["head"]
-    assert len(head) == 50 and len(set(head)) == 50
-    assert all(n in specs for n in head)
-    for fam in HEAD_FAMILIES:
-        assert any(n.startswith(fam) for n in head), f"family {fam} missing"
-    rows_only = {n for n in head if specs[n].oracle is None}
-    assert rows_only <= ROWS_ONLY_HEAD_WHITELIST
-    # the plan must be feasible: nothing already hard-stale at the
-    # proposed round may be left out of its head
-    assert p["infeasible_already_hard"] == []
-    # and it must not silently return a head the family gate rejects
-    # (r14 ADVICE #4: uncovered families are surfaced, not swallowed)
-    assert p["uncovered_families"] == []
-
-
-def test_jobs_canary_verdict_rules():
-    """The pure decision core of the jobs canary (r14 VERDICT ask #6 +
-    r14 ADVICE #3): (a) a LONE clean sample must not become the
-    baseline — the 3-of-5 agreement path keeps deciding until the
-    clean history holds ≥3 samples; (b) the bootstrap absolute floor
-    scales by ceil(32/cores) task waves so a smaller host can still
-    arm the relative check."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from bench import _jobs_canary_verdict
-
-    # (a) one clean sample + four stable flagged samples: the
-    # agreement median (5.0) must be the basis, not the lone 3.0
-    hist = (
-        [{"jobs_sec": 3.0}]
-        + [{"jobs_sec": 5.0 + i / 10, "scheduler_overhead_warning": True}
-           for i in range(4)]
-    )
-    warn, med, basis, _ = _jobs_canary_verdict(hist, 5.2, cores=32)
-    assert basis == "stable_flagged_history"
-    assert med is not None and 5.0 <= med <= 5.3
-    assert not warn
-    # with the lone 3.0 as baseline the same 5.2 s reading would have
-    # warned (5.2 > 1.2*3.0) — the agreement rule is what clears it
-    warn_lone, med_lone, basis_lone, _ = _jobs_canary_verdict(
-        [{"jobs_sec": 3.0}], 5.2, cores=32
-    )
-    assert basis_lone is None  # 1 clean sample < 3 → no clean basis
-
-    # ≥3 clean samples: clean history takes over
-    hist3 = [{"jobs_sec": s} for s in (4.8, 5.0, 5.1)]
-    warn, med, basis, _ = _jobs_canary_verdict(hist3, 5.0, cores=32)
-    assert basis == "clean_history" and med == 5.0 and not warn
-    warn, _, _, _ = _jobs_canary_verdict(hist3, 6.5, cores=32)
-    assert warn  # 6.5 > 1.2 * 5.0
-
-    # (b) empty history → bootstrap floor, scaled by task waves:
-    # 32 cores → 1 wave → 2 s floor; 8 cores → 4 waves → 8 s floor
-    warn32, _, basis32, extra32 = _jobs_canary_verdict([], 5.0, cores=32)
-    assert basis32 is None and warn32
-    assert extra32["canary_jobs_bootstrap_floor"] == 2.0
-    warn8, _, _, extra8 = _jobs_canary_verdict([], 5.0, cores=8)
-    assert extra8["canary_jobs_bootstrap_floor"] == 8.0
-    assert not warn8  # the same 5 s reading is legitimate on 8 cores
-
-
-def test_io_canary_verdict_rules():
-    """The IO canary's decision core (r15): clean-history median only
-    (flagged samples never ratchet the baseline), 1.5× threshold, no
-    bootstrap floor (first sample seeds unflagged)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from bench import _io_canary_verdict
-
-    warn, med = _io_canary_verdict([], 5.0)
-    assert not warn and med is None  # first sample seeds, never flags
-    hist = [{"io_sec": 0.3}, {"io_sec": 0.25}, {"io_sec": 0.35},
-            {"io_sec": 3.0, "io_throughput_warning": True}]
-    warn, med = _io_canary_verdict(hist, 0.4, probe_v=1)
-    assert med == 0.3 and not warn  # flagged 3.0 excluded from median
-    warn, med = _io_canary_verdict(hist, 0.46, probe_v=1)
-    assert warn  # 0.46 > 1.5 * 0.3
-    # version isolation (r15 ADVICE #1 fix): v1 cached-read samples
-    # (no io_probe_v field) never feed a v2 disk-read verdict — the
-    # first v2 sample re-seeds its own baseline unflagged
-    warn, med = _io_canary_verdict(hist, 5.0, probe_v=2)
-    assert not warn and med is None
-    hist2 = hist + [{"io_sec": 0.6, "io_probe_v": 2}]
-    warn, med = _io_canary_verdict(hist2, 1.2, probe_v=2)
-    assert warn and med == 0.6  # v2 baseline is the v2 sample only
-
-
-def test_scale_probe_merge_keeps_rows_co_measured():
-    """merge_probe_queries (r13 ADVICE #1, unit-tested per r14 VERDICT
-    ask #6): when a session refreshes 'base' but not a variant's
-    big/ratio pair, the stale pair is dropped — a surviving ratio must
-    always equal big/base of the same row; fields the session did not
-    touch (instrumentation, the other variant measured in-session)
-    survive."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent
-                           / "tools"))
-    from scale_probe import merge_probe_queries
-
-    prior = {
-        "q": {
-            "base": 1.0, "cold_base": 2.0,
-            "big_repl": 3.0, "ratio_repl": 3.0, "cold_repl": 4.0,
-            "big_org": 2.0, "ratio_org": 2.0, "cold_org": 3.0,
-            "ratio_org_cold": 1.5, "anchors_base": 100,
-        },
-        "untouched": {"base": 9.0, "big_org": 18.0, "ratio_org": 2.0},
-    }
-    # org-only re-run: fresh base + org pair, no repl measurements
-    fresh = {"q": {"base": 1.5, "cold_base": 2.5,
-                   "big_org": 3.3, "ratio_org": 2.2, "cold_org": 3.5,
-                   "ratio_org_cold": 1.4}}
-    m = merge_probe_queries(prior, fresh)
-    row = m["q"]
-    # repl pair measured against the OLD base is gone entirely
-    for k in ("big_repl", "ratio_repl", "cold_repl"):
-        assert k not in row, k
-    # fresh org pair is internally co-measured with the fresh base
-    assert row["base"] == 1.5 and row["ratio_org"] == 2.2
-    assert abs(row["big_org"] / row["base"] - row["ratio_org"]) < 1e-9
-    # instrumentation fields the session did not touch survive
-    assert row["anchors_base"] == 100
-    # rows the session did not visit are untouched
-    assert m["untouched"] == prior["untouched"]
-    # instrumentation-only refresh (walls off → no 'base' in fresh):
-    # prior pairs survive, still co-measured among themselves
-    m2 = merge_probe_queries(prior, {"q": {"anchors_base": 120}})
-    assert m2["q"]["ratio_repl"] == 3.0 and m2["q"]["base"] == 1.0
-    assert m2["q"]["anchors_base"] == 120

@@ -251,7 +251,8 @@ PINNED_PLAN: dict[str, str] = {
                                "(measured r14)",
     # s02/s03 demoted to plans/baselines.py r15 — they no longer
     # appear in queries(), but keep the rationale rows so auditing the
-    # baseline specs (scale_probe still runs them) stays documented
+    # baseline specs (SCALING.md's scale probes measured them) stays
+    # documented
     "s02_ann_lsh": "merge-pinned corpus embedding side "
                           "(wide-audit r12; baseline, demoted r15)",
     "s03_embedding_neardup": "merge-pinned corpus embedding side "

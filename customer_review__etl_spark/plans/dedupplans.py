@@ -70,8 +70,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # - TOKEN-STREAM intermediates (the per-doc shingle stream feeding
 #   d02+dc02) — the CPU-heavy normalize/tokenize/explode pass,
 #   recomputed by every consumer before round 6 (round-5 VERDICT
-#   "Next round" #5). d04's gram arrays deliberately stay a per-call
-#   .cache() — they have no second consumer (see d04_ngram_jaccard).
+#   "Next round" #5). The per-doc gram arrays are landed the same way
+#   since r17: d04, d07, d10 and d11 all read them (gram_arrays_m).
 # Each entry lands in run-scratch parquet (the run_append pattern — the
 # dir outlives the query, swept by a later process), and every consumer
 # reads the lazy file scan. At cluster scale this is the standard
@@ -390,7 +390,7 @@ def d03_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition, which Spark can only execute as an all-pairs nested
     loop. Each chunk bucket is a small clique; the pair space is the
     union of bucket cliques, shuffled on ≤16-byte keys."""
-    ch = _simhash_chunks(spark, sf_dir).cache()
+    ch = cache_slot("d03_chunks", _simhash_chunks(spark, sf_dir))
     bands = ch.select(
         "doc_id",
         F.explode(
@@ -504,8 +504,9 @@ def gram_arrays_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     now derive candidates/coverage from the same table, so a bench
     pass re-ran the normalize→codepoint-pack→array_distinct build
     8-10× (4 queries × 2 reps + the d04/d07 pair landings). One
-    landing, consumers read the scan (and .cache() it for their own
-    multi-branch use)."""
+    landing; consumers read the scan and cache it for their own
+    multi-branch use in one shared slot ("gram_arrays"), since they
+    all cache the same plan."""
     return materialized_df(
         spark, sf_dir, "gram_arrays", _d04_gram_arrays,
         ["doc_id", "lang", "lbucket", "grams", "n"],
@@ -677,7 +678,7 @@ def d04_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nondeterministic `_pd_barrier` column blocks that pushdown
     (PushPredicateThroughNonJoin requires an all-deterministic
     projection), halving intersect work. Same rows either way."""
-    arrays = gram_arrays_m(spark, sf_dir).cache()
+    arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
     grams = arrays.select(
         "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
     )
@@ -791,7 +792,7 @@ def d10_adaptive_block_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates engine-dependent); the stream they key is
     |uncovered| × doc-length, not corpus-sized. The verify join reads
     the same merge-pinned gram-array sides as d04 (r14 d08 catch)."""
-    arrays = gram_arrays_m(spark, sf_dir).cache()
+    arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
     g1 = arrays.select(
         "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
     )
@@ -961,7 +962,7 @@ def d07_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CPU-heavy verify into straggler tasks (the round-7 lesson);
     `_pd_barrier` keeps Catalyst from double-evaluating the
     containment filter inside the join."""
-    arrays = gram_arrays_m(spark, sf_dir).cache()
+    arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
     inter = _pair_gram_intersections(spark, arrays, _d07_candidates(arrays))
     return (
         inter.select(
@@ -1070,7 +1071,7 @@ def d11_adaptive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     count→filter→semi-join→collect_list shape; per-group fan-out is
     capped at C(cap, 2); the verify join is the shared merge-pinned
     gram-array shape (_pair_gram_intersections)."""
-    arrays = gram_arrays_m(spark, sf_dir).cache()
+    arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
     g1 = arrays.select("doc_id", "lang", F.explode("grams").alias("g"))
     covered = _covered_docs(g1, ("lang", "g"))
     uncovered = (
@@ -1638,7 +1639,8 @@ def dc01_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached, so eval and train derivations share the scan."""
     toks = T.raw_tokens(F.lower(F.col("text")))
     w = DECON_NGRAM
-    base = (
+    base = cache_slot(
+        "dc01_grams",
         _docs_par(spark, sf_dir)
         .select("doc_id", toks.alias("toks"))
         .select(
@@ -1650,8 +1652,7 @@ def dc01_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"i -> concat_ws(' ', slice(toks, i, {w})))) "
                 f"ELSE CAST(array() AS array<string>) END"
             ).alias("grams"),
-        )
-        .cache()
+        ),
     )
     eval_grams = (
         base.filter("is_eval").select(F.explode("grams").alias("g")).distinct()

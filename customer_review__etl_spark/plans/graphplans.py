@@ -36,7 +36,7 @@ from pyspark.sql.window import Window
 
 from ..sources import tables
 from . import QuerySpec
-from .helpers import shuffle_width, sql_cc_min_label
+from .helpers import cache_slot, shuffle_width, sql_cc_min_label
 
 PR_SCALE = 1_000_000  # fixed-point rank unit
 PR_ITERS = 3          # fixed, unrolled in the oracle
@@ -135,23 +135,23 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ENSURE_REQUIREMENTS and the per-iteration edge re-shuffle
     # (3× the edge list) disappears — guide §2.4, "two operations
     # keyed the same way share one exchange".
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition(shuffle_width(spark), "src")
-        .cache()
+    edges = cache_slot(
+        "copurchase_edges",
+        _copurchase_edges(spark, sf_dir).repartition(
+            shuffle_width(spark), "src"
+        ),
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # nodes == sources (symmetric graph); N as a broadcast 1-row agg
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
-    ranks = (
-        deg.crossJoin(F.broadcast(n_nodes))
-        .select(
+    ranks = cache_slot(
+        "gr01_ranks",
+        deg.crossJoin(F.broadcast(n_nodes)).select(
             F.col("src").alias("node"),
             "outdeg",
             "n",
             F.expr(f"CAST({PR_SCALE} DIV n AS BIGINT)").alias("rank_fp"),
-        )
-        .cache()
+        ),
     )
     for _ in range(PR_ITERS):
         contrib = (
@@ -273,7 +273,7 @@ def gr02_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.7 s) — the compiled plan shows the cached-under-AQE
     # partitioning is not recognized by the orientation joins, so the
     # up-front full-edge shuffle buys nothing.
-    edges = _copurchase_edges(spark, sf_dir).cache()
+    edges = cache_slot("copurchase_edges", _copurchase_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     und = edges.filter(F.col("src") < F.col("dst"))
     ds = deg.select(F.col("src").alias("_s"), F.col("deg").alias("deg_s"))
@@ -281,14 +281,14 @@ def gr02_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_first = (F.col("deg_s") < F.col("deg_t")) | (
         (F.col("deg_s") == F.col("deg_t")) & (F.col("src") < F.col("dst"))
     )
-    oriented = (
+    oriented = cache_slot(
+        "gr02_oriented",
         und.join(ds, und["src"] == ds["_s"])
         .join(dt, und["dst"] == dt["_t"])
         .select(
             F.when(src_first, F.col("src")).otherwise(F.col("dst")).alias("a"),
             F.when(src_first, F.col("dst")).otherwise(F.col("src")).alias("b"),
-        )
-        .cache()
+        ),
     )
     adj = oriented.groupBy("a").agg(
         F.array_sort(F.collect_list("b")).alias("nbrs")
@@ -341,7 +341,7 @@ def gr03_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~25% WORSE (means 5.1 s vs 3.9 s) — the per-hop dist table is
     tiny, so the up-front full-edge shuffle costs more than the
     per-round joins save."""
-    edges = _copurchase_edges(spark, sf_dir).cache()
+    edges = cache_slot("copurchase_edges", _copurchase_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     dist = nodes.filter(F.col("node") % KHOP_SEED_MOD == 0).select(
         "node", F.lit(0).cast("long").alias("hops")
@@ -411,12 +411,12 @@ def gr04_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K window partitions per part (state ≤ its co-purchase degree).
     Jaccard is ONE IEEE division of exact integer counts, so even the
     float similarity hash-matches; ties break (co DESC, b ASC)."""
-    li = (
+    li = cache_slot(
+        "gr04_order_parts",
         tables.load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .filter(F.col("l_partkey").isNotNull())
-        .distinct()
-        .cache()
+        .distinct(),
     )
     n_ord = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_o"))
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))

@@ -185,14 +185,20 @@ def sql_cc_min_label(
     return ",\n".join(ctes)
 
 
-# One cached relation per op, swapped on re-invocation (round-10
+# One cached relation per slot, swapped on re-invocation (round-10
 # ADVICE #2): a plan builder that caches a relation its plan reads
 # several times returns a LAZY frame, so it cannot unpersist in a
 # try/finally — the cache would be gone before the caller runs the
-# plan. A long-lived session (bench loops, scale-probe reps) would
-# otherwise accumulate one cached relation per call until an external
-# clearCache. Unpersisting the PREVIOUS call's cache bounds storage at
-# one relation per op; a still-held stale DataFrame simply recomputes.
+# plan. Every plan-level cache goes through a slot. Without one, a
+# long-lived session (benchmark loops, a dashboard) keeps every cached
+# relation until an external clearCache, and Spark's CacheManager,
+# which matches a scan by path, serves it after its table is
+# rewritten in place. Unpersisting the PREVIOUS call's cache bounds
+# storage at one relation per slot and makes each call compute from
+# the current files; a still-held stale DataFrame simply recomputes.
+# Builders that cache the same plan share a slot: the CacheManager
+# keeps one entry per plan, so two slots over one plan would release
+# each other's entry.
 _CACHE_SLOTS: dict[str, DataFrame] = {}
 # plans are built from multiple threads (round-11 ADVICE #1): an
 # unguarded pop/assign pair can leak a cached relation or unpersist one

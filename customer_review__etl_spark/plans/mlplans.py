@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..ml import pipeline as P
 from ..sources import tables
 from . import QuerySpec
+from .helpers import cache_slot, cents, sql_raw_tokens
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -153,7 +154,7 @@ def ml06_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic sample, but every stage keeps this shape."""
     from pyspark.sql.window import Window
 
-    q = _quantized(spark, sf_dir).cache()
+    q = cache_slot("ml06_quantized", _quantized(spark, sf_dir))
     cent = q.filter(F.col("vec_id") < KM_K).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
@@ -295,11 +296,14 @@ def _nb_all_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    toks = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(T.raw_tokens(F.lower(F.col("text")))).alias("tk"),
-    ).cache()
+    toks = cache_slot(
+        "nb_tokens",
+        docs.select(
+            "doc_id",
+            "lang",
+            F.explode(T.raw_tokens(F.lower(F.col("text")))).alias("tk"),
+        ),
+    )
     cnt_tc = toks.groupBy(
         F.col("lang").alias("clang"), F.col("tk").alias("ctk")
     ).agg(F.count(F.lit(1)).alias("c_tc"))
@@ -450,8 +454,6 @@ def ml12_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ml12_oracle() -> str:
-    from .helpers import sql_raw_tokens
-
     return f"""
     WITH toks AS (
       SELECT doc_id, tk
@@ -470,8 +472,6 @@ def _ml12_oracle() -> str:
 def _nb_ctes() -> str:
     """The shared WITH-prefix of the ml07/ml11 oracles: everything
     through `sc`, the per-(doc, class) integer-bit cost table."""
-    from .helpers import sql_raw_tokens
-
     return f"""toks AS (
       SELECT doc_id, lang, tk
       FROM (SELECT doc_id, lang, {sql_raw_tokens('lower(text)')} AS tks
@@ -561,8 +561,6 @@ def ml08_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sufficient-statistics pattern scales to any SF; at extreme
     row counts the statistics would be centered first to keep the
     products in int64 range (documented, not needed at these SFs)."""
-    from .helpers import cents
-
     b = (
         tables.load(spark, sf_dir, "events")
         .filter(

@@ -29,9 +29,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,10 +44,6 @@ ANN_PLANES = 6   # s02: 6 sign bits → 64 buckets
 ANN_TOPK = 3
 NEAR_BANDS = 2   # s03: 2 bands × 3 planes
 NEAR_COS = 0.4   # s03 near-pair threshold (matches testdata's top tail)
-
-
-# The depth memo below is shared by concurrent plan builds.
-_CACHE_LOCK = threading.Lock()
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,43 +367,17 @@ def _cascade_effective_depth(
     return max_depth
 
 
-# Effective-depth memo (round-12 ADVICE #2): the occupancy pre-scan is
-# a full-corpus job, and s09/s10 are built far more often than their
-# corpus changes — every benchmark pass, every explain-only plan_audit
-# build, every oracle run in a sweep. Memoize per (op, corpus
-# identity); the identity is the source catalog's stat of the
-# embeddings files (tables.identity), so a probe that overwrites the
-# same path invalidates naturally. No identity (remote path, racing
-# writer) falls back to scanning — never to a stale answer.
-_DEPTH_MEMO: dict[tuple, int] = {}
-
-
-def _memo_depth(op: str, sf_dir: str, knobs: tuple, scan) -> int:
-    sig = tables.identity(os.path.join(sf_dir, "embeddings.parquet"))
-    if sig is None:
-        return scan()
-    key = (op, sf_dir, knobs, sig)
-    with _CACHE_LOCK:
-        if key in _DEPTH_MEMO:
-            return _DEPTH_MEMO[key]
-    depth = scan()  # outside the lock: a racing double-scan is
-    # harmless and cheaper than serializing concurrent bench builds
-    with _CACHE_LOCK:
-        # one live entry per op: probe scratch dirs are throwaway,
-        # so dropping the previous corpus's entry bounds the memo
-        for k in [k for k in _DEPTH_MEMO if k[0] == op]:
-            del _DEPTH_MEMO[k]
-        _DEPTH_MEMO[key] = depth
-    return depth
-
-
+# The occupancy pre-scan is a full-corpus job, and s09/s10 are built
+# far more often than their corpus changes (every benchmark pass, every
+# explain-only plan_audit build, every oracle run in a sweep), so the
+# depth is a catalog-derived value (tables.derived): kept per corpus
+# identity, scanned again after a rewrite, never kept without one. The
+# caps are part of the kind: stress tests monkeypatch them, and the
+# cascade's answer is a function of (corpus, caps, depth).
 def _s09_effective_depth(spark: SparkSession, sf_dir: str) -> int:
-    # the cap knobs are part of the key: stress tests monkeypatch them,
-    # and the cascade's answer is a function of (corpus, caps, depth)
-    return _memo_depth(
-        "s09",
+    return tables.derived(
         sf_dir,
-        (S09_BUCKET_CAP, S09_SUBBUCKET_CAP, S09_MAX_DEPTH),
+        ("s09_depth", S09_BUCKET_CAP, S09_SUBBUCKET_CAP, S09_MAX_DEPTH),
         lambda: _s09_effective_depth_scan(spark, sf_dir),
     )
 
@@ -459,10 +426,9 @@ def _s09_effective_depth_scan(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _s10_effective_depth(spark: SparkSession, sf_dir: str) -> int:
-    return _memo_depth(
-        "s10",
+    return tables.derived(
         sf_dir,
-        (S10_BUCKET_CAP, S10_MAX_DEPTH),
+        ("s10_depth", S10_BUCKET_CAP, S10_MAX_DEPTH),
         lambda: _s10_effective_depth_scan(spark, sf_dir),
     )
 

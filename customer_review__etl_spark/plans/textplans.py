@@ -255,7 +255,8 @@ def t11_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk, reassembly groups by doc_id — two shuffles total, both on
     bounded keys."""
     toks = T.raw_tokens(F.lower(F.col("text")))
-    base = (
+    base = cache_slot(
+        "t11_chunks",
         _docs_par(spark, sf_dir)
         .select("doc_id", toks.alias("toks"))
         .select(
@@ -267,8 +268,7 @@ def t11_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" i -> concat_ws(' ', slice(toks, (i - 1) * {CHUNK_TOKENS} + 1,"
                 f" {CHUNK_TOKENS}))) END"
             ).alias("chunks"),
-        )
-        .cache()
+        ),
     )
     ch = base.select(
         "doc_id", F.posexplode("chunks").alias("ci", "chunk")
@@ -378,10 +378,13 @@ def t13_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache the tokenized stream: it feeds both the frequency pass and
     # the per-doc probe side — without this the normalize+explode
     # lineage (the CPU-heavy part) executes twice
-    toks = docs.select(
-        "doc_id",
-        F.explode(T.raw_tokens(T.normalize_text(F.col("text")))).alias("tk"),
-    ).cache()
+    toks = cache_slot(
+        "t13_tokens",
+        docs.select(
+            "doc_id",
+            F.explode(T.raw_tokens(T.normalize_text(F.col("text")))).alias("tk"),
+        ),
+    )
     freq = toks.groupBy("tk").agg(F.count(F.lit(1)).alias("cnt"))
     # corpus total = sum of the vocabulary counts — an O(vocab)
     # aggregate over freq, never a third scan of the token stream
@@ -445,10 +448,11 @@ def t14_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(distinct-per-batch) per batch."""
     import pandas as pd
 
-    toks = (
-        _docs_par(spark, sf_dir)
-        .select(F.explode(T.clean_tokens(F.col("text"))).alias("word"))
-        .cache()
+    toks = cache_slot(
+        "t14_words",
+        _docs_par(spark, sf_dir).select(
+            F.explode(T.clean_tokens(F.col("text"))).alias("word")
+        ),
     )
 
     def mg_partition(batches):
@@ -506,15 +510,18 @@ def _t15_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         T.raw_tokens(T.normalize_text(F.col("text"))).alias("tks"),
     ).filter(F.size("tks") >= 2)
-    big = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(tks, 1, size(tks) - 1),"
-                " (x, i) -> struct(x AS w1, tks[i + 1] AS w2))"
-            )
-        ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2").cache()
+    big = cache_slot(
+        "t15_bigrams",
+        base.select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(slice(tks, 1, size(tks) - 1),"
+                    " (x, i) -> struct(x AS w1, tks[i + 1] AS w2))"
+                )
+            ).alias("bg"),
+        ).select("doc_id", "bg.w1", "bg.w2"),
+    )
     ctx = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     pairs = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     bits = (
@@ -722,10 +729,11 @@ def t16_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tf is one partial-aggregatable shuffle on (doc, term); df
     is one on term; N rides along broadcast; ranking windows partition
     by doc (small state). Bodies never shuffle."""
-    toks = (
-        _docs_par(spark, sf_dir)
-        .select("doc_id", F.explode(T.clean_tokens(F.col("text"))).alias("term"))
-        .cache()
+    toks = cache_slot(
+        "t16_terms",
+        _docs_par(spark, sf_dir).select(
+            "doc_id", F.explode(T.clean_tokens(F.col("text"))).alias("term")
+        ),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_t = toks.groupBy("term").agg(

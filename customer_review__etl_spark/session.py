@@ -67,18 +67,15 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
     """Build a local session shaped like the target deployment.
 
     Tests and perfbench use this; the driver supplies its own session to
-    `__spark_entry__` (then `ensure_confs` runs on it).
+    `__spark_entry__` (then `ensure_confs` runs on it). The engine's
+    runtime confs are set by `ensure_confs` alone, here as there.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(min(int(cpus) * 2, 64)))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Scan-split sizing is data-scale-relative: the local testdata is
         # one small parquet file per table (sf0.1 lineitem ≈ 10 MB), so

@@ -1,3 +1,3 @@
-from .tables import TABLE_NAMES, load, load_all
+from .tables import TABLE_NAMES, load
 
-__all__ = ["TABLE_NAMES", "load", "load_all"]
+__all__ = ["TABLE_NAMES", "load"]

@@ -74,10 +74,6 @@ def write_orc(
     w.orc(path)
 
 
-def read_orc(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.schema(schema).orc(path)
-
-
 def write_metrics_json(
     metrics: dict[str, Any], path: str, timestamp: str | None = None
 ) -> str:

@@ -14,9 +14,10 @@ stats of every part file when the table is a directory. It holds
 - values derived from the tables under one sf_dir (`derived`: scratch
   landings, bucketed tables, fitted models), rebuilt on the next call
   after any of those tables is rewritten.
-A path that cannot be stat'ed (a remote object store) has no identity:
-its schema is inferred on every read, and values derived from it are
-kept for the life of the process.
+A path that cannot be stat'ed (a remote object store) has no identity,
+and nothing keyed on it is kept: its schema is inferred on every read,
+and a value derived from an sf_dir none of whose tables can be stat'ed
+is built again on every call.
 
 Scale: `spark.read.parquet` is the vectorized columnar scan — Catalyst
 pushes filters and prunes columns into it, so plan code never needs to
@@ -170,16 +171,6 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() entry points."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 # (sf_dir, kind) -> (snapshot of sf_dir's tables, value)
 _DERIVED: dict[tuple, tuple[tuple, Any]] = {}
 _DERIVED_LOCKS: dict[tuple, threading.Lock] = {}
@@ -194,9 +185,11 @@ def derived(
 ) -> Any:
     """`build()` once per (sf_dir, kind) and identity of the tables
     under sf_dir: a rewrite of any of them makes the next call build
-    again, so nothing derived from old files is served. `valid` can
-    reject a kept value whose backing lives outside the files (a
-    catalog table in a stopped session).
+    again, so nothing derived from old files is served. When none of
+    the tables can be stat'ed there is no identity to key on, and the
+    value is built but not kept. `valid` can reject a kept value whose
+    backing lives outside the files (a catalog table in a stopped
+    session).
 
     One lock per key, not a global one: unrelated kinds build
     concurrently from separate threads (a builder may itself ask for
@@ -206,6 +199,8 @@ def derived(
         lock = _DERIVED_LOCKS.setdefault(key, threading.Lock())
     with lock:
         snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
+        if not any(snap):
+            return build()
         hit = _DERIVED.get(key)
         stale = hit is None or hit[0] != snap
         if stale or (valid is not None and not valid(hit[1])):

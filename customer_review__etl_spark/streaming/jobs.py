@@ -140,16 +140,6 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """1-hour windows sliding every 30 minutes (each event in 2)."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("wstart"), "event_type", "n")
-    )
-
-
 def session_counts(events: DataFrame) -> DataFrame:
     """Per-user session windows (30-minute inactivity gap)."""
     return (

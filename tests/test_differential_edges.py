@@ -416,6 +416,8 @@ def edge_hybrid_dir(spark, tmp_path_factory):
 
 
 def _compare(spark, sf_dir, name, view):
+    """Assert the query matches its oracle; return the oracle's rows
+    as a multiset."""
     # demoted baselines (s02/s03, plans/baselines.py) keep their edge
     # differential coverage even though they left the registry (r15)
     from customer_review__etl_spark.plans.baselines import baseline_queries
@@ -449,7 +451,9 @@ def _compare(spark, sf_dir, name, view):
     orows = cur.fetchall()
 
     assert sorted(scols) == sorted(ocols)
-    assert _multiset(scols, srows) == _multiset(ocols, orows), name
+    expected = _multiset(ocols, orows)
+    assert _multiset(scols, srows) == expected, name
+    return expected
 
 
 @pytest.mark.parametrize("name", DOCS_ONLY_QUERIES)

@@ -11,12 +11,13 @@ over a nullable key silently diverges.
 from __future__ import annotations
 
 import datetime
-import math
 
 import duckdb
 import pytest
 
 from customer_review__etl_spark.plans import all_queries
+
+from test_differential_edges import _multiset
 
 _D = datetime.datetime
 
@@ -130,24 +131,6 @@ def oracle_con(hostile_dir):
             f"SELECT * FROM '{hostile_dir}/{t}.parquet/*.parquet'"
         )
     return con
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows),
-        key=lambda t: tuple(str(x) for x in t),
-    )
 
 
 @pytest.mark.parametrize("name", RELATIONAL_QUERIES)

@@ -9,9 +9,6 @@ nothing is an everyday event, not an edge case.
 
 from __future__ import annotations
 
-import datetime
-import math
-
 import duckdb
 import pytest
 
@@ -19,6 +16,7 @@ from customer_review__etl_spark.plans import all_queries
 from customer_review__etl_spark.sources.tables import TABLE_NAMES
 
 from conftest import SF_DIR
+from test_differential_edges import _multiset
 
 # Streaming queries execute jobs at build time; they get their own test.
 _STREAMING = {"st04_stream_tumbling", "st05_stream_dedup",
@@ -35,24 +33,6 @@ def empty_dir(spark, tmp_path_factory):
             1
         ).write.mode("overwrite").parquet(str(d / f"{name}.parquet"))
     return str(d)
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows),
-        key=lambda t: tuple(str(x) for x in t),
-    )
 
 
 @pytest.fixture(scope="module")

@@ -4,10 +4,15 @@ codegen) asserted on the actual explain output — not just eyeballed."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 from customer_review__etl_spark.plans import relational
 
 from conftest import SF_DIR
+
+PLANS_DIR = Path(relational.__file__).resolve().parent
 
 
 def _plan(df) -> str:
@@ -30,6 +35,32 @@ def test_contract_consistency():
         "ml02_topic_top_words",
         "ml04_classifier_metrics",
     }
+
+
+def test_plan_caches_go_through_cache_slot():
+    """Every in-memory cache a plan builds has an owner that releases
+    it: helpers.cache_slot. A bare .cache()/.persist() is kept by
+    Spark's CacheManager for the life of the session and is served,
+    matched by path, after its table is rewritten in place."""
+    bare = []
+    for path in sorted(PLANS_DIR.glob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.name == "helpers.py":
+            (slot,) = [
+                f for f in tree.body
+                if isinstance(f, ast.FunctionDef) and f.name == "cache_slot"
+            ]
+            allowed = {id(n) for n in ast.walk(slot)}
+        bare += [
+            f"{path.name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("cache", "persist")
+            and id(n) not in allowed
+        ]
+    assert bare == []
 
 
 def test_registry_head_covers_every_family():

@@ -7,6 +7,7 @@ equivalence the docstrings argue)."""
 from __future__ import annotations
 
 import re
+import shutil
 
 import duckdb
 
@@ -125,10 +126,14 @@ def test_adaptive_depth_honors_stress_caps(spark, monkeypatch):
     assert srows == orows
 
 
-def test_effective_depth_memoized_per_corpus(spark, monkeypatch):
+def test_effective_depth_memoized_per_corpus(spark, monkeypatch, tmp_path):
     """Round-12 ADVICE #2: the occupancy pre-scan must run at most once
     per (op, corpus signature, caps) — explain-only consumers and bench
-    reps rebuild s09/s10 far more often than the corpus changes."""
+    reps rebuild s09/s10 far more often than the corpus changes. A
+    fresh copy of the corpus has an identity nothing has seen, so the
+    first call starts cold."""
+    sf = str(tmp_path)
+    shutil.copyfile(f"{SF001}/embeddings.parquet", f"{sf}/embeddings.parquet")
     calls = {"n": 0}
     real = simplans._s09_effective_depth_scan
 
@@ -137,15 +142,12 @@ def test_effective_depth_memoized_per_corpus(spark, monkeypatch):
         return real(sp, sf)
 
     monkeypatch.setattr(simplans, "_s09_effective_depth_scan", counting)
-    with simplans._CACHE_LOCK:
-        simplans._DEPTH_MEMO.clear()
-    d1 = simplans._s09_effective_depth(spark, SF001)
-    d2 = simplans._s09_effective_depth(spark, SF001)
+    d1 = simplans._s09_effective_depth(spark, sf)
+    d2 = simplans._s09_effective_depth(spark, sf)
     assert d1 == d2
     assert calls["n"] == 1
     # a knob change is a different question — it must re-scan
     monkeypatch.setattr(simplans, "S09_BUCKET_CAP", 2)
     monkeypatch.setattr(simplans, "S09_SUBBUCKET_CAP", 2)
-    assert simplans._s09_effective_depth(spark, SF001) == \
-        simplans.S09_MAX_DEPTH
+    assert simplans._s09_effective_depth(spark, sf) == simplans.S09_MAX_DEPTH
     assert calls["n"] == 2

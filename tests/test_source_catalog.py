@@ -1,10 +1,14 @@
 """The source catalog (sources/tables.py) keys table schemas and every
 value derived from a corpus on the identity of the table files, so a
 table rewritten in place is read with its new schema and rebuilds what
-was landed from it, while a warm load launches no Spark job."""
+was landed from it, while a warm load launches no Spark job. Plan-level
+caches (plans/helpers.cache_slot) are released on the next call, so a
+query run again after an in-place rewrite reads the new files."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 import threading
 import time
@@ -16,7 +20,12 @@ import pytest
 from customer_review__etl_spark.plans import dedupplans as D
 from customer_review__etl_spark.sources import tables
 
+from conftest import SF_DIR
 from test_differential_edges import _compare
+
+# the sf0.01 fixture beside the default one; at this scale the rewrite
+# below changes every checked answer (the test asserts it)
+SF01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 DOC_SCHEMA = (
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
@@ -100,10 +109,72 @@ def test_warm_load_launches_no_job(spark, tmp_path):
     assert warm == []
 
 
+def _copy_tables(src, dst):
+    """The fixture's tables as one-part directories, the layout the
+    oracle views read."""
+    for name in tables.TABLE_NAMES:
+        os.makedirs(f"{dst}/{name}.parquet")
+        shutil.copyfile(
+            f"{src}/{name}.parquet", f"{dst}/{name}.parquet/part-0.parquet"
+        )
+
+
+def _rewrite_in_place(path, column):
+    """Shift `column` up by one row (row i takes row i+1's value), so
+    every row keeps its key but not its value. pyarrow writes a hidden
+    temp file that is renamed over the part: Spark's own overwrite
+    would re-cache the path and hide a stale cache."""
+    t = pq.read_table(path)
+    vals = t[column].combine_chunks()
+    t = t.set_column(
+        t.schema.get_field_index(column),
+        column,
+        pa.concat_arrays([vals[1:], vals[:1]]),
+    )
+    tmp = os.path.join(os.path.dirname(path), ".rewrite.parquet")
+    pq.write_table(t, tmp)
+    os.replace(tmp, path)
+
+
+@pytest.mark.parametrize(
+    "name, table, column",
+    [
+        ("q15_top_supplier", "lineitem", "l_extendedprice"),
+        ("q11_important_stock", "lineitem", "l_extendedprice"),
+        ("t13_unigram_surprisal", "documents", "text"),
+        ("ml06_kmeans", "embeddings", "embedding"),
+    ],
+)
+def test_query_after_out_of_band_rewrite(spark, tmp_path, name, table, column):
+    d = str(tmp_path / "sf")
+    _copy_tables(SF01, d)
+    before = _compare(spark, d, name, tables.TABLE_NAMES)
+    _rewrite_in_place(f"{d}/{table}.parquet/part-0.parquet", column)
+    after = _compare(spark, d, name, tables.TABLE_NAMES)
+    assert after != before
+
+
+def test_derived_without_identity_is_not_kept(tmp_path):
+    """No table under sf_dir can be stat'ed, so there is nothing to key
+    the value on: every call builds it."""
+    d = str(tmp_path / "missing")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    assert tables.derived(d, "unkeyed", build) == 1
+    assert tables.derived(d, "unkeyed", build) == 2
+
+
 def test_derived_builds_once_under_contention(tmp_path):
     """Eight threads (more than the cores) ask for one kind at once:
     the per-key lock lets exactly one of them build it."""
     d = str(tmp_path / "sf")
+    # one stat-able table gives the corpus an identity to key on
+    (tmp_path / "sf").mkdir()
+    (tmp_path / "sf" / "documents.parquet").write_bytes(b"")
     calls = []
 
     def build():

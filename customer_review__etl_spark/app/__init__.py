@@ -1,4 +1,4 @@
 """Application assembly: the reference's EP2 CLI chain
 (Dockerfile:277-287 extract → clean → load → dashboard-prep) as one
-lazy Spark job — see app.pipeline.run_pipeline.
+lazy DataFrame chain — see app.pipeline.run_pipeline.
 """

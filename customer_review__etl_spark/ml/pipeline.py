@@ -109,20 +109,21 @@ def fit_lda(df_tokens: DataFrame) -> tuple[PipelineModel, DataFrame]:
 
 def assign_topics(transformed: DataFrame) -> DataFrame:
     """M3+M5: argmax over the topic distribution (first max wins, like
-    numpy argmax) + verbatim theme label via a broadcast join."""
+    numpy argmax) + verbatim theme label, looked up in a literal map
+    (five constants: no join, and no Python worker to ship them)."""
     arr = vector_to_array(F.col("topic_dist"))
     topic = (
         F.expr(
             "array_position(topic_arr, array_max(topic_arr))"
         ).cast("int") - 1
     )
-    labels = transformed.sparkSession.createDataFrame(
-        list(THEME_LABELS.items()), "topic INT, theme STRING"
+    labels = F.create_map(
+        *[F.lit(x) for kv in THEME_LABELS.items() for x in kv]
     )
     return (
         transformed.withColumn("topic_arr", arr)
         .withColumn("topic", topic)
-        .join(F.broadcast(labels), "topic", "left")
+        .withColumn("theme", labels[F.col("topic")])
     )
 
 
@@ -239,13 +240,15 @@ def fit_classifier(
 ) -> tuple[PipelineModel, DataFrame, DataFrame]:
     """M7+M8: the second, unigram-only TF-IDF (cleaner.py:251-257) +
     RF(numTrees=100, seed=42); fit on train, transform test."""
-    # NOTE (r16): unlike fit_lda, this fit is NOT staged-with-persist —
-    # an A/B showed the RF's internal BaggedPoint persist already
-    # bounds its passes, and persisting the train split shifted
-    # CountVectorizer's (inherently arbitrary) vocabulary tie-breaks
-    # enough to flip ml10's marginal beats-majority gate on the
-    # hostile fuzz corpus. Zero measured win, a real behavior shift:
-    # keep Pipeline.fit.
+    # NOTE: unlike fit_lda, this fit is not staged-with-persist. The
+    # RF's internal BaggedPoint persist already bounds its passes, and
+    # CountVectorizer's vocabulary tie-breaks (equal counts) follow the
+    # row order of its input: persisting the train split on its own
+    # moved them enough to flip ml10's marginal beats-majority gate on
+    # the hostile fuzz corpus (r16 A/B). So the row order is the
+    # caller's to fix. app.run_pipeline hands this a filter over its
+    # persisted, doc_id-ordered token frame, which makes the fit
+    # repeatable while that frame is one partition (ROADMAP item 1).
     train = df_tokens_split.filter(F.col("split") == "train")
     test = df_tokens_split.filter(F.col("split") == "test")
     pipe = Pipeline(
@@ -276,6 +279,14 @@ def fit_classifier(
         ]
     )
     model = pipe.fit(train)
+    # Scoring ships the forest to every task, and with it the training
+    # summary. A binary summary (one label plus the "unseen" class)
+    # holds the SparkSession, which stops serializing once observe() has
+    # run in the session (app.run_pipeline, a12), so every scoring task
+    # would fail. copy() keeps the trees and params and drops the
+    # summary, which nothing reads.
+    *prep, forest = model.stages
+    model = PipelineModel(stages=[*prep, forest.copy()])
     return model, model.transform(test), train
 
 
@@ -310,7 +321,12 @@ def classification_metrics(predictions: DataFrame) -> DataFrame:
         rec = t / s_n
         f1 = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
         f1_weighted += f1 * s_n / total
-    return predictions.sparkSession.createDataFrame(
-        [(total, correct, correct / total if total else 0.0, f1_weighted)],
-        "n_test BIGINT, n_correct BIGINT, accuracy DOUBLE, weighted_f1 DOUBLE",
+    # built from literals on the JVM side: createDataFrame over a local
+    # row would start a Python worker to ship it
+    accuracy = correct / total if total else 0.0
+    return predictions.sparkSession.range(1).select(
+        F.lit(total).cast("bigint").alias("n_test"),
+        F.lit(correct).cast("bigint").alias("n_correct"),
+        F.lit(accuracy).cast("double").alias("accuracy"),
+        F.lit(f1_weighted).cast("double").alias("weighted_f1"),
     )

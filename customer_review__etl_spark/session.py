@@ -86,9 +86,11 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
         # keeps task count = file-chunk count there).
         .config("spark.sql.files.maxPartitionBytes", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # FAIR job scheduling: io05's two CTAS writes and landings built
-        # from separate threads (materialized_df's per-kind locks) run
-        # concurrent jobs. NOTE (r9 ADVICE #2): FAIR round-robins
+        # FAIR job scheduling: io05's two CTAS writes, landings built
+        # from separate threads (materialized_df's per-kind locks) and
+        # the review pass's two branches (app.run_pipeline: the
+        # classifier on a second thread, LDA themes on the caller's)
+        # run concurrent jobs. NOTE (r9 ADVICE #2): FAIR round-robins
         # BETWEEN pools; intra-pool order in the default pool is FIFO,
         # which still lets queued jobs grab slots as the head job's
         # stages drain. Callers that want true round-robin set a

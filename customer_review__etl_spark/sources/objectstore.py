@@ -91,18 +91,22 @@ class ObjectBucket:
     def put_directory(self, local_dir: str, prefix: str) -> list[str]:
         """upload_directory parity (loader.py:169-210): every file under
         ``local_dir`` lands at ``prefix/<relative path>``; returns the
-        uploaded keys, sorted for determinism."""
-        keys: list[str] = []
-        for root, _dirs, files in os.walk(local_dir):
-            for name in files:
-                local_path = os.path.join(root, name)
-                rel = os.path.relpath(local_path, local_dir).replace(
-                    os.sep, "/"
-                )
-                key = f"{prefix.rstrip('/')}/{rel}"
-                self.put_file(local_path, key)
-                keys.append(key)
-        return sorted(keys)
+        keys under ``prefix``, sorted for determinism.
+
+        One recursive Hadoop copy, not one put per file. The prefix is
+        replaced, not merged: a copy into an existing directory would
+        nest ``local_dir`` under it."""
+        jdst = self._jpath(prefix)
+        self._fs.delete(jdst, True)
+        self._fs.copyFromLocalFile(
+            False,
+            True,
+            self._jvm.org.apache.hadoop.fs.Path(
+                "file://" + os.path.abspath(local_dir)
+            ),
+            jdst,
+        )
+        return self.list_keys(prefix)
 
     def list_keys(self, prefix: str = "") -> list[str]:
         """Recursive listing under a key prefix, bucket-relative."""

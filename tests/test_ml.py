@@ -202,3 +202,67 @@ def test_stratified_split_property_quotas_and_parity(spark):
             assert per.get(f"s{si}", 0) == (4 * n) // 5
 
     check()
+
+
+def test_classifier_metrics_schema(spark):
+    out = mlplans.ml04_classifier_metrics(spark, SF_DIR)
+    assert out.dtypes == [
+        ("n_test", "bigint"),
+        ("n_correct", "bigint"),
+        ("accuracy", "double"),
+        ("weighted_f1", "double"),
+    ]
+
+
+def test_fit_lda_repeatable_on_laid_out_frame(spark):
+    """Fits over one persisted token frame laid out by doc_id agree:
+    same vocabulary, same topic matrix, same per-document topics."""
+    from pyspark import StorageLevel
+
+    from customer_review__etl_spark.app import pipeline as app
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    n_bytes = app._bytes_on_disk(spark, f"{SF_DIR}/documents.parquet")
+    toks = P.with_tokens(app.laid_out(app._clean(docs), n_bytes)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        fits = []
+        for _ in range(3):
+            model, transformed = P.fit_lda(toks)
+            topics = sorted(
+                map(
+                    tuple,
+                    P.assign_topics(transformed)
+                    .select("doc_id", "topic")
+                    .collect(),
+                )
+            )
+            fits.append(
+                (
+                    model.stages[0].vocabulary,
+                    model.stages[2].topicsMatrix().toArray().tolist(),
+                    topics,
+                )
+            )
+    finally:
+        toks.unpersist()
+    assert fits[0] == fits[1] == fits[2]
+
+
+def test_fit_classifier_scores_after_observe(spark):
+    """Once observe() has run in a session, a forest that keeps its
+    binary training summary (one language plus the "unseen" class)
+    cannot be shipped to a task; the fitted pipeline must still score."""
+    from pyspark.sql import Observation
+
+    obs = Observation("any")
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).count()
+    assert obs.get["n"] == 3
+    docs = spark.createDataFrame(
+        [(i, "en", ["w%d" % (i % 5), "w%d" % (i % 7)]) for i in range(40)],
+        "doc_id BIGINT, lang STRING, unigrams ARRAY<STRING>",
+    )
+    _, predictions, _ = P.fit_classifier(P.md5_split(docs, "doc_id"))
+    scored = predictions.select("label", "prediction").collect()
+    assert len(scored) > 0

@@ -94,3 +94,34 @@ def test_list_keys_prefix_scoping(spark, tmp_path):
         "metrics/b.json",
     ]
     assert b.list_keys("nope") == []
+
+
+def test_publish_run_model_dir_loads_from_bucket(spark, tmp_path):
+    """A real MLWriter directory (metadata, stage subdirectories, part
+    files) publishes in one copy: the manifest lists exactly the keys
+    under models/<ts>, and the model loads back from the bucket."""
+    from pyspark.ml import Pipeline, PipelineModel
+    from pyspark.ml.feature import StringIndexer
+
+    from customer_review__etl_spark.sources import sinks
+
+    df = spark.range(6).select((F.col("id") % 3).cast("string").alias("c"))
+    indexer = StringIndexer(inputCol="c", outputCol="i")
+    model = Pipeline(stages=[indexer]).fit(df)
+    model_dir = str(tmp_path / "models" / "classifier")
+    sinks.save_model(model, model_dir)
+
+    b = _bucket(spark, tmp_path)
+    manifest = publish_run(b, TS, models_dir=model_dir)
+
+    keys = b.list_keys(f"models/{TS}")
+    assert any(k.rsplit("/", 1)[-1].startswith("part-") for k in keys)
+    assert manifest["models"] == [b.url(k) for k in keys]
+
+    loaded = PipelineModel.load(b.url(f"models/{TS}"))
+    assert sorted(map(tuple, loaded.transform(df).collect())) == sorted(
+        map(tuple, model.transform(df).collect())
+    )
+
+    # publishing again under the same key replaces, not nests
+    assert publish_run(b, TS, models_dir=model_dir) == manifest

@@ -4,11 +4,20 @@ The driver owns the SparkSession for `queries()`, so everything this
 engine needs beyond defaults must be settable at RUNTIME. `ensure_confs`
 is called by every plan entry point; it is idempotent and cheap.
 
+Builder-only confs. Static confs are fixed when the JVM starts or
+the first session is built, so `ensure_confs` cannot apply them to a
+session the driver supplies; `get_spark` sets them on the builder:
+- `spark.sql.codegen.cache.maxEntries` (CODEGEN_CACHE_ENTRIES): the
+  compiled-class cache. A driver-supplied session (`__spark_entry__`)
+  keeps Spark's 100 entries and recompiles what falls out of it.
+- the initial `spark.sql.shuffle.partitions`, `min(2 × cpus, 64)`; on a
+  real cluster AQE's coalescing makes the initial number much less
+  sensitive. (It is a runtime conf, but only the builder sets it.)
+- `spark.scheduler.mode` FAIR and `spark.driver.memory`.
+
 Scale notes (100 TB manners):
 - AQE on: post-shuffle coalescing, skew-join splitting, dynamic
   broadcast demotion pick physical strategies at runtime.
-- shuffle.partitions is a local[32] default; on a real cluster AQE's
-  coalescing makes the initial number much less sensitive.
 - session timezone pinned to UTC so timestamp semantics are stable
   across driver hosts (and match the DuckDB oracle's naive reading).
 """
@@ -48,6 +57,22 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
 }
+
+# Compiled generated classes kept per JVM, in an LRU cache (Spark's
+# default is 100). Distinct classes the engine compiles, counted with
+# CodegenMetrics' compile counter on 4 cores over sf0.01: one round of
+# the 15 dashboard_mix queries 212, one review pass 94, one call of
+# every registry query 2,849. At 100 entries every warm dashboard round
+# recompiled about 200 classes, every warm review pass 23-49, and a second
+# registry sweep 3,687; at 4096 a warm review pass compiles none, and a
+# warm round or sweep compiles only plan variants it has not met yet
+# (AQE numbers codegen stages, and the number is in the class name): 192
+# classes on the second sweep, 36-57 on the third to fifth. 4096 is the
+# smallest power of two above the whole registry, which tier-1 and
+# verify_local run in one JVM (1,024 would thrash there). Cost after
+# one registry sweep: heap after GC 438 MB against 363 MB, metaspace
+# 266 against 245 MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
@@ -99,6 +124,7 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
         # With a single job at a time this is indistinguishable from
         # FIFO.
         .config("spark.scheduler.mode", "FAIR")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     return ensure_confs(builder.getOrCreate())

@@ -33,7 +33,7 @@ class QuerySpec:
 # window/function, text, dedup, similarity, streaming, ML, multimodal, IO)
 # must place representatives inside the head.  PRIORITY pins that head
 # explicitly; everything else follows in module order and is covered by the
-# local differential harness (tools/verify_local.py) + pytest.
+# registry sweep (tests/test_registry_sweep.py) and the rest of pytest.
 
 # Head-composition gates, imported by the head test in
 # tests/test_plans.py.

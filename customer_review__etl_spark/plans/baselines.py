@@ -4,10 +4,12 @@
 baselines: oracle-exact, but their bucket count is a constant (64 / 8
 per band), so per-bucket occupancy grows linearly with the corpus and
 within-bucket candidate PAIRS grow quadratically — s02 was convicted
-at 472× wall for 30× data by the round-9 scale probe (SCALING.md), and
-s03 shares the shape. Their occupancy-adaptive twins are registered
-first-class queries (`s09_capped_lsh_neardup`, `s10_capped_ann`) and
-every former consumer has migrated (ml09 → s10 in round 10, s05 → s09
+at 472× wall for 30× data by the round-9 scale probe (0.86 s → 406 s
+over a 150 K-vector corpus), and s03 shares the shape (12.8× wall at
+10× data, its verify leg already the whole 63 s wall). Their
+occupancy-adaptive twins are registered first-class queries
+(`s09_capped_lsh_neardup`, `s10_capped_ann`) and every former
+consumer has migrated (ml09 → s10 in round 10, s05 → s09
 in round 15), so these two no longer spend registry slots a driver
 sample could reach.
 
@@ -18,8 +20,7 @@ remains executable:
   pins s09 ⊆ s03 with a recall floor; tests/test_round10_ops.py pins
   s10 == s02 below the caps; tests/test_differential_edges.py runs both
   against their DuckDB twins on the adversarial edge corpus);
-- SCALING.md records the scale-probe measurements behind the 472×
-  conviction (the probe script itself is in git history).
+- the scale probe behind the 472× conviction is in git history.
 
 Reference scope note: the reference repo has no ANN at all (its
 similarity surface is sklearn TF-IDF vectorization, cleaner.py:176,252);

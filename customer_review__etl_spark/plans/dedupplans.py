@@ -1041,7 +1041,8 @@ def d11_adaptive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d07 with OCCUPANCY-ADAPTIVE blocking-key LENGTH — d10's move
     applied to the containment operator, closing the round-15 probe
     finding that convicted d07 at scale: its organic 100× candidates
-    fell BELOW base (163,054 → 135,720, SCALING.md r15) because the
+    fell BELOW base (163,054 at sf0.1 → 135,720 at 100×, while d04's
+    grew 457,507 → 4,989,720) because the
     (lang, 3-gram) key space saturates — past saturation the fixed-
     length key silently loses recall while wall-clock stays flat.
 
@@ -1956,7 +1957,7 @@ def d09_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern): d09 consumes it twice (both endpoints) and `starts`
     # twice more downstream — without materialization Spark inlines
     # the whole d08 subplan once per consumption path (a 79-exchange
-    # plan tree, caught by tools/plan_audit.py round-11)
+    # plan tree, caught by the registry plan check in round 11)
     pairs = d08_pairs_m(spark, sf_dir)
     involved = (
         pairs.select(F.col("doc_a").alias("doc_id"))

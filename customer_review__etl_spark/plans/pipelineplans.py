@@ -539,7 +539,7 @@ def pl04_data_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pl04_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pl04's pre-packing stage (mixed → token counts), exposed so
-    tools/plan_audit.py can audit the upstream subplan that
+    tests/test_registry_sweep.py can check the upstream subplan that
     pack_sequences' localCheckpoint hides from the registered query's
     explain output (round-11 ADVICE #2)."""
     from .textplans import BPE_PATTERN
@@ -719,7 +719,7 @@ def pl05_data_recipe_excised(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pl05_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pl05's pre-packing stage; exposed for plan_audit like
+    """pl05's pre-packing stage; exposed for the plan check like
     _pl04_packed_in. Token counts are computed ON THE d09 SIDE before
     the id join (a narrow map over the cleaned relation), so the join
     that meets the mix carries only (doc_id, n_tokens) — document
@@ -889,7 +889,7 @@ def _pl06_packed_in_m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pl06_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pl06's pre-packing stage, exposed for plan_audit like its pl04
+    """pl06's pre-packing stage, exposed for the plan check like its pl04
     and pl05 siblings; _pl05_packed_in's shape with the unified
     survivor source."""
     from . import dedupplans

@@ -563,7 +563,7 @@ def p19_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _p19_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p19's pre-packing stage (scan → token counts), exposed so
-    tools/plan_audit.py can audit the upstream subplan that
+    tests/test_registry_sweep.py can check the upstream subplan that
     pack_sequences' localCheckpoint hides (round-11 ADVICE #2)."""
     from .textplans import BPE_PATTERN
 

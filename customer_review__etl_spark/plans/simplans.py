@@ -42,7 +42,6 @@ N_QUERIES = 16   # s01 brute-force query set: vec_id < 16
 TOPK = 5         # s01 neighbors per query
 ANN_PLANES = 6   # s02: 6 sign bits → 64 buckets
 ANN_TOPK = 3
-NEAR_BANDS = 2   # s03: 2 bands × 3 planes
 NEAR_COS = 0.4   # s03 near-pair threshold (matches testdata's top tail)
 
 
@@ -369,7 +368,7 @@ def _cascade_effective_depth(
 
 # The occupancy pre-scan is a full-corpus job, and s09/s10 are built
 # far more often than their corpus changes (every benchmark pass, every
-# explain-only plan_audit build, every oracle run in a sweep), so the
+# explain-only plan check, every oracle run in a sweep), so the
 # depth is a catalog-derived value (tables.derived): kept per corpus
 # identity, scanned again after a rewrite, never kept without one. The
 # caps are part of the kind: stress tests monkeypatch them, and the
@@ -459,7 +458,8 @@ S09_BUCKET_CAP = 200  # level-1 (band, bucket) occupancy refinement cap
 # ~0.69x recall on the pairs it touches (P[<=1-bit/3-plane
 # disagreement at cos 0.4]), so deployments tune the levels
 # independently - refine level N only where level N-1 is genuinely
-# saturated, one decade of corpus growth per level (SCALING.md).
+# saturated, one decade of corpus growth per level (at 30x data the
+# shipped depth 3 completes at 46-48x wall).
 S09_SUBBUCKET_CAP = 200
 # refinement levels below the band bucket. The round-10 30x probe
 # measured depth-2 at 69-78x wall (completing where depth-1 timed out
@@ -472,7 +472,7 @@ S09_MAX_DEPTH = 3
 
 def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s03 with OCCUPANCY-ADAPTIVE bucketing — the engineered answer to
-    the round-9 scale probe's finding (SCALING.md): s03's fixed 3-plane
+    the round-9 scale probe's finding: s03's fixed 3-plane
     bands give 8 buckets per band, so per-bucket occupancy grows
     linearly with the corpus and within-bucket candidate PAIRS grow
     quadratically (measured 12.8× wall at 10× data). Here any level-1
@@ -502,7 +502,7 @@ def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: explode to (vec_id, band, key) triples, hash equi-join,
     exact cosine ≥ NEAR_COS on candidates only.
 
-    GENERALIZED DEPTH (round-11 — SCALING.md's level-stacking rule as
+    GENERALIZED DEPTH (round-11 — the level-stacking rule as
     a LOOP, not hand-unrolled levels): the round-9 30× probe showed
     one 8-way refinement level buys one decade of corpus growth before
     its sub-buckets themselves exceed the cap, and the round-10 depth-2
@@ -780,7 +780,8 @@ def s09_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized s09 capped-LSH near-dup pair set — one occupancy-
     adaptive mining pass per process per corpus (consumer: s05 + its
     reps). Round-15: replaces the retired s03_pairs_m — s03's
-    fixed-plane miner (convicted quadratic, SCALING.md) is demoted to
+    fixed-plane miner (convicted quadratic: 12.8× wall at 10× data,
+    its verify leg the whole wall) is demoted to
     plans/baselines.py and s05 rides the scale-safe generator."""
     from .dedupplans import materialized_df
 
@@ -1051,7 +1052,8 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s02's sign-LSH ANN with OCCUPANCY-ADAPTIVE buckets — the s09
     construction applied to the ANN (directed top-k) shape, closing the
     round-9 probe's conviction of s02 (fixed 64 buckets → per-bucket
-    occupancy grows with the corpus → 472× wall at 30×, SCALING.md):
+    occupancy grows with the corpus → 472× wall at 30×, 0.86 s →
+    406 s):
     any bucket path whose occupancy exceeds S10_BUCKET_CAP splits 8
     ways on that level's planes (level lv →
     planes 3·lv+3 .. 3·lv+5, i.e. 6–8 then 9–11), and QUERIES in
@@ -1416,7 +1418,7 @@ SPECS = [
     # s02_ann_lsh / s03_embedding_neardup — the fixed-plane sign-LSH
     # baselines — were demoted to plans/baselines.py in round 15 (r14
     # VERDICT ask #4): both are convicted quadratics (s02: 472× wall at
-    # 30× data, SCALING.md) whose scale-safe twins s09/s10 are
+    # 30× data, 0.86 s → 406 s) whose scale-safe twins s09/s10 are
     # registered below. pytest keeps the oracle-matched baseline
     # comparison via baselines.BASELINE_SPECS.
     QuerySpec(

@@ -584,9 +584,6 @@ def _t15_core_sql() -> str:
 _T15_CORE = _t15_core_sql()
 
 
-T27_BUCKETS = ("head", "middle", "tail")  # CCNet rank thirds
-
-
 def t27_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM-quality bucketing (Wenzek et al. 2020, the
     perplexity-stratification step of CommonCrawl curation): score

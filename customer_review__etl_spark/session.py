@@ -68,8 +68,8 @@ _RUNTIME_CONFS: dict[str, str] = {
 # warm round or sweep compiles only plan variants it has not met yet
 # (AQE numbers codegen stages, and the number is in the class name): 192
 # classes on the second sweep, 36-57 on the third to fifth. 4096 is the
-# smallest power of two above the whole registry, which tier-1 and
-# verify_local run in one JVM (1,024 would thrash there). Cost after
+# smallest power of two above the whole registry, which tier-1's
+# registry sweep runs in one JVM (1,024 would thrash there). Cost after
 # one registry sweep: heap after GC 438 MB against 363 MB, metaspace
 # 266 against 245 MB.
 CODEGEN_CACHE_ENTRIES = 4096

@@ -9,11 +9,13 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 
 import duckdb
 import pytest
 
 from customer_review__etl_spark.plans import all_queries
+from customer_review__etl_spark.sources.tables import TABLE_NAMES
 
 EDGE_DOCS = [
     (0, "plain lowercase words here", "en", "web", 26),
@@ -217,6 +219,35 @@ def _multiset(cols, rows):
         (tuple(_norm(r[i]) for i in order) for r in rows),
         key=lambda t: tuple(str(x) for x in t),
     )
+
+
+def duck_views(sf_dir, tables=TABLE_NAMES):
+    """A DuckDB connection with one view per table under `sf_dir`.
+
+    A table is one parquet file (the driver's layout) or a directory of
+    part files (fixtures written by Spark). The driver has shipped both
+    physical events.ts layouts (epoch nanos-long and timestamp[us]), so
+    branch on the observed type exactly like sources/tables.py before
+    applying the nanos rewrite."""
+    con = duckdb.connect()
+    for t in tables:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        src = f"SELECT * FROM '{path}'"
+        if t == "events":
+            (ts_type,) = [
+                r[1]
+                for r in con.execute(f"DESCRIBE {src}").fetchall()
+                if r[0] == "ts"
+            ]
+            if ts_type == "BIGINT":
+                src = (
+                    "SELECT * REPLACE (make_timestamp(ts // 1000) AS ts) "
+                    f"FROM ({src})"
+                )
+        con.execute(f"CREATE VIEW {t} AS {src}")
+    return con
 
 
 _TS = datetime.datetime(2024, 1, 1, 0, 0, 0)
@@ -426,26 +457,7 @@ def _compare(spark, sf_dir, name, view):
     sdf = spec.fn(spark, sf_dir)
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
 
-    con = duckdb.connect()
-    views = [view] if isinstance(view, str) else view
-    for v in views:
-        src = f"SELECT * FROM '{sf_dir}/{v}.parquet/*.parquet'"
-        if v == "events":
-            # The driver has shipped both physical ts layouts (epoch
-            # nanos-long and timestamp[us]); fixtures deliberately use
-            # both, so branch on the observed type exactly like
-            # sources/tables.py:47 before applying the nanos rewrite.
-            (ts_type,) = [
-                r[1]
-                for r in con.execute(f"DESCRIBE {src}").fetchall()
-                if r[0] == "ts"
-            ]
-            if ts_type == "BIGINT":
-                src = (
-                    "SELECT * REPLACE (make_timestamp(ts // 1000) AS ts) "
-                    f"FROM ({src})"
-                )
-        con.execute(f"CREATE VIEW {v} AS {src}")
+    con = duck_views(sf_dir, [view] if isinstance(view, str) else view)
     cur = con.execute(spec.oracle)
     ocols = [c[0] for c in cur.description]
     orows = cur.fetchall()

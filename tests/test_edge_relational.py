@@ -12,12 +12,11 @@ from __future__ import annotations
 
 import datetime
 
-import duckdb
 import pytest
 
 from customer_review__etl_spark.plans import all_queries
 
-from test_differential_edges import _multiset
+from test_differential_edges import _multiset, duck_views
 
 _D = datetime.datetime
 
@@ -123,14 +122,11 @@ def hostile_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(hostile_dir):
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM '{hostile_dir}/{t}.parquet/*.parquet'"
-        )
-    return con
+    return duck_views(
+        hostile_dir,
+        ("region", "nation", "customer", "supplier", "part", "orders",
+         "lineitem"),
+    )
 
 
 @pytest.mark.parametrize("name", RELATIONAL_QUERIES)

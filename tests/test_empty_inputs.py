@@ -9,14 +9,13 @@ nothing is an everyday event, not an edge case.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from customer_review__etl_spark.plans import all_queries
 from customer_review__etl_spark.sources.tables import TABLE_NAMES
 
 from conftest import SF_DIR
-from test_differential_edges import _multiset
+from test_differential_edges import _multiset, duck_views
 
 # Streaming queries execute jobs at build time; they get their own test.
 _STREAMING = {"st04_stream_tumbling", "st05_stream_dedup",
@@ -37,26 +36,7 @@ def empty_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(empty_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        src = f"SELECT * FROM '{empty_dir}/{t}.parquet/*.parquet'"
-        if t == "events":
-            # Branch on the fixture's physical ts type (mirrors
-            # sources/tables.py:47): the nanos-long rewrite applies only
-            # when the file really stores a BIGINT — the driver's layout
-            # has stored both units across rounds.
-            (ts_type,) = [
-                r[1]
-                for r in con.execute(f"DESCRIBE {src}").fetchall()
-                if r[0] == "ts"
-            ]
-            if ts_type == "BIGINT":
-                src = (
-                    "SELECT * REPLACE (make_timestamp(ts // 1000) AS ts) "
-                    f"FROM ({src})"
-                )
-        con.execute(f"CREATE VIEW {t} AS {src}")
-    return con
+    return duck_views(empty_dir)
 
 
 _ORACLE_QUERIES = sorted(

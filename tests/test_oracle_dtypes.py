@@ -16,9 +16,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from customer_review__etl_spark.sources.tables import TABLE_NAMES
-
 from conftest import SF_DIR
+from test_differential_edges import duck_views
 
 # Types whose wire/serialized form diverges from any Spark output type:
 # HUGEINT/UHUGEINT have no Spark twin; DECIMAL would pair with Spark
@@ -28,11 +27,7 @@ _BANNED = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 

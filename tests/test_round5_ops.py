@@ -1,6 +1,6 @@
 """Invariant tests for the round-5 operators (t13 surprisal, w07 SCD2,
 s06 PQ-ANN). Differential equality vs DuckDB is covered by
-tools/verify_local.py / the driver gate; these pin the semantic
+tests/test_registry_sweep.py / the driver gate; these pin the semantic
 properties a hash can't explain."""
 
 from __future__ import annotations

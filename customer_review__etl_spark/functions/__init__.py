@@ -7,7 +7,7 @@ from .text import (
     token_count,
     tokens,
 )
-from .vectors import cosine_similarity, dot, l2_norm
+from .vectors import dot, l2_norm
 
 __all__ = [
     "STOPWORDS",
@@ -17,7 +17,6 @@ __all__ = [
     "quality_score_cols",
     "token_count",
     "tokens",
-    "cosine_similarity",
     "dot",
     "l2_norm",
 ]

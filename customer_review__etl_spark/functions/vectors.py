@@ -27,34 +27,21 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity with an explicit zero-norm rule: 0.0, not NULL.
-
-    Without the guard a zero vector divides by zero, which (ANSI off)
-    silently yields NULL and drops rows from similarity joins. The
-    DuckDB oracle twin mirrors the same rule.
-
-    The result is clamped to [-1, 1]: identical vectors can produce
-    1.0000000000000002 from the raw fold (float round-off), which is
-    out of range and diverges from DuckDB's clamped
-    list_cosine_similarity.
-    """
-    denom = l2_norm(a) * l2_norm(b)
-    raw = F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-    return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), raw))
-
-
 def cosine_from_norms(
     a: Column, b: Column, nrm_a: Column, nrm_b: Column
 ) -> Column:
-    """cosine_similarity with both L2 norms precomputed per INPUT row
+    """Cosine similarity with both L2 norms precomputed per INPUT row
     (before the candidate join), so per-pair work drops from three
     O(d) folds to one dot product — the scale path for similarity
     joins, where each vector appears in many candidate pairs.
 
-    Bit-identical to cosine_similarity: the same sqrt-of-fold values
-    multiplied in the same order, just evaluated once per row instead
-    of once per pair."""
+    Zero-norm rule: 0.0, not NULL. Without the guard a zero vector
+    divides by zero, which (ANSI off) silently yields NULL and drops
+    rows from similarity joins; the DuckDB oracle twins mirror the
+    same rule. The result is clamped to [-1, 1]: identical vectors can
+    produce 1.0000000000000002 from the raw fold (float round-off),
+    which is out of range and diverges from DuckDB's clamped
+    list_cosine_similarity."""
     denom = nrm_a * nrm_b
     raw = F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
     return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), raw))

@@ -513,13 +513,6 @@ def gram_arrays_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _d04_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded view of _d04_gram_arrays: (doc_id, lang, lbucket, g)."""
-    return _d04_gram_arrays(spark, sf_dir).select(
-        "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
-    )
-
-
 def _capped_gram_groups(
     grams: DataFrame,
     df_cap: int | None,

@@ -1,19 +1,12 @@
 """Cross-engine deterministic numeric helpers.
 
 The driver value-hashes Spark output against DuckDB output, so floating
-point must be bit-identical. Two rules make that true:
-
-1. **Integer-exact money sums**: monetary columns carry ≤2 decimals, so
-   `round(x*100)` is the exact integer of cents; summing longs is exact
-   and order-independent; one final division by a power of ten is a
-   single deterministic IEEE op. Engine-level SUM(double) would depend
-   on partial-aggregation order and differ in the last bits.
-
-2. **floor-scaling instead of round()**: `floor(x*1e6 + 0.5)/1e6` uses
-   only IEEE-exact ops (multiply, add, floor, divide) so every engine
-   computes the same double, whereas round() half-up/half-even behavior
-   differs across engines on exact-half values (which dyadic floats do
-   hit, e.g. 2^-7 = 0.0078125).
+point must be bit-identical. Integer-exact money sums make that true:
+monetary columns carry ≤2 decimals, so `round(x*100)` is the exact
+integer of cents; summing longs is exact and order-independent; one
+final division by a power of ten is a single deterministic IEEE op.
+Engine-level SUM(double) would depend on partial-aggregation order and
+differ in the last bits.
 """
 
 from __future__ import annotations
@@ -31,20 +24,6 @@ def cents(col: Column) -> Column:
 
 def sql_cents(expr: str) -> str:
     return f"CAST(round(({expr}) * 100) AS BIGINT)"
-
-
-def floor6(col: Column) -> Column:
-    """Deterministic 6-decimal quantization (see module docstring).
-
-    Domain: |x| ≤ ~9.2e12 — Spark's floor() returns LONG, so x*1e6
-    beyond int64 overflows (DuckDB's floor stays DOUBLE and silently
-    diverges there). Callers only quantize ratio/cosine-scale values;
-    tests/test_determinism_corpus.py pins the in-domain contract."""
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
-def sql_floor6(expr: str) -> str:
-    return f"(floor(({expr}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 def scaled(col: Column, decimals: int) -> Column:

@@ -31,6 +31,11 @@ from ..sources import sinks, tables
 from ..sources.pyds import PYDS_MOD, PYDS_MULT, PYDS_ROWS
 from . import QuerySpec
 from .helpers import cents, scaled, sql_cents, sql_scaled
+from .manifestio import (
+    io15_commit_snapshot,
+    io15_latest_version,
+    manifest_files,
+)
 
 _NATION_SCHEMA = "n_nationkey INT, n_name STRING, n_regionkey INT"
 
@@ -444,10 +449,9 @@ def io15_write_snapshots(spark: SparkSession, sf_dir: str, root: str):
     v1 = {A, B} (initial load), v2 = {A, B, C} (append), v3 = {A, C}
     (B deleted). Data files are immutable; each commit is one tiny
     JSON manifest naming its file set — the Iceberg/Delta snapshot
-    model reduced to its essence. Returns the physical schema."""
-    import json
-    import os
-
+    model reduced to its essence. Every version lands through the
+    optimistic commit (manifestio.io15_commit_snapshot), the protocol
+    tests/test_io15_concurrency.py races. Returns the physical schema."""
     src = tables.load(spark, sf_dir, "orders").select(
         "o_orderkey", cents(F.col("o_totalprice")).alias("price_cents")
     )
@@ -458,25 +462,11 @@ def io15_write_snapshots(spark: SparkSession, sf_dir: str, root: str):
             src.filter(F.col("o_orderkey") % IO15_SLICE_MOD == residue), p
         )
         paths[name] = p
-    snapshots = {1: ["a", "b"], 2: ["a", "b", "c"], 3: ["a", "c"]}
-    os.makedirs(f"{root}/manifests", exist_ok=True)
-    for v, names in snapshots.items():
-        with open(f"{root}/manifests/v{v}.json", "w") as fh:
-            json.dump(
-                {"version": v, "files": [paths[n] for n in names]}, fh
-            )
+    for names in (["a", "b"], ["a", "b", "c"], ["a", "c"]):
+        io15_commit_snapshot(
+            root, [paths[n] for n in names], io15_latest_version(root)
+        )
     return src.schema
-
-
-# The commit protocol itself is Spark-free metadata plumbing; it lives
-# in manifestio.py so writer processes (and the multi-process race test)
-# can import it without a pyspark runtime. Re-exported here unchanged.
-from .manifestio import (  # noqa: E402  (re-export)
-    CommitConflict,
-    io15_commit_snapshot,
-    io15_latest_version,
-    io15_vacuum,
-)
 
 
 def io15_read_snapshot(spark: SparkSession, root: str, version: int, schema):
@@ -488,11 +478,7 @@ def io15_read_snapshot(spark: SparkSession, root: str, version: int, schema):
     manifest swap, and readers of old versions keep a consistent
     file set. (Production formats shard the manifest itself into
     avro manifest-lists; one JSON per commit is the same plane.)"""
-    import json
-
-    with open(f"{root}/manifests/v{version}.json") as fh:
-        files = json.load(fh)["files"]
-    return spark.read.schema(schema).parquet(*files)
+    return spark.read.schema(schema).parquet(*manifest_files(root, version))
 
 
 def io15_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,21 +1,19 @@
 """io15's manifest/commit protocol — deliberately Spark-free.
 
 The snapshot-table control plane (latest-version resolution, the
-optimistic O_EXCL commit, vacuum) is pure metadata: on a cluster it is
+optimistic commit, the manifest read) is pure metadata: on a cluster it is
 a conditional put against an object store, here plain filesystem calls.
 Keeping it in a module with no pyspark import means writer processes
 (and the multi-process race test) can exercise the REAL protocol
-without dragging a Spark runtime into every participant.
-
-ioplans re-exports these names; plan code keeps importing them from
-there."""
+without dragging a Spark runtime into every participant. io15's
+registry query commits and reads its snapshots through this module.
+"""
 
 from __future__ import annotations
 
 import json
 import os
 import re
-import shutil
 import uuid
 
 
@@ -74,33 +72,6 @@ def io15_commit_snapshot(root: str, files: list[str],
     finally:
         os.unlink(tmp)
     return v
-
-
-def io15_vacuum(root: str, keep_from_version: int) -> list[str]:
-    """VACUUM: delete data files referenced by NO manifest at or after
-    `keep_from_version` — the orphan-file GC every snapshot table needs
-    once old versions expire (time travel keeps files alive; retention
-    ends it). The referenced set is the union of the kept manifests'
-    file lists — an O(#manifests · files-per-manifest) metadata scan,
-    never a data scan; at scale this is a distributed join between the
-    file listing and the manifest union, same semantics. Returns the
-    deleted paths. Reads at vacuumed-away versions fail afterwards BY
-    DESIGN — that is what retention means; kept versions are untouched
-    (pinned by the vacuum test)."""
-    kept: set[str] = set()
-    for n in os.listdir(f"{root}/manifests"):
-        m = re.fullmatch(r"v(\d+)\.json", n)
-        if m and int(m.group(1)) >= keep_from_version:
-            with open(f"{root}/manifests/{n}") as fh:
-                kept.update(json.load(fh)["files"])
-    deleted = []
-    data_dir = f"{root}/data"
-    for name in sorted(os.listdir(data_dir)):
-        path = f"{data_dir}/{name}"
-        if path not in kept:
-            shutil.rmtree(path)
-            deleted.append(path)
-    return deleted
 
 
 def manifest_files(root: str, version: int) -> list[str]:

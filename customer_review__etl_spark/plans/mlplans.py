@@ -124,8 +124,9 @@ _KM_D2 = (
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings quantized to integer fixed-point (1e-6 resolution):
-    floor(v*1e6 + 0.5) uses only IEEE-exact ops, so both engines build
-    the identical integer vectors (plans/helpers.py rule 2)."""
+    floor(v*1e6 + 0.5) uses only IEEE-exact ops (multiply, add, floor),
+    so both engines build the identical integer vectors, where round()
+    would differ across engines on exact halves."""
     return tables.load_parallel(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(

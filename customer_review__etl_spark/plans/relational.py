@@ -1198,6 +1198,26 @@ def j13_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefiltered stream. With a ~1/5-selective dim, ~80 % of the fact
     shuffle disappears (tests/test_round8_ops.py pins prefilter
     selectivity and result-exactness)."""
+    c_keys, pre = _j13_prefiltered(spark, sf_dir)
+    exact = pre.join(
+        c_keys, pre.o_custkey == c_keys.c_custkey, "left_semi"
+    )
+    return (
+        exact.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("tc").alias("revenue_cents"),
+        )
+        .orderBy("o_orderpriority")
+    )
+
+
+def _j13_prefiltered(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """j13's dim key set and the fact stream its bloom lets through,
+    BEFORE the exact semi join: (BUILDING c_custkey, bloom-probed
+    orders). The selectivity test counts this stream."""
     c_keys = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -1224,47 +1244,7 @@ def j13_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderpriority", cents(F.col("o_totalprice")).alias("tc")
     )
     pre = o.crossJoin(F.broadcast(bloom)).filter(F.expr(probe)).drop("bf")
-    exact = pre.join(
-        c_keys, pre.o_custkey == c_keys.c_custkey, "left_semi"
-    )
-    return (
-        exact.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("tc").alias("revenue_cents"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-def _j13_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bloom-prefiltered fact stream BEFORE the exact semi join —
-    exposed for the selectivity test only (the operator's whole value
-    is measurable here)."""
-    c_keys = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    bit = lambda key, s: f"pmod(xxhash64({key}, {s}), {J13_M})"  # noqa: E731
-    bits = c_keys.select(
-        F.explode(
-            F.array(*[F.expr(bit("c_custkey", s)) for s in J13_SEEDS])
-        ).alias("bit")
-    )
-    words = bits.groupBy(F.expr("bit DIV 64").alias("w")).agg(
-        F.expr("bit_or(shiftleft(1L, CAST(bit % 64 AS INT)))").alias("m")
-    )
-    bloom = words.agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "m"))).alias("bf")
-    )
-    probe = " AND ".join(
-        f"((coalesce(element_at(bf, {bit('o_custkey', s)} DIV 64), 0L)"
-        f" >> CAST({bit('o_custkey', s)} % 64 AS INT)) & 1L) = 1L"
-        for s in J13_SEEDS
-    )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return o.crossJoin(F.broadcast(bloom)).filter(F.expr(probe)).drop("bf")
+    return c_keys, pre
 
 
 _J13_SQL = f"""

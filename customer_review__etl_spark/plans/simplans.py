@@ -20,9 +20,11 @@ Scale notes:
 - s01 broadcasts the tiny query side over the candidate scan: one
   map-side pass, no shuffle of the big side; the top-k window
   partitions by query id (small state per partition).
-- s02/s03 shuffle on the integer bucket key only — the classic
+- the LSH plans shuffle on the integer bucket key only — the classic
   sign-LSH partitioning; recall is the standard LSH trade and the
   oracle implements the identical buckets, so the check is exact.
+  s09/s10 cap bucket occupancy; the fixed-bucket s02/s03 they replace
+  were deleted, and their DuckDB forms remain the tests' reference.
 - at 100 TB: more planes/bands + multiprobe, and pre-normalized
   vectors to halve the per-pair cost; the plan shape is unchanged.
 """
@@ -40,9 +42,9 @@ from .helpers import cache_slot, sql_cc_min_label
 
 N_QUERIES = 16   # s01 brute-force query set: vec_id < 16
 TOPK = 5         # s01 neighbors per query
-ANN_PLANES = 6   # s02: 6 sign bits → 64 buckets
+ANN_PLANES = 6   # s07/s10: 6 sign bits → 64 buckets
 ANN_TOPK = 3
-NEAR_COS = 0.4   # s03 near-pair threshold (matches testdata's top tail)
+NEAR_COS = 0.4   # s09 near-pair threshold (matches testdata's top tail)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,117 +127,6 @@ def s01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOPK)
         .select("q_id", "n_id", "cos", "rn")
-    )
-
-
-def s02_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN: 6 hyperplane sign bits → 64 buckets; exact cosine
-    top-3 within each query's bucket. The scale path for s01."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "embedding", "nrm", _bucket_col(ANN_PLANES).alias("bucket")
-    )
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-        F.col("bucket").alias("n_bucket"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "n_id")
-    # the neighbor side carries the full corpus embeddings - never
-    # broadcastable at scale; pinned sort-merge (round-12 audit)
-    return (
-        q.join(
-            c.hint("merge"),
-            (F.col("q_bucket") == F.col("n_bucket"))
-            & (F.col("q_id") != F.col("n_id")),
-        )
-        .select(
-            "q_id",
-            "n_id",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("n_emb"),
-                F.col("q_nrm"), F.col("n_nrm"),
-            ).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ANN_TOPK)
-        .select("q_id", "n_id", "cos", "rn")
-    )
-
-
-def s03_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: candidates share ≥1 of
-    2 LSH bands (3 planes each), verified by exact cosine ≥ 0.4.
-
-    Candidates come from a hash equi-join on the exploded
-    (band_idx, bucket) key — an OR-of-band-equalities join condition
-    would force an all-pairs nested loop. Only (vec_id, band, bucket)
-    triples are shuffled for candidate generation; the 64-dim vectors
-    are joined back solely for the per-candidate cosine check."""
-    emb = cache_slot(
-        "s03",
-        _emb(spark, sf_dir).select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            _bucket_col(3, first_plane=0).alias("band0"),
-            _bucket_col(3, first_plane=3).alias("band1"),
-        ),
-    )
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.col("band0").alias("bv")),
-                F.struct(F.lit(1).alias("band"), F.col("band1").alias("bv")),
-            )
-        ).alias("e"),
-    ).select("vec_id", "e.band", "e.bv")
-    b2 = bands.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("band").alias("band_b"),
-        F.col("bv").alias("bv_b"),
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bv") == F.col("bv_b"))
-            & (F.col("vec_id") < F.col("vec_b")),
-        )
-        .select(F.col("vec_id").alias("vec_a"), "vec_b")
-        .distinct()
-    )
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    # exact-verify joins against the corpus embedding table: the
-    # embedding sides must never broadcast (round-12 audit pin)
-    return (
-        cand.join(ea.hint("merge"), "vec_a")
-        .join(eb.hint("merge"), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            cosine_from_norms(
-                F.col("emb_a"), F.col("emb_b"),
-                F.col("nrm_a"), F.col("nrm_b"),
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= NEAR_COS)
     )
 
 
@@ -781,8 +672,8 @@ def s09_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptive mining pass per process per corpus (consumer: s05 + its
     reps). Round-15: replaces the retired s03_pairs_m — s03's
     fixed-plane miner (convicted quadratic: 12.8× wall at 10× data,
-    its verify leg the whole wall) is demoted to
-    plans/baselines.py and s05 rides the scale-safe generator."""
+    its verify leg the whole wall) is gone and s05 rides the
+    scale-safe generator."""
     from .dedupplans import materialized_df
 
     return materialized_df(
@@ -801,8 +692,8 @@ def s05_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint/shingle signal can do.
 
     Pair source (round-15): s09's occupancy-adaptive capped LSH — the
-    scale-safe miner — not the demoted fixed-plane s03 (see
-    plans/baselines.py). Below the caps s09's candidate set is
+    scale-safe miner — not the deleted fixed-plane s03. Below the
+    caps s09's candidate set is
     bit-identical to s03's, so fixture-scale clusters are unchanged;
     at crowded-bucket scales s05 inherits s09's bounded fan-out
     instead of s03's quadratic.
@@ -1011,33 +902,6 @@ def _cos(a: str, b: str) -> str:
     return _SQL_COS.format(a=a, b=b)
 
 
-def _s02_sql() -> str:
-    """The full s02 ANN query — shared verbatim by the s02 spec and
-    ml09's kNN-vote oracle (the _s03_pairs_sql sharing pattern) so the
-    candidate semantics can never drift between the two."""
-    return f"""
-        WITH e AS (
-          SELECT vec_id, embedding, embedding::DOUBLE[] AS v,
-                 {_sql_bucket(ANN_PLANES)} AS bucket
-          FROM embeddings
-        ),
-        pairs AS (
-          SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-                 {_cos('q.v', 'c.v')} AS cos
-          FROM e q JOIN e c
-            ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-          SELECT q_id, n_id, cos,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY cos DESC, n_id) AS rn
-          FROM pairs
-        )
-        SELECT q_id, n_id, cos, CAST(rn AS BIGINT) AS rn
-        FROM ranked WHERE rn <= {ANN_TOPK}
-        """
-
-
 S10_BUCKET_CAP = 200  # occupancy cap, gating EVERY refinement level
 # refinement levels below the 64-way bucket (the s09 loop on the
 # directed shape). The round-10 30x probe measured the hand-unrolled
@@ -1172,11 +1036,11 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _s10_sql(cap: int | None = None, depth: int | None = None) -> str:
     """The full s10 capped-ANN query — shared verbatim by the s10 spec
-    and ml09's kNN-vote oracle (the _s02_sql sharing pattern) so the
-    candidate semantics can never drift; `cap` parameterized so edge
-    tests differentially exercise the refined + multiprobe path, and
-    `depth` so tests can pin that a deeper level only prunes. Generated
-    by the SAME per-level loop as the Spark plan."""
+    and ml09's kNN-vote oracle so the candidate semantics can never
+    drift; `cap` parameterized so edge tests differentially exercise
+    the refined + multiprobe path, and `depth` so tests can pin that a
+    deeper level only prunes. Generated by the SAME per-level loop as
+    the Spark plan."""
     if cap is None:
         cap = S10_BUCKET_CAP
     D = S10_MAX_DEPTH if depth is None else depth
@@ -1249,26 +1113,6 @@ def _s10_sql(cap: int | None = None, depth: int | None = None) -> str:
         SELECT q_id, n_id, cos, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= {ANN_TOPK}
         """
-
-
-def _s03_pairs_sql() -> str:
-    """The s03 near-dup pair set WITHOUT the final ORDER BY — shared
-    verbatim by the s03 spec and s05's recursive closure so the two
-    oracles can never drift."""
-    return f"""
-        WITH e AS (
-          SELECT vec_id, embedding, embedding::DOUBLE[] AS v,
-                 {_sql_bucket(3, 0)} AS band0,
-                 {_sql_bucket(3, 3)} AS band1
-          FROM embeddings
-        )
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               {_cos('a.v', 'b.v')} AS cos
-        FROM e a JOIN e b
-          ON (a.band0 = b.band0 OR a.band1 = b.band1)
-         AND a.vec_id < b.vec_id
-        WHERE {_cos('a.v', 'b.v')} >= {NEAR_COS}
-    """
 
 
 _S05_SQL = f"""
@@ -1415,12 +1259,6 @@ SPECS = [
         FROM ranked WHERE rn <= {TOPK}
         """,
     ),
-    # s02_ann_lsh / s03_embedding_neardup — the fixed-plane sign-LSH
-    # baselines — were demoted to plans/baselines.py in round 15 (r14
-    # VERDICT ask #4): both are convicted quadratics (s02: 472× wall at
-    # 30× data, 0.86 s → 406 s) whose scale-safe twins s09/s10 are
-    # registered below. pytest keeps the oracle-matched baseline
-    # comparison via baselines.BASELINE_SPECS.
     QuerySpec(
         "s04_ivf_ann",
         s04_ivf_ann,

@@ -11,8 +11,7 @@ Scale notes:
   happens map-side. Sliding windows multiply rows by
   (length/slide) = 2 here — explicit, bounded amplification.
 - session windows shuffle on user_id; per-user state is one open
-  session (the 30-min gap bounds it); the streaming form holds
-  O(active sessions) state under the 1-hour watermark.
+  session (the 30-min gap bounds it).
 """
 
 from __future__ import annotations

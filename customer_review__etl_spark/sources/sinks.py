@@ -91,7 +91,3 @@ def write_metrics_json(
 def save_model(model: PipelineModel, path: str) -> None:
     """S8: MLWriter directory format (replaces joblib, cleaner.py:275-286)."""
     model.write().overwrite().save(path)
-
-
-def load_model(path: str) -> PipelineModel:
-    return PipelineModel.load(path)

@@ -140,21 +140,6 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def session_counts(events: DataFrame) -> DataFrame:
-    """Per-user session windows (30-minute inactivity gap)."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n",
-        )
-    )
-
-
 def dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Streaming dedup on (user_id, event_type) with bounded state:
     duplicates arriving within the watermark horizon are dropped.

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.ml import PipelineModel
 
 from customer_review__etl_spark.app.pipeline import run_pipeline
 from customer_review__etl_spark.sources import sinks
@@ -43,7 +44,7 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
         on_disk = json.load(f)
     assert on_disk["accuracy"] == m["accuracy"]
 
-    model = sinks.load_model(out["model_path"])
+    model = PipelineModel.load(out["model_path"])
     assert len(model.stages) == 4
 
     # S5 publish: reference-DAG key layout, readable back from the store

@@ -80,7 +80,9 @@ def test_d04_rare_gram_cap_shrinks_candidates(spark, tmp_path):
     d = str(tmp_path / "mini4")
     df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
-    grams = D._d04_grams(spark, d).cache()
+    grams = D._d04_gram_arrays(spark, d).select(
+        "doc_id", "lang", "lbucket", F.explode("grams").alias("g")
+    ).cache()
     uncapped = D._d04_candidates(grams, None).count()
     capped = D._d04_candidates(grams, 10).count()
     # 20 identical common docs → C(20,2)=190 uncapped candidates from

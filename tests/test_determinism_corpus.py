@@ -1,5 +1,5 @@
 """Cross-engine determinism property corpus: the helpers contract
-(plans/helpers.py) claims cents/floor6/scaled produce BIT-IDENTICAL
+(plans/helpers.py) claims cents/scaled produce BIT-IDENTICAL
 results on Spark and DuckDB for every representable input. The hash
 gate exercises them only on benign corpus values; this module feeds
 the adversarial set — exact dyadic halves (where round() semantics
@@ -20,21 +20,18 @@ from pyspark.sql import functions as F
 
 from customer_review__etl_spark.plans.helpers import (
     cents,
-    floor6,
     scaled,
     sql_cents,
-    sql_floor6,
     sql_scaled,
 )
 
-# exact dyadic halves: x*100 or x*1e6 lands on .5 exactly — the values
+# exact dyadic halves: x*10^k lands on .5 exactly — the values
 # where HALF_UP vs HALF_EVEN vs away-from-zero disagree
 _DYADIC = [0.125, -0.125, 1.125, -1.125, 2.375, -2.375, 0.0078125,
            -0.0078125, 0.5, -0.5, 0.25, -0.25]
 # money-shaped two-decimal values incl. the classic 2.675 (whose double
 # is just BELOW 2.675, so cents must be 267 on BOTH engines, not 268)
-# magnitudes stay within floor6's documented |x| ≤ ~9.2e12 domain
-# (Spark floor() → LONG overflows past it; see plans/helpers.py)
+# magnitudes stay within |x| ≤ ~9.2e12, whose scaled forms fit int64
 _MONEY = [2.675, -2.675, 0.005, -0.005, 0.015, 99.995, 1e9 + 0.25,
           0.01, -0.01, 123.45, -123.45, 0.0, 9e12 + 0.07]
 # in-domain extremes only: the helpers' contract covers values whose
@@ -57,10 +54,9 @@ def _corpus():
     "col_fn,sql_fn",
     [
         (cents, sql_cents),
-        (floor6, sql_floor6),
         (lambda c: scaled(c, 4), lambda e: sql_scaled(e, 4)),
     ],
-    ids=["cents", "floor6", "scaled4"],
+    ids=["cents", "scaled4"],
 )
 def test_helper_bit_identical_across_engines(spark, col_fn, sql_fn):
     vals = _corpus()

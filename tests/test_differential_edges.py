@@ -376,15 +376,15 @@ EDGE_EMBEDDINGS = (
     + [(i, _ramp(i), i % 3) for i in range(8, 40)]
 )
 
-EMB_ONLY_QUERIES = ["s01_cosine_topk", "s02_ann_lsh", "s03_embedding_neardup",
+EMB_ONLY_QUERIES = ["s01_cosine_topk",
                     "s04_ivf_ann", "s05_semantic_clusters", "s06_pq_ann",
                     "s07_multiprobe_ann", "ml06_kmeans", "ml09_knn_label",
                     # round-9: occupancy-adaptive LSH — zero vector and
                     # exact-duplicate embeddings pin the sentinel /
-                    # refinement key paths (tiny buckets: must equal s03)
+                    # refinement key paths (tiny buckets: no bucket refines)
                     "s09_capped_lsh_neardup",
-                    # round-10: occupancy-capped ANN (dormant caps must
-                    # make it s02 exactly on the tiny edge corpus)
+                    # round-10: occupancy-capped ANN (dormant caps on the
+                    # tiny edge corpus)
                     "s10_capped_ann"]
 
 
@@ -449,11 +449,7 @@ def edge_hybrid_dir(spark, tmp_path_factory):
 def _compare(spark, sf_dir, name, view):
     """Assert the query matches its oracle; return the oracle's rows
     as a multiset."""
-    # demoted baselines (s02/s03, plans/baselines.py) keep their edge
-    # differential coverage even though they left the registry (r15)
-    from customer_review__etl_spark.plans.baselines import baseline_queries
-
-    spec = {**all_queries(), **baseline_queries()}[name]
+    spec = all_queries()[name]
     sdf = spec.fn(spark, sf_dir)
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
 

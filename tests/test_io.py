@@ -12,10 +12,7 @@ from customer_review__etl_spark.plans.ioplans import (
 )
 
 from conftest import SF_DIR
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from test_plans import _plan
 
 
 def test_bucketed_join_has_no_exchange(spark):

@@ -7,9 +7,49 @@ from __future__ import annotations
 import duckdb
 
 from customer_review__etl_spark.plans import mlplans, simplans
+from customer_review__etl_spark.plans.simplans import (
+    ANN_PLANES,
+    ANN_TOPK,
+    _cos,
+    _sql_bucket,
+)
+
+from test_differential_edges import duck_views
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
+
+
+def _s02_sql() -> str:
+    """s02, the fixed-bucket sign-LSH ANN that s07 and s10 refine, as
+    DuckDB SQL: exact cosine top-ANN_TOPK within each query's 64-way
+    bucket. The reference the s07/s10 recall tests compare against."""
+    return f"""
+        WITH e AS (
+          SELECT vec_id, embedding, embedding::DOUBLE[] AS v,
+                 {_sql_bucket(ANN_PLANES)} AS bucket
+          FROM embeddings
+        ),
+        pairs AS (
+          SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+                 {_cos('q.v', 'c.v')} AS cos
+          FROM e q JOIN e c
+            ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
+        ),
+        ranked AS (
+          SELECT q_id, n_id, cos,
+                 row_number() OVER (PARTITION BY q_id
+                                    ORDER BY cos DESC, n_id) AS rn
+          FROM pairs
+        )
+        SELECT q_id, n_id, cos, CAST(rn AS BIGINT) AS rn
+        FROM ranked WHERE rn <= {ANN_TOPK}
+        """
+
+
+def s02_rows(sf_dir: str) -> list[tuple]:
+    """(q_id, n_id, cos, rn) rows of _s02_sql over `sf_dir`."""
+    return duck_views(sf_dir, ["embeddings"]).execute(_s02_sql()).fetchall()
 
 
 def test_s10_equals_s02_below_cap(spark):
@@ -17,7 +57,7 @@ def test_s10_equals_s02_below_cap(spark):
     sentinel sub-key makes s10 bit-identical to s02 — which is exactly
     why ml09's vote semantics survive the migration unchanged at
     oracle-checked scales."""
-    s02 = {tuple(r) for r in simplans.s02_ann_lsh(spark, SF01).collect()}
+    s02 = set(s02_rows(SF01))
     s10 = {tuple(r) for r in simplans.s10_capped_ann(spark, SF01).collect()}
     assert s10 == s02
 
@@ -73,7 +113,7 @@ def test_s10_stress_cap_keeps_neighbor_recall(spark, monkeypatch):
     only shrink (refinement splits buckets), so rank-k membership can
     only move toward worse neighbors — recall is the one number that
     matters."""
-    s02 = {(r.q_id, r.n_id) for r in simplans.s02_ann_lsh(spark, SF01).collect()}
+    s02 = {(q, n) for q, n, _, _ in s02_rows(SF01)}
     monkeypatch.setattr(simplans, "S10_BUCKET_CAP", 3)
     s10 = {(r.q_id, r.n_id)
            for r in simplans.s10_capped_ann(spark, SF01).collect()}

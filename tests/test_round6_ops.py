@@ -10,12 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from test_plans import _plan
+from test_round10_ops import s02_rows
 
 
 def test_gr02_no_cartesian_and_credit_sum(spark):
@@ -430,7 +426,9 @@ def test_s07_multiprobe_recall_not_worse_than_s02(spark):
         }
 
     truth = pairs(simplans.s01_cosine_topk(spark, SF_DIR))
-    got02 = pairs(simplans.s02_ann_lsh(spark, SF_DIR))
+    got02 = {
+        (q, n) for q, n, _, _ in s02_rows(SF_DIR) if q < simplans.N_QUERIES
+    }
     got07 = pairs(simplans.s07_multiprobe_ann(spark, SF_DIR))
     assert len(got07 & truth) >= len(got02 & truth)
     # and each query still returns at most ANN_TOPK neighbors
@@ -560,7 +558,8 @@ def test_t16_top_terms_are_maximal(spark):
 
 def test_ml09_vote_consistency(spark):
     """Every embedding classified exactly once; votes never exceed the
-    ANN fan-in; NULL prediction iff the vector had no s02 neighbors."""
+    ANN fan-in; NULL prediction iff the vector had no neighbors in s10,
+    the ANN generator ml09 votes over."""
     from customer_review__etl_spark.plans import mlplans, simplans
 
     out = mlplans.ml09_knn_label(spark, SF_DIR).cache()
@@ -569,7 +568,7 @@ def test_ml09_vote_consistency(spark):
     assert out.filter(F.col("n_votes") > simplans.ANN_TOPK).count() == 0
     with_nb = {
         r.q_id
-        for r in simplans.s02_ann_lsh(spark, SF_DIR).select("q_id").collect()
+        for r in simplans.s10_capped_ann(spark, SF_DIR).select("q_id").collect()
     }
     for r in out.collect():
         assert (r.pred_label is None) == (r.vec_id not in with_nb)

@@ -654,66 +654,41 @@ def test_io15_optimistic_commit_conflict_and_rebase(spark, tmp_path):
     CommitConflict, re-reads the new latest, REBASES (its new file on
     top of the winner's file set), and lands v5 — no data rewrite, no
     lost update (both writers' files are in the final manifest)."""
-    import json
+    import pytest as _pytest
+
+    from customer_review__etl_spark.plans.manifestio import (
+        CommitConflict,
+        io15_commit_snapshot,
+        io15_latest_version,
+        manifest_files,
+    )
 
     root = str(tmp_path / "snap")
     ioplans.io15_write_snapshots(spark, SF_DIR, root)  # commits v1-v3
-    base = ioplans.io15_latest_version(root)
+    base = io15_latest_version(root)
     assert base == 3
-    with open(f"{root}/manifests/v{base}.json") as fh:
-        base_files = json.load(fh)["files"]
+    base_files = manifest_files(root, base)
 
     # writer A wins the v4 slot
-    v4 = ioplans.io15_commit_snapshot(
+    v4 = io15_commit_snapshot(
         root, base_files + ["fileA"], expected_version=base
     )
     assert v4 == 4
 
     # writer B, still based on v3, must conflict at the same slot...
-    import pytest as _pytest
-
-    with _pytest.raises(ioplans.CommitConflict):
-        ioplans.io15_commit_snapshot(
+    with _pytest.raises(CommitConflict):
+        io15_commit_snapshot(
             root, base_files + ["fileB"], expected_version=base
         )
     # ...then rebase on the NEW latest and retry
-    latest = ioplans.io15_latest_version(root)
-    with open(f"{root}/manifests/v{latest}.json") as fh:
-        rebased = json.load(fh)["files"]
-    v5 = ioplans.io15_commit_snapshot(
+    latest = io15_latest_version(root)
+    rebased = manifest_files(root, latest)
+    v5 = io15_commit_snapshot(
         root, rebased + ["fileB"], expected_version=latest
     )
     assert v5 == 5
-    with open(f"{root}/manifests/v5.json") as fh:
-        final = json.load(fh)["files"]
+    final = manifest_files(root, 5)
     assert "fileA" in final and "fileB" in final  # no lost update
-
-
-def test_io15_vacuum_removes_only_orphans(spark, tmp_path):
-    """VACUUM with retention from v3: file B (referenced only by the
-    expired v1/v2) is deleted; the kept v3 read is byte-identical to
-    its pre-vacuum answer; reading the expired v2 fails afterwards —
-    retention ended its time-travel window by design."""
-    root = str(tmp_path / "snap")
-    schema = ioplans.io15_write_snapshots(spark, SF_DIR, root)
-    before_v3 = sorted(
-        r.o_orderkey
-        for r in ioplans.io15_read_snapshot(spark, root, 3, schema)
-        .select("o_orderkey").collect()
-    )
-    deleted = ioplans.io15_vacuum(root, keep_from_version=3)
-    assert deleted == [f"{root}/data/file_b"]
-    after_v3 = sorted(
-        r.o_orderkey
-        for r in ioplans.io15_read_snapshot(spark, root, 3, schema)
-        .select("o_orderkey").collect()
-    )
-    assert after_v3 == before_v3
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        ioplans.io15_read_snapshot(spark, root, 2, schema).count()
 
 
 def test_io14_merge_classification(spark, tmp_path):

@@ -159,7 +159,7 @@ def test_j13_bloom_prefilter_is_selective_and_exact(spark):
         .join(keys, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .count()
     )
-    n_pre = relational._j13_prefiltered(spark, SF_DIR).count()
+    n_pre = relational._j13_prefiltered(spark, SF_DIR)[1].count()
     assert n_true <= n_pre, "bloom produced a false negative"
     assert n_pre < n_orders, "bloom filtered nothing"
     # with 2^17 bits / k=3 over a few hundred keys the FP rate is ~0;

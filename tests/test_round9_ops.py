@@ -19,6 +19,7 @@ from customer_review__etl_spark.plans import (
 from customer_review__etl_spark.sources import tables
 
 from conftest import SF_DIR
+from test_differential_edges import duck_views
 
 L = dedupplans.D08_SUBSTR_LEN
 
@@ -198,6 +199,32 @@ def test_w13_fill_semantics(spark):
                 assert r.filled_value == seen and r.was_filled == 1
 
 
+def _s03_pairs_sql() -> str:
+    """s03, the fixed-band sign-LSH near-dup miner that s09 refines, as
+    DuckDB SQL: pairs sharing either 3-plane band bucket with exact
+    cosine ≥ NEAR_COS. The reference s09's pair set is compared with."""
+    from customer_review__etl_spark.plans.simplans import (
+        NEAR_COS,
+        _cos,
+        _sql_bucket,
+    )
+
+    return f"""
+        WITH e AS (
+          SELECT vec_id, embedding, embedding::DOUBLE[] AS v,
+                 {_sql_bucket(3, 0)} AS band0,
+                 {_sql_bucket(3, 3)} AS band1
+          FROM embeddings
+        )
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+               {_cos('a.v', 'b.v')} AS cos
+        FROM e a JOIN e b
+          ON (a.band0 = b.band0 OR a.band1 = b.band1)
+         AND a.vec_id < b.vec_id
+        WHERE {_cos('a.v', 'b.v')} >= {NEAR_COS}
+    """
+
+
 def test_s09_subset_of_s03_with_recall_floor(spark, monkeypatch):
     """Occupancy-adaptive LSH must only PRUNE s03's candidates (never
     invent pairs), stay lossless when no bucket exceeds the cap, and
@@ -206,8 +233,8 @@ def test_s09_subset_of_s03_with_recall_floor(spark, monkeypatch):
     from customer_review__etl_spark.plans import simplans
 
     sf = "/root/testdata/sf0.01"
-    s03 = {(r.vec_a, r.vec_b)
-           for r in simplans.s03_embedding_neardup(spark, sf).collect()}
+    con = duck_views(sf, ["embeddings"])
+    s03 = {(a, b) for a, b, _ in con.execute(_s03_pairs_sql()).fetchall()}
     assert s03, "fixture corpus must contain near-dup pairs"
     # shipped cap: sf0.01 buckets (~60) stay below 200 -> lossless
     s09 = {(r.vec_a, r.vec_b)

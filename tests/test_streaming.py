@@ -1,6 +1,6 @@
 """Structured Streaming ≡ batch equivalence on the sf0.001 events
-table: tumbling and session windows produce identical result sets,
-and within-watermark dedup keeps one row per key."""
+table: tumbling windows produce identical result sets, and
+within-watermark dedup keeps one row per key."""
 
 from __future__ import annotations
 
@@ -22,20 +22,6 @@ def test_stream_tumbling_equals_batch(spark):
     batch = SP.st01_tumbling_window(spark, SF_DIR)
     cols = ["wstart", "event_type", "n", "sum_cents"]
     assert _rows(stream, cols) == _rows(batch, cols)
-
-
-def test_stream_session_equals_batch(spark):
-    out = jobs.run_available_now(
-        jobs.session_counts(jobs.stream_events(spark, SF_DIR))
-    ).select(
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        "user_id",
-        "n",
-    )
-    batch = SP.st03_session_window(spark, SF_DIR)
-    cols = ["session_start", "session_end", "user_id", "n"]
-    assert _rows(out, cols) == _rows(batch, cols)
 
 
 def test_dedup_within_watermark(spark):

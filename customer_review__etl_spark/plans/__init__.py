@@ -34,21 +34,6 @@ class QuerySpec:
 # must place representatives inside the head.  PRIORITY pins that head
 # explicitly; everything else follows in module order and is covered by the
 # registry sweep (tests/test_registry_sweep.py) and the rest of pytest.
-
-# Head-composition gates, imported by the head test in
-# tests/test_plans.py.
-HEAD_FAMILIES: tuple[str, ...] = (
-    "p", "a", "q", "j", "w", "g", "f", "u",
-    "t0", "d0", "s0", "st", "ml", "mm", "io",
-)
-# rows-only (no-oracle) entries allowed to spend a head slot: exactly
-# the four documented non-SQL-expressible ops (round-11 VERDICT ask #4)
-ROWS_ONLY_HEAD_WHITELIST: frozenset[str] = frozenset({
-    "t02_stemmed_chain",
-    "ml01_lda_themes",
-    "ml02_topic_top_words",
-    "ml04_classifier_metrics",
-})
 PRIORITY: tuple[str, ...] = (
     # This head is the r18 rotation proposal. Its order is part of the
     # external verifier's contract (see above), and

@@ -35,10 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
+from ..scratch import cache_slot, materialized_df
 from ..sources import tables
 from . import QuerySpec
 from .helpers import (
-    cache_slot,
     shuffle_width,
     sql_cc_min_label,
     sql_normalize,
@@ -72,38 +72,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   recomputed by every consumer before round 6 (round-5 VERDICT
 #   "Next round" #5). The per-doc gram arrays are landed the same way
 #   since r17: d04, d07, d10 and d11 all read them (gram_arrays_m).
-# Each entry lands in run-scratch parquet (the run_append pattern — the
-# dir outlives the query, swept by a later process), and every consumer
-# reads the lazy file scan. At cluster scale this is the standard
+# Each entry lands in run-scratch parquet (scratch.materialized_df: the
+# dir lives as long as the corpus identity it was built from), and every
+# consumer reads the lazy file scan. At cluster scale this is the standard
 # "materialize shared intermediate to the object store" move; pair sets
 # are (long, long) rows and token streams are bounded by corpus token
 # count, both tiny relative to the raw corpus.
-
-
-def materialized_df(spark, sf_dir, kind, builder, cols):
-    """Return `builder(spark, sf_dir).select(*cols)` backed by a
-    parquet landing, built once per kind and identity of the tables
-    under sf_dir (tables.derived): rewriting a table lands again.
-
-    The explicit-schema read keeps the result well-defined even when
-    the result set is empty (zero part files).
-
-    Thread-safe with one lock PER KIND (not a global lock): callers
-    build warm kinds concurrently (Spark schedules jobs from many
-    threads), and d02's builder itself calls shingles_m — per-key
-    locking lets the d02 thread block on exactly the shingles landing
-    while unrelated kinds keep building, with no duplicated work."""
-
-    def land():
-        from ..scratch import run_scratch
-
-        out = run_scratch(f"edges_{kind}_")
-        df = builder(spark, sf_dir).select(*cols)
-        df.write.mode("overwrite").parquet(out)
-        return out, df.schema
-
-    path, schema = tables.derived(sf_dir, ("landing", kind), land)
-    return spark.read.schema(schema).parquet(path)
 
 
 def shingles_m(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1866,7 +1840,7 @@ def d08_repeated_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache both branches of the candidate join re-ran the full O(n·w)
     # rolling-min winnowing transform over the corpus (two Generate
     # nodes in the r16 plan) — guide §1.2 "don't compute things twice".
-    # The slot releases the previous call's copy (helpers.cache_slot).
+    # The slot releases the previous call's copy (scratch.cache_slot).
     doc_anchors = cache_slot("d08_anchors", d08_doc_anchors(base))
     cand = (
         doc_anchors.alias("a")

@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..scratch import cache_slot, materialized_df
 from ..sources import tables
 from . import QuerySpec
-from .helpers import cache_slot, shuffle_width, sql_cc_min_label
+from .helpers import shuffle_width, sql_cc_min_label
 
 PR_SCALE = 1_000_000  # fixed-point rank unit
 PR_ITERS = 3          # fixed, unrolled in the oracle
@@ -69,13 +70,11 @@ def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase edge list, materialized once per process per
-    corpus (dedupplans.materialized_df): the lineitem self-join +
+    corpus (scratch.materialized_df): the lineitem self-join +
     distinct is the expensive part of BOTH gr01 and gr02, and gr01
     additionally rescans the edges every PageRank iteration — one
     parquet landing serves them all (the shared-intermediate move,
     round-5 VERDICT #5 applied to the graph family)."""
-    from .dedupplans import materialized_df
-
     return materialized_df(
         spark, sf_dir, "copurchase", _copurchase_edges_build, ["src", "dst"]
     )
@@ -109,8 +108,6 @@ def _copurchase_thresholded_build(
 def _copurchase_thresholded_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gr05's thresholded co-purchase edge list, landed once per
     process per corpus — every CC round re-joins against it."""
-    from .dedupplans import materialized_df
-
     return materialized_df(
         spark,
         sf_dir,

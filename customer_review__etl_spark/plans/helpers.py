@@ -11,8 +11,6 @@ differ in the last bits.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -162,39 +160,3 @@ def sql_cc_min_label(
         f"cluster AS (SELECT node, lbl AS mn FROM lab{rounds})"
     )
     return ",\n".join(ctes)
-
-
-# One cached relation per slot, swapped on re-invocation (round-10
-# ADVICE #2): a plan builder that caches a relation its plan reads
-# several times returns a LAZY frame, so it cannot unpersist in a
-# try/finally — the cache would be gone before the caller runs the
-# plan. Every plan-level cache goes through a slot. Without one, a
-# long-lived session (benchmark loops, a dashboard) keeps every cached
-# relation until an external clearCache, and Spark's CacheManager,
-# which matches a scan by path, serves it after its table is
-# rewritten in place. Unpersisting the PREVIOUS call's cache bounds
-# storage at one relation per slot and makes each call compute from
-# the current files; a still-held stale DataFrame simply recomputes.
-# Builders that cache the same plan share a slot: the CacheManager
-# keeps one entry per plan, so two slots over one plan would release
-# each other's entry.
-_CACHE_SLOTS: dict[str, DataFrame] = {}
-# plans are built from multiple threads (round-11 ADVICE #1): an
-# unguarded pop/assign pair can leak a cached relation or unpersist one
-# an in-flight concurrent job is reading (correct but slow — Spark
-# recomputes).
-_CACHE_LOCK = threading.Lock()
-
-
-def cache_slot(key: str, df: DataFrame) -> DataFrame:
-    """`df.cache()`, owned by the slot `key`: the slot's previous
-    relation is released first."""
-    with _CACHE_LOCK:
-        prev = _CACHE_SLOTS.pop(key, None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
-        _CACHE_SLOTS[key] = df.cache()
-        return _CACHE_SLOTS[key]

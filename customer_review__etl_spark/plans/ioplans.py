@@ -2,14 +2,16 @@
 parquet writer/reader paths exercised inside the driver's correctness
 gate, not just in unit tests.
 
-Each roundtrip writes to a fresh per-run scratch dir (scratch.py),
-reads the result back with an explicit schema (ingest discipline,
-SURVEY §1.3 — never inference in the engine path), and returns the
-LAZY read-back DataFrame; the oracle is a plain SELECT over the
-original table, so the hash gate proves write→read is lossless. The
-scratch dir outlives the query (swept by the next run), so nothing is
-collected through the driver — at sf100 the read-back scans
-distributed files like any other source.
+Each roundtrip writes to a fresh scratch dir (scratch.py), reads the
+result back with an explicit schema (ingest discipline, SURVEY §1.3 —
+never inference in the engine path), and returns the LAZY read-back
+DataFrame; the oracle is a plain SELECT over the original table, so
+the hash gate proves write→read is lossless. The scratch dir outlives
+the query (the query's next call removes it), so nothing is collected
+through the driver — at sf100 the read-back scans distributed files
+like any other source. Queries that only lay an unchanged input out
+(io10, io12, io13) write that layout once per input identity
+(`_layout`) and run their read over it on every call.
 
 Scale notes: both writers are the native distributed committers (one
 file per partition, no driver funneling); `coalesce(1)` appears only
@@ -102,8 +104,9 @@ def io05_bucketed_tables(
     once, not per query (tests/test_io.py asserts the joined plan has
     no Exchange). `bucketBy` requires the table catalog, so the tables
     land as uniquely-named EXTERNAL tables over run-scratch paths: the
-    in-memory catalog entry dies with the session while the files are
-    swept like any other scratch.
+    in-memory catalog entry dies with the session, and the files go
+    when the tables are built again (a rewritten source table or a new
+    session).
 
     The tables are written ONCE per identity of the corpus's tables
     (tables.derived) — that is the entire point of bucketing, and it
@@ -617,6 +620,20 @@ def io07_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _layout(sf_dir: str, prefix: str, write) -> str:
+    """The scratch dir `write(out)` lays an input out in, written once
+    per identity of the tables under sf_dir (tables.derived) and
+    removed when a rewrite supersedes it. This is a layout, not a
+    result: each call still runs its read over the files."""
+
+    def land() -> str:
+        out = run_scratch(prefix)
+        write(out)
+        return out
+
+    return tables.derived(sf_dir, ("layout", prefix), land)
+
+
 def _spread32(expr: str) -> str:
     """Bit-spread of a 32-bit value to even bit positions (the classic
     shift-or-mask interleave ladder) — plain integer arithmetic, valid
@@ -669,19 +686,21 @@ def io10_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic. The read-back query both engines verify applies the
     rectangle over the clustered layout — content must be EXACTLY the
     original filter result, proving clustering is a pure layout choice
-    (the io05 lesson, applied to sort order)."""
-    out = run_scratch("io10_zorder_")
+    (the io05 lesson, applied to sort order). The clustered layout is
+    written once per input identity (`_layout`)."""
     li = tables.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
     zed = li.withColumn(
         "zval", F.expr(_morton("l_partkey", "l_suppkey"))
     )
-    (
-        zed.repartitionByRange(IO10_FILES, "zval")
+    out = _layout(
+        sf_dir,
+        "io10_zorder_",
+        lambda out: zed.repartitionByRange(IO10_FILES, "zval")
         .sortWithinPartitions("zval")
         .write.mode("overwrite")
-        .parquet(out)
+        .parquet(out),
     )
     return (
         spark.read.schema(zed.schema)
@@ -707,14 +726,18 @@ def io12_nested_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned sibling is the difference between scanning metadata and
     scanning the blobs it sits next to. The oracle states the same
     projection over the flat original — nesting must be a pure layout
-    choice."""
-    out = run_scratch("io12_nested_")
+    choice. The nested copy is written once per input identity
+    (`_layout`)."""
     src = tables.load(spark, sf_dir, "supplier")
     nested = src.select(
         "s_suppkey",
         F.struct("s_name", "s_nationkey", "s_acctbal").alias("meta"),
     )
-    nested.write.mode("overwrite").parquet(out)
+    out = _layout(
+        sf_dir,
+        "io12_nested_",
+        lambda out: nested.write.mode("overwrite").parquet(out),
+    )
     return (
         spark.read.schema(nested.schema)
         .parquet(out)
@@ -742,16 +765,19 @@ def io13_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     one matching directory.
 
     Scale: the write shuffles nothing (partitionBy on an existing
-    narrow scan); the pruned read's cost is O(matching partition).
+    narrow scan) and runs once per input identity (`_layout`); the
+    pruned read's cost is O(matching partition) on every call.
     The oracle states the same aggregate over the flat original —
     layout must be a pure I/O choice (the io05/io10 lesson again)."""
-    from .helpers import cents
-
-    out = run_scratch("io13_hivepart_")
-    ev = tables.load(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
+    out = _layout(
+        sf_dir,
+        "io13_hivepart_",
+        lambda out: tables.load(spark, sf_dir, "events")
+        .select("event_id", "event_type", "value")
+        .write.partitionBy("event_type")
+        .mode("overwrite")
+        .parquet(out),
     )
-    ev.write.partitionBy("event_type").mode("overwrite").parquet(out)
     back = (
         spark.read.schema("event_id BIGINT, value DOUBLE, event_type STRING")
         .parquet(out)

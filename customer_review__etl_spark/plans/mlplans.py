@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml import pipeline as P
+from ..scratch import cache_slot, materialized_df
 from ..sources import tables
 from . import QuerySpec
-from .helpers import cache_slot, cents, sql_raw_tokens
+from .helpers import cents, sql_raw_tokens
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,8 +78,6 @@ def _rf_label_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector columns (features/rawPrediction/probability) never leave
     the fitting process. At cluster scale this is "score once, persist
     the prediction table" — the standard ML-pipeline shape."""
-    from .dedupplans import materialized_df
-
     def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = P.stratified_split(
             P.with_tokens(_docs(spark, sf_dir)), "doc_id", "lang"
@@ -731,8 +730,6 @@ def s10_knn_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap s10 IS s02 bit-for-bit, so fixture-scale vote results are
     unchanged, while probe-scale corpora no longer inherit s02's
     convicted quadratic."""
-    from .dedupplans import materialized_df
-
     return materialized_df(
         spark, sf_dir, "s10_knn", _s10_knn_build, ["q_id", "n_id"]
     )

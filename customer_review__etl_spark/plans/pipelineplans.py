@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
-from ..scratch import run_scratch
+from ..scratch import materialized_df, run_scratch
 from ..sources import sinks, tables
 from . import QuerySpec
 from .dedupplans import DECON_EVAL_MOD, DECON_NGRAM
@@ -564,8 +564,6 @@ def dc01_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline — only the recipes consume the landing (the d04_pairs/
     d06_survivors pattern; the landing is paid in the visible
     scratch_build row and is off its critical path)."""
-    from .dedupplans import materialized_df
-
     def _build(s: SparkSession, d: str) -> DataFrame:
         from . import dedupplans
 
@@ -581,8 +579,6 @@ def dc01_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dc03_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dc03's verbatim-contaminated train-doc id set (distinct), landed
     once per process — same rationale as dc01_ids_m (~2.1 s/rep)."""
-    from .dedupplans import materialized_df
-
     def _build(s: SparkSession, d: str) -> DataFrame:
         from . import dedupplans
 
@@ -598,8 +594,6 @@ def dc03_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t25_keep_ids_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t25's quality-gate keep set, landed once per process — same
     rationale as dc01_ids_m (stage 3 of every recipe)."""
-    from .dedupplans import materialized_df
-
     def _build(s: SparkSession, d: str) -> DataFrame:
         from . import textplans
 
@@ -718,12 +712,15 @@ def pl05_data_recipe_excised(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pl05_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pl05's pre-packing stage; exposed for the plan check like
-    _pl04_packed_in. Token counts are computed ON THE d09 SIDE before
-    the id join (a narrow map over the cleaned relation), so the join
-    that meets the mix carries only (doc_id, n_tokens) — document
-    bodies never enter a join in this recipe. The first 30× probe run
+def _pl05_packed_in(
+    spark: SparkSession, sf_dir: str, unified: bool = False
+) -> DataFrame:
+    """pl05's pre-packing stage, and pl06's with `unified=True` (the
+    d06 survivor source, as in _pl04_mixed); exposed for the plan
+    check like _pl04_packed_in. Token counts are computed ON THE d09
+    SIDE before the id join (a narrow map over the cleaned relation),
+    so the join that meets the mix carries only (doc_id, n_tokens) —
+    document bodies never enter a join in this recipe. The first 30× probe run
     caught the alternative shape red-handed: joining the cleaned TEXT
     against the mix let Catalyst pick a broadcast for the bodies side
     off an aggregate-underestimate, and the runtime table blew Spark's
@@ -733,7 +730,7 @@ def _pl05_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedupplans
     from .textplans import BPE_PATTERN
 
-    mixed = _pl04_mixed(spark, sf_dir).select("doc_id", "lang")
+    mixed = _pl04_mixed(spark, sf_dir, unified).select("doc_id", "lang")
     toks = F.size(
         F.regexp_extract_all(
             F.lower(F.coalesce(F.col("cleaned"), F.lit(""))),
@@ -856,8 +853,6 @@ def d06_survivors_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery but pl04/pl05's adjudicated plan rows build it in-plan,
     and churning those mid-round for ~1 s/rep is not worth re-opening
     the record."""
-    from .dedupplans import materialized_df
-
     def _build(s: SparkSession, d: str) -> DataFrame:
         from . import dedupplans
 
@@ -877,39 +872,12 @@ def _pl06_packed_in_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, long, lang) rows are bounded by corpus doc count — tiny
     relative to the raw corpus, the standard shared-intermediate
     materialization at cluster scale."""
-    from .dedupplans import materialized_df
-
     return materialized_df(
         spark,
         sf_dir,
         "pl06_packed_in",
-        _pl06_packed_in,
+        lambda s, d: _pl05_packed_in(s, d, unified=True),
         ["doc_id", "n_tokens", "lang"],
-    )
-
-
-def _pl06_packed_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pl06's pre-packing stage, exposed for the plan check like its pl04
-    and pl05 siblings; _pl05_packed_in's shape with the unified
-    survivor source."""
-    from . import dedupplans
-    from .textplans import BPE_PATTERN
-
-    mixed = _pl04_mixed(spark, sf_dir, unified=True).select(
-        "doc_id", "lang"
-    )
-    toks = F.size(
-        F.regexp_extract_all(
-            F.lower(F.coalesce(F.col("cleaned"), F.lit(""))),
-            F.lit(BPE_PATTERN),
-            0,
-        )
-    ).cast("long")
-    cleaned_counts = dedupplans.d09_cleaned(spark, sf_dir).select(
-        "doc_id", toks.alias("n_tokens")
-    )
-    return mixed.join(cleaned_counts, "doc_id").select(
-        "doc_id", "n_tokens", "lang"
     )
 
 

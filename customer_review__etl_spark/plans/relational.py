@@ -28,10 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
+from ..ml.pipeline import THEME_LABELS
+from ..scratch import cache_slot
 from ..sources import tables
 from . import QuerySpec
 from .helpers import (
-    cache_slot,
     cents,
     shuffle_width,
     scaled,
@@ -40,15 +41,6 @@ from .helpers import (
     sql_raw_tokens,
     sql_scaled,
 )
-
-# The reference's verbatim topic→theme labels (cleaner.py:211-217).
-THEME_LABELS = {
-    0: "Customer Support Issues",
-    1: "Billing & Subscription Problems",
-    2: "Service Quality Concerns",
-    3: "Account Management Issues",
-    4: "Delivery & Product Issues",
-}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -852,7 +844,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def j01_broadcast_theme_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: the reference's dict-lookup enrichment (cleaner.py:211-220)
-    as a broadcast LEFT join against the verbatim 5-label theme map.
+    as a broadcast LEFT join against the verbatim 5-label theme map
+    (ml.pipeline.THEME_LABELS, the map the review pass labels with).
     pmod(user_id, 7) yields topics 5-6 with no label → NULL, exercising
     the left-join unmatched path exactly like .map() → NaN."""
     labels = spark.createDataFrame(

@@ -36,9 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_from_norms, l2_norm
+from ..scratch import cache_slot, materialized_df
 from ..sources import tables
 from . import QuerySpec
-from .helpers import cache_slot, sql_cc_min_label
+from .helpers import sql_cc_min_label
 
 N_QUERIES = 16   # s01 brute-force query set: vec_id < 16
 TOPK = 5         # s01 neighbors per query
@@ -674,8 +675,6 @@ def s09_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-plane miner (convicted quadratic: 12.8× wall at 10× data,
     its verify leg the whole wall) is gone and s05 rides the
     scale-safe generator."""
-    from .dedupplans import materialized_df
-
     return materialized_df(
         spark, sf_dir, "s09_pairs", s09_capped_lsh_neardup,
         ["vec_a", "vec_b"],

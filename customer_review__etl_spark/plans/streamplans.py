@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import run_scratch
 from ..sources import tables
 from ..streaming import jobs
 from . import QuerySpec
@@ -186,8 +187,6 @@ def st11_incremental_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the oracle's row count/hash. This is the reference's hourly
     DAG recompute (ml_pipeline_dag.py:37) done as an incremental
     stream instead of a full rerun."""
-    from ..scratch import run_scratch
-
     src = run_scratch("st11_src_")
     ckpt = run_scratch("st11_ckpt_")
     out = run_scratch("st11_out_")
@@ -252,7 +251,6 @@ def st12_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned append (one directory level = one status), lazy
     read-back with an explicit schema so zero-batch runs stay
     well-defined."""
-    from ..scratch import run_scratch
     from .ioplans import IO16_RULES
 
     ev = jobs.stream_events(spark, sf_dir).select(
@@ -322,13 +320,11 @@ def st13_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical state shape to st04 (one count/sum pair per
     open window, eviction bounded by the watermark); the arrival
     split is a test harness, not a plan property."""
-    out = jobs.run_available_now(
+    return jobs.run_append(
         jobs.late_tumbling_counts(
             jobs.stream_events_arrival_batches(spark, sf_dir)
-        ),
-        output_mode="append",
+        )
     )
-    return out
 
 
 _ST13_SQL = f"""

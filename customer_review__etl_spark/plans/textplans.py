@@ -24,10 +24,10 @@ from pyspark.sql.window import Window
 
 from ..functions import text as T
 from ..functions.stemmer import stem_tokens
+from ..scratch import cache_slot
 from ..sources import tables
 from . import QuerySpec
 from .helpers import (
-    cache_slot,
     sql_clean_tokens,
     sql_normalize,
     sql_raw_tokens,
@@ -611,7 +611,7 @@ def t27_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the score table feeds BOTH the ranking branch and the
     # final left join — uncached, the whole t15 LM-scoring chain
     # compiled (and ran) twice per execution (r17, guide §1.2). The
-    # slot releases the previous call's copy (helpers.cache_slot).
+    # slot releases the previous call's copy (scratch.cache_slot).
     base = cache_slot("t27_scores", _t15_scores(spark, sf_dir))
     scored = base.filter(F.col("n_bigrams") > 0).withColumn(
         "bkt", F.floor("mean_bits").cast("long")

@@ -13,7 +13,9 @@ stats of every part file when the table is a directory. It holds
   schema instead of paying Spark's one-task footer job on every call;
 - values derived from the tables under one sf_dir (`derived`: scratch
   landings, bucketed tables, fitted models), rebuilt on the next call
-  after any of those tables is rewritten.
+  after any of those tables is rewritten. A scratch directory made
+  while a value builds is held under the value's (sf_dir, kind), so
+  the rebuild removes the superseded one (scratch.py).
 A path that cannot be stat'ed (a remote object store) has no identity,
 and nothing keyed on it is kept: its schema is inferred on every read,
 and a value derived from an sf_dir none of whose tables can be stat'ed
@@ -175,6 +177,25 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _DERIVED: dict[tuple, tuple[tuple, Any]] = {}
 _DERIVED_LOCKS: dict[tuple, threading.Lock] = {}
 _DERIVED_GUARD = threading.Lock()
+# the (sf_dir, kind) this thread is building, if any
+_BUILDING = threading.local()
+
+
+def building() -> tuple | None:
+    """The (sf_dir, kind) whose value this thread is building inside
+    `derived`, or None. Scratch directories made during a build are
+    held under it (scratch.run_scratch), so they live as long as the
+    derived value."""
+    return getattr(_BUILDING, "key", None)
+
+
+def _build_as(key: tuple, build: Callable[[], Any]) -> Any:
+    outer = building()
+    _BUILDING.key = key
+    try:
+        return build()
+    finally:
+        _BUILDING.key = outer
 
 
 def derived(
@@ -200,9 +221,9 @@ def derived(
     with lock:
         snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
         if not any(snap):
-            return build()
+            return _build_as(key, build)
         hit = _DERIVED.get(key)
         stale = hit is None or hit[0] != snap
         if stale or (valid is not None and not valid(hit[1])):
-            hit = _DERIVED[key] = (snap, build())
+            hit = _DERIVED[key] = (snap, _build_as(key, build))
         return hit[1]

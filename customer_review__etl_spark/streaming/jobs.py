@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..plans.helpers import cents
+from ..scratch import run_scratch
 from ..session import ensure_confs
 from ..sources import tables
 
@@ -290,14 +291,12 @@ def run_update_latest(stream_df: DataFrame, keys: list[str]) -> DataFrame:
     parquet sink, and return one row per key: the latest emission.
 
     foreachBatch + parquet keeps the data plane distributed end-to-end:
-    the sink dir outlives this call (scratch.run_scratch — swept by the
-    NEXT run), so the returned DataFrame is a LAZY keep-latest window
+    the sink dir outlives this call (scratch.run_scratch — removed by
+    the next call), so the returned DataFrame is a LAZY keep-latest window
     over the sink files, never an O(distinct keys) driver collect. The
     keep-latest collapse makes the result independent of how
     AvailableNow chops the input into batches."""
     from pyspark.sql.window import Window
-
-    from ..scratch import run_scratch
 
     out_dir = run_scratch("stream_upd_")
     spark = stream_df.sparkSession
@@ -393,8 +392,6 @@ def run_keyed_upsert(
     files containing matched keys."""
     from pyspark.sql.window import Window
 
-    from ..scratch import run_scratch
-
     out_dir = run_scratch("stream_ups_")
     spark = stream_df.sparkSession
     schema = stream_df.schema
@@ -462,7 +459,6 @@ def stream_events_arrival_batches(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
 
-    from ..scratch import run_scratch
     from ..sources import tables
 
     ev = (
@@ -520,13 +516,11 @@ def run_append(stream_df: DataFrame) -> DataFrame:
     the union of all batches IS the result — no keep-latest collapse
     needed. Output never funnels through driver memory: an O(distinct
     keys) result like st05's stream dedup stays distributed end-to-end
-    (round-3 VERDICT "What's wrong" #1; run_available_now now shares
-    the same parquet-sink discipline). The sink dir outlives this call
-    (scratch.run_scratch — swept only once this process is dead), so
-    callers may keep composing on the returned DataFrame. The explicit
+    (round-3 VERDICT "What's wrong" #1; run_available_now shares the
+    same parquet-sink discipline). The sink dir outlives this call
+    (scratch.run_scratch — removed by the next call), so callers may
+    keep composing on the returned DataFrame until then. The explicit
     schema makes the read well-defined even when zero batches fired."""
-    from ..scratch import run_scratch
-
     out_dir = run_scratch("stream_app_")
     spark = stream_df.sparkSession
     schema = stream_df.schema
@@ -544,10 +538,8 @@ def run_append(stream_df: DataFrame) -> DataFrame:
     return spark.read.schema(schema).parquet(out_dir)
 
 
-def run_available_now(
-    stream_df: DataFrame, output_mode: str = "complete"
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion with AvailableNow,
+def run_available_now(stream_df: DataFrame) -> DataFrame:
+    """Execute a complete-mode stream to completion with AvailableNow,
     rewriting the FULL complete-mode result to a per-run parquet dir on
     each micro-batch; return a LAZY DataFrame over the final write.
 
@@ -559,19 +551,10 @@ def run_available_now(
     never funnels through driver memory: the result stays a
     distributed file scan no matter how many windows/keys the
     aggregation holds. The dir outlives the call (scratch.run_scratch).
-    Non-complete modes delegate to run_append — one copy of the
-    append-sink discipline."""
+    Append-mode streams use run_append, update-mode ones
+    run_update_latest."""
     import os
 
-    from ..scratch import run_scratch
-
-    if output_mode == "append":
-        return run_append(stream_df)
-    if output_mode != "complete":
-        raise ValueError(
-            "update-mode streams must use run_update_latest (keep-latest "
-            "collapse); run_available_now handles complete/append only"
-        )
     out_dir = run_scratch("stream_cpl_")
     spark = stream_df.sparkSession
     schema = stream_df.schema

@@ -27,8 +27,8 @@ def _compiles(spark) -> int:
 def _final_plan(df) -> str:
     """The executed (AQE-final) plan without what changes from call to
     call and stays out of the generated code: expression ids, lambda
-    variable numbers and file locations (io13 writes a fresh directory
-    per call)."""
+    variable numbers and file locations (a query that writes lands in a
+    fresh directory per call)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     plan = re.sub(r"(lambda \w+?)_\d+", r"\1", plan)
     return re.sub(r"#\d+L?|plan_id=\d+|\[file:[^\]]*\]", "", plan)

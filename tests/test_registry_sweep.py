@@ -89,7 +89,9 @@ PREPACK = {
     "p19_sequence_pack": relational._p19_packed_in,
     "pl04_data_recipe": pipelineplans._pl04_packed_in,
     "pl05_data_recipe_excised": pipelineplans._pl05_packed_in,
-    "pl06_data_recipe_unified": pipelineplans._pl06_packed_in,
+    "pl06_data_recipe_unified": lambda s, d: pipelineplans._pl05_packed_in(
+        s, d, unified=True
+    ),
 }
 
 

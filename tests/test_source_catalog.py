@@ -2,7 +2,7 @@
 value derived from a corpus on the identity of the table files, so a
 table rewritten in place is read with its new schema and rebuilds what
 was landed from it, while a warm load launches no Spark job. Plan-level
-caches (plans/helpers.cache_slot) are released on the next call, so a
+caches (scratch.cache_slot) are released on the next call, so a
 query run again after an in-place rewrite reads the new files."""
 
 from __future__ import annotations
@@ -143,6 +143,9 @@ def _rewrite_in_place(path, column):
         ("q11_important_stock", "lineitem", "l_extendedprice"),
         ("t13_unigram_surprisal", "documents", "text"),
         ("ml06_kmeans", "embeddings", "embedding"),
+        ("io10_zorder_cluster", "lineitem", "l_partkey"),
+        ("io12_nested_projection", "supplier", "s_name"),
+        ("io13_partition_pruned_read", "events", "value"),
     ],
 )
 def test_query_after_out_of_band_rewrite(spark, tmp_path, name, table, column):
@@ -152,6 +155,27 @@ def test_query_after_out_of_band_rewrite(spark, tmp_path, name, table, column):
     _rewrite_in_place(f"{d}/{table}.parquet/part-0.parquet", column)
     after = _compare(spark, d, name, tables.TABLE_NAMES)
     assert after != before
+
+
+def test_io13_warm_call_writes_no_layout(spark, tmp_path):
+    """io13 lays the events table out once per identity: over unchanged
+    tables a second call builds without launching any job, so no write,
+    and still answers the oracle."""
+    from customer_review__etl_spark.plans import ioplans
+
+    d = str(tmp_path / "sf")
+    _copy_tables(SF_DIR, d)
+    cold = _jobs_in_group(
+        spark, "io13_cold",
+        lambda: ioplans.io13_partition_pruned_read(spark, d),
+    )
+    warm = _jobs_in_group(
+        spark, "io13_warm",
+        lambda: ioplans.io13_partition_pruned_read(spark, d),
+    )
+    assert len(cold) >= 1
+    assert warm == []
+    _compare(spark, d, "io13_partition_pruned_read", "events")
 
 
 def test_derived_without_identity_is_not_kept(tmp_path):

@@ -25,9 +25,8 @@ def test_stream_tumbling_equals_batch(spark):
 
 
 def test_dedup_within_watermark(spark):
-    out = jobs.run_available_now(
-        jobs.dedup_within_watermark(jobs.stream_events(spark, SF_DIR)),
-        output_mode="append",
+    out = jobs.run_append(
+        jobs.dedup_within_watermark(jobs.stream_events(spark, SF_DIR))
     )
     n_keys = (
         tables.load(spark, SF_DIR, "events")

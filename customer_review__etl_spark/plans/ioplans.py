@@ -104,29 +104,28 @@ def io05_bucketed_tables(
     once, not per query (tests/test_io.py asserts the joined plan has
     no Exchange). `bucketBy` requires the table catalog, so the tables
     land as uniquely-named EXTERNAL tables over run-scratch paths: the
-    in-memory catalog entry dies with the session, and the files go
-    when the tables are built again (a rewritten source table or a new
-    session).
+    in-memory catalog entry dies with the Spark application, and the
+    files go when the tables are built again (a rewritten source table
+    or a new application).
 
     The tables are written ONCE per identity of the corpus's tables
     (tables.derived) — that is the entire point of bucketing, and it
     keeps bench reps / repeated tests from re-shuffling and leaking
     catalog entries; a rewritten source table buckets again."""
-    # Catalog entries are session-scoped while the derived value is
-    # process-scoped: a fresh SparkSession (e.g. between test modules)
-    # no longer knows the tables, so rebuild rather than raising
-    # AnalysisException.
+    # Catalog entries live as long as the Spark application, so the
+    # application is part of the value's identity: a new one (a fresh
+    # SparkContext) no longer knows the tables and builds them again.
     t_orders, t_line = tables.derived(
         sf_dir,
         "io05_bucketed",
         lambda: _write_bucketed(spark, sf_dir),
-        valid=lambda names: all(spark.catalog.tableExists(t) for t in names),
+        app=spark.sparkContext.applicationId,
     )
     return spark.table(t_orders), spark.table(t_line)
 
 
 def _write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    out = run_scratch("io05_bucket_")
+    out = run_scratch("io05_bucket_", sf_dir)
     tag = uuid.uuid4().hex[:8]
     t_orders, t_line = f"io05_orders_{tag}", f"io05_lineitem_{tag}"
 
@@ -627,7 +626,7 @@ def _layout(sf_dir: str, prefix: str, write) -> str:
     result: each call still runs its read over the files."""
 
     def land() -> str:
-        out = run_scratch(prefix)
+        out = run_scratch(prefix, sf_dir)
         write(out)
         return out
 

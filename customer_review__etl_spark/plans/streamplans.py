@@ -75,7 +75,8 @@ def st04_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     → tumbling count/sum → Trigger.AvailableNow → final table. Same
     oracle as st01: the hash gate certifies stream ≡ batch."""
     out = jobs.run_available_now(
-        jobs.tumbling_counts(jobs.stream_events(spark, sf_dir))
+        jobs.tumbling_counts(jobs.stream_events(spark, sf_dir)),
+        run_scratch("st04_out_"),
     )
     return out.withColumn(
         "wstart", F.col("wstart").cast("timestamp_ntz")
@@ -95,7 +96,8 @@ def st05_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = jobs.run_append(
         jobs.dedup_within_watermark(
             jobs.stream_events(spark, sf_dir, single_batch=True)
-        )
+        ),
+        run_scratch("st05_out_"),
     )
     return out.select("user_id", "event_type")
 
@@ -107,6 +109,7 @@ def st06_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-equivalent, which the SQL oracle certifies."""
     out = jobs.run_update_latest(
         jobs.stateful_user_stats(jobs.stream_events(spark, sf_dir)),
+        run_scratch("st06_out_"),
         keys=["user_id"],
     )
     return out
@@ -116,7 +119,8 @@ def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream enriched by a static broadcast dimension (the streaming
     J1), then windowed per category; unmatched types → 'other'."""
     out = jobs.run_available_now(
-        jobs.stream_static_join(jobs.stream_events(spark, sf_dir))
+        jobs.stream_static_join(jobs.stream_events(spark, sf_dir)),
+        run_scratch("st07_out_"),
     )
     return out.withColumn(
         "wstart", F.col("wstart").cast("timestamp_ntz")
@@ -170,7 +174,10 @@ def st10_keyed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "ts", "event_type", "value"
     )
     out = jobs.run_keyed_upsert(
-        ev, keys=["user_id"], order_cols=["ts", "event_id"]
+        ev,
+        run_scratch("st10_out_"),
+        keys=["user_id"],
+        order_cols=["ts", "event_id"],
     )
     return out.withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
@@ -213,7 +220,8 @@ def st09_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = jobs.run_append(
         jobs.view_purchase_join(
             jobs.stream_events(spark, sf_dir, single_batch=True)
-        )
+        ),
+        run_scratch("st09_out_"),
     )
     return (
         out.withColumn("v_ts", F.col("v_ts").cast("timestamp_ntz"))
@@ -267,13 +275,7 @@ def st12_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(df: DataFrame, batch_id: int) -> None:
         df.write.mode("append").partitionBy("status").parquet(out_dir)
 
-    q = (
-        flagged.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    jobs._drain(flagged, "append", sink)
     return (
         spark.read.schema(flagged.schema)
         .parquet(out_dir)
@@ -323,7 +325,8 @@ def st13_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jobs.run_append(
         jobs.late_tumbling_counts(
             jobs.stream_events_arrival_batches(spark, sf_dir)
-        )
+        ),
+        run_scratch("st13_out_"),
     )
 
 

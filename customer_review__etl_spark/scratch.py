@@ -1,27 +1,29 @@
-"""The one owner of per-query state: cached relations, scratch
-directories and the landings built from a corpus.
+"""Per-query state: cached relations, scratch directories and the
+landings built from a corpus, each held in the engine's one store
+(store.py) under its one rule.
 
 Plans return LAZY DataFrames, so whatever a plan reads must outlive
 the call that built it: a cached relation, or files it wrote and reads
 back (the IO roundtrips, the streaming sinks, the shared dedup
 landings). Deleting them before returning would force a driver-side
-``collect()``. Instead every such thing is held in one registry, one
-dict under one lock, under a key, with one release rule: the next
-request for a key releases what the key held before. Storage is
-bounded by the number of keys, not the number of calls, and a still-
-held DataFrame from an earlier call is the only thing that can see a
+``collect()``. Instead each is a store request with no input identity,
+so the next request for its key releases what the key held before (a
+relation is unpersisted, a directory removed). Storage is bounded by
+the number of keys, not the number of calls, and a still-held
+DataFrame from an earlier call is the only thing that can see a
 release (a cached one recomputes; one over released files fails).
 
 Keys:
 - ``cache_slot(key, df)``: the caller's slot name.
-- ``run_scratch(prefix)`` from plan code: the call-site prefix, so a
-  query's next call removes its previous directory.
-- ``run_scratch(prefix)`` while ``tables.derived`` builds a value:
-  derived's own ``(sf_dir, kind)`` with the prefix. Such a directory
-  lives as long as the derived value, and goes when that identity is
-  superseded (a table under ``sf_dir`` was rewritten) and the value is
-  built again. A landing for another ``sf_dir`` has another key and
-  never goes.
+- ``run_scratch(prefix)``: the call-site prefix, so a query's next
+  call removes its previous directory. A query that hands a directory
+  to a shared runner (the streaming sinks) makes it with its own
+  prefix, so one query's call never removes another's files.
+- ``run_scratch(prefix, sf_dir)``: a directory a value derived from
+  the corpus at ``sf_dir`` lives in (a landing, io05's bucketed
+  tables, a layout). It goes when that value is built again because a
+  table under ``sf_dir`` was rewritten. A directory for another
+  ``sf_dir`` has another key and never goes.
 
 ``materialized_df`` is the landing helper built on both: a parquet
 copy of a shared intermediate, built once per corpus identity.
@@ -43,58 +45,34 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import threading
 import time
 import uuid
-from collections.abc import Callable, Hashable
 from pathlib import Path
-from typing import Any
 
 from pyspark.sql import DataFrame
 
+from . import store
 from .sources import tables
 
 _BASE = Path(__file__).resolve().parents[1] / ".tmp"
 _RUN = f"run_{os.getpid()}_{uuid.uuid4().hex[:12]}"
 _GRACE_SEC = 6 * 3600  # never sweep dirs idle less than this
-_swept = False
-
-# key -> the cached DataFrame or the directory path the key holds.
-# Plans are built from several threads: an unguarded pop/assign pair
-# could leak a held value or release one another thread just took.
-_HELD: dict[Hashable, Any] = {}
-_LOCK = threading.Lock()
 
 
-def _release(held: Any) -> None:
-    if isinstance(held, str):
-        shutil.rmtree(held, ignore_errors=True)
-        return
+def _unpersist(df: DataFrame) -> None:
     try:
-        held.unpersist()
+        df.unpersist()
     except Exception:
         pass  # session already stopped — nothing to release
-
-
-def _hold(key: Hashable, make: Callable[[], Any]) -> Any:
-    """Release what `key` held, then hold and return `make()`."""
-    with _LOCK:
-        prev = _HELD.pop(key, None)
-        if prev is not None:
-            _release(prev)
-        _HELD[key] = held = make()
-        return held
 
 
 def cache_slot(key: str, df: DataFrame) -> DataFrame:
     """`df.cache()`, held under `key`: the key's previous relation is
     unpersisted first. Without a slot a long-lived session keeps every
-    cached relation, and Spark's CacheManager, which matches a scan by
-    path, serves it after its table is rewritten in place. Builders
-    that cache the same plan share a slot: the CacheManager keeps one
-    entry per plan, so two slots over one plan would release each
-    other's entry."""
-    return _hold(key, df.cache)
+    cached relation for its life. Builders that cache the same plan
+    share a slot: the CacheManager keeps one entry per plan, so two
+    slots over one plan would release each other's entry."""
+    return store.request(("slot", key), None, df.cache, _unpersist)
 
 
 def _owner_pid(name: str) -> int | None:
@@ -128,25 +106,33 @@ def _sweepable(stale: Path, now: float) -> bool:
     return True
 
 
-def run_scratch(prefix: str) -> str:
+def _sweep_dead_runs() -> None:
+    if _BASE.exists():
+        now = time.time()
+        for stale in _BASE.iterdir():
+            if stale.name != _RUN and _sweepable(stale, now):
+                shutil.rmtree(stale, ignore_errors=True)
+
+
+def run_scratch(prefix: str, sf_dir: str | None = None) -> str:
     """A fresh scratch dir under this process's run directory, held
-    under the call site's prefix (or, inside a `tables.derived` build,
-    under that build's key): the dir the same key held before is
+    under (sf_dir, prefix): the dir the same key held before is
     removed, and this one stays until the key is requested again, so
-    callers may hand back lazy DataFrames over files inside it."""
-    global _swept
+    callers may hand back lazy DataFrames over files inside it. Plan
+    code leaves sf_dir None; a value built by `tables.derived` passes
+    its corpus, so its dir lives as long as the value."""
+    store.request("sweep", _RUN, _sweep_dead_runs)  # once per process
     root = _BASE / _RUN
-    if not _swept:
-        _swept = True
-        if _BASE.exists():
-            now = time.time()
-            for stale in _BASE.iterdir():
-                if stale.name != _RUN and _sweepable(stale, now):
-                    shutil.rmtree(stale, ignore_errors=True)
-    root.mkdir(parents=True, exist_ok=True)
-    return _hold(
-        (tables.building(), prefix),
-        lambda: tempfile.mkdtemp(prefix=prefix, dir=root),
+
+    def make() -> str:
+        root.mkdir(parents=True, exist_ok=True)
+        return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+    return store.request(
+        ("dir", sf_dir, prefix),
+        None,
+        make,
+        lambda held: shutil.rmtree(held, ignore_errors=True),
     )
 
 
@@ -166,7 +152,7 @@ def materialized_df(spark, sf_dir, kind, builder, cols):
     while unrelated kinds keep building, with no duplicated work."""
 
     def land():
-        out = run_scratch(f"edges_{kind}_")
+        out = run_scratch(f"edges_{kind}_", sf_dir)
         df = builder(spark, sf_dir).select(*cols)
         df.write.mode("overwrite").parquet(out)
         return out, df.schema

@@ -6,20 +6,29 @@ reference inferred schema at every boundary (pd.read_csv with no dtypes,
 cleaner.py:302) and patched case drift ad hoc; here every table has one
 canonical schema, normalized once at load.
 
-The catalog keys what it holds on the identity of a table's files
+The catalog keeps what it holds in the engine's one store (store.py),
+under its one rule: a value is served only for the input identity it
+was made for; otherwise the key's held value is released and a new one
+made. The identity of a table is the identity of its files
 (`identity`): (path, inode, size, mtime_ns) of the file, or the sorted
-stats of every part file when the table is a directory. It holds
-- each table's inferred schema, so `load` reads with an explicit
-  schema instead of paying Spark's one-task footer job on every call;
+stats of every part file when the table is a directory. Two kinds of
+request use it:
+- a table's inferred schema, keyed on its path, so `load` reads with
+  an explicit schema instead of paying Spark's one-task footer job on
+  every call. When a table's identity is superseded, the release
+  refreshes Spark's cached data over the path (refreshByPath, as
+  Spark's own writer does after a write), so no cached relation serves
+  a table rewritten out of band;
 - values derived from the tables under one sf_dir (`derived`: scratch
-  landings, bucketed tables, fitted models), rebuilt on the next call
-  after any of those tables is rewritten. A scratch directory made
-  while a value builds is held under the value's (sf_dir, kind), so
-  the rebuild removes the superseded one (scratch.py).
+  landings, bucketed tables, layouts, fitted models), keyed on
+  (sf_dir, kind) and made again on the next call after any of those
+  tables is rewritten. A scratch directory such a value lives in is
+  keyed on (sf_dir, prefix) (scratch.run_scratch), so the rebuild
+  removes the superseded one.
 A path that cannot be stat'ed (a remote object store) has no identity,
-and nothing keyed on it is kept: its schema is inferred on every read,
-and a value derived from an sf_dir none of whose tables can be stat'ed
-is built again on every call.
+so nothing made for it is served again: its schema is inferred on
+every read, and a value derived from an sf_dir none of whose tables
+can be stat'ed is built again on every call.
 
 Scale: `spark.read.parquet` is the vectorized columnar scan — Catalyst
 pushes filters and prunes columns into it, so plan code never needs to
@@ -31,7 +40,6 @@ from __future__ import annotations
 
 import os
 import stat
-import threading
 from collections.abc import Callable
 from typing import Any
 
@@ -39,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
+from .. import store
 from ..session import ensure_confs
 
 TABLE_NAMES = [
@@ -77,23 +86,20 @@ def identity(path: str) -> tuple | None:
         return None
 
 
-# path -> (identity, inferred schema); a rewrite replaces the entry.
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
-
-
 def _schema(
     spark: SparkSession, path: str
 ) -> tuple[StructType, tuple | None]:
     """(physical schema, identity) of the parquet table at `path`; the
-    schema is inferred once per identity."""
+    schema is inferred once per identity, and a superseded identity
+    first refreshes what Spark has cached over the path."""
     ensure_confs(spark)  # nanosAsLong decides the inferred ts type
     ident = identity(path)
-    hit = _SCHEMAS.get(path)
-    if ident is not None and hit is not None and hit[0] == ident:
-        return hit[1], ident
-    schema = spark.read.parquet(path).schema
-    if ident is not None:
-        _SCHEMAS[path] = (ident, schema)
+    schema = store.request(
+        ("schema", path),
+        ident,
+        lambda: spark.read.parquet(path).schema,
+        lambda _: spark.catalog.refreshByPath(path),
+    )
     return schema, ident
 
 
@@ -173,57 +179,16 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# (sf_dir, kind) -> (snapshot of sf_dir's tables, value)
-_DERIVED: dict[tuple, tuple[tuple, Any]] = {}
-_DERIVED_LOCKS: dict[tuple, threading.Lock] = {}
-_DERIVED_GUARD = threading.Lock()
-# the (sf_dir, kind) this thread is building, if any
-_BUILDING = threading.local()
-
-
-def building() -> tuple | None:
-    """The (sf_dir, kind) whose value this thread is building inside
-    `derived`, or None. Scratch directories made during a build are
-    held under it (scratch.run_scratch), so they live as long as the
-    derived value."""
-    return getattr(_BUILDING, "key", None)
-
-
-def _build_as(key: tuple, build: Callable[[], Any]) -> Any:
-    outer = building()
-    _BUILDING.key = key
-    try:
-        return build()
-    finally:
-        _BUILDING.key = outer
-
-
 def derived(
-    sf_dir: str,
-    kind: Any,
-    build: Callable[[], Any],
-    valid: Callable[[Any], bool] | None = None,
+    sf_dir: str, kind: Any, build: Callable[[], Any], app: str | None = None
 ) -> Any:
     """`build()` once per (sf_dir, kind) and identity of the tables
     under sf_dir: a rewrite of any of them makes the next call build
     again, so nothing derived from old files is served. When none of
-    the tables can be stat'ed there is no identity to key on, and the
-    value is built but not kept. `valid` can reject a kept value whose
-    backing lives outside the files (a catalog table in a stopped
-    session).
-
-    One lock per key, not a global one: unrelated kinds build
-    concurrently from separate threads (a builder may itself ask for
-    another kind), while one kind never builds twice."""
-    key = (sf_dir, kind)
-    with _DERIVED_GUARD:
-        lock = _DERIVED_LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
-        if not any(snap):
-            return _build_as(key, build)
-        hit = _DERIVED.get(key)
-        stale = hit is None or hit[0] != snap
-        if stale or (valid is not None and not valid(hit[1])):
-            hit = _DERIVED[key] = (snap, _build_as(key, build))
-        return hit[1]
+    the tables can be stat'ed there is no identity to key on, and every
+    call builds. A value that lives in one Spark application as well as
+    in files (a catalog table) passes `app`, the application's id: a
+    new application builds it again."""
+    snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
+    ident = (snap, app) if any(snap) else None
+    return store.request(("derived", sf_dir, kind), ident, build)

@@ -73,6 +73,18 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     return s
 
 
+def _drain(
+    stream_df: DataFrame, mode: str, sink, checkpoint_dir: str | None = None
+) -> None:
+    """Run `stream_df` over its whole backlog with Trigger.AvailableNow,
+    handing each micro-batch to `sink(df, batch_id)`, and return once
+    the stream stops."""
+    writer = stream_df.writeStream.foreachBatch(sink).outputMode(mode)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def stream_events(
     spark: SparkSession, sf_dir: str, single_batch: bool = False
 ) -> DataFrame:
@@ -285,20 +297,21 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def run_update_latest(stream_df: DataFrame, keys: list[str]) -> DataFrame:
+def run_update_latest(
+    stream_df: DataFrame, out_dir: str, keys: list[str]
+) -> DataFrame:
     """Execute an update-mode stateful stream with AvailableNow,
-    landing each micro-batch (tagged with its batch id) in a per-run
-    parquet sink, and return one row per key: the latest emission.
+    landing each micro-batch (tagged with its batch id) in the parquet
+    sink `out_dir`, and return one row per key: the latest emission.
 
     foreachBatch + parquet keeps the data plane distributed end-to-end:
-    the sink dir outlives this call (scratch.run_scratch — removed by
-    the next call), so the returned DataFrame is a LAZY keep-latest window
-    over the sink files, never an O(distinct keys) driver collect. The
-    keep-latest collapse makes the result independent of how
-    AvailableNow chops the input into batches."""
+    the sink dir is the calling query's own (scratch.run_scratch), so
+    it outlives this call and the returned DataFrame is a LAZY
+    keep-latest window over the sink files, never an O(distinct keys)
+    driver collect. The keep-latest collapse makes the result
+    independent of how AvailableNow chops the input into batches."""
     from pyspark.sql.window import Window
 
-    out_dir = run_scratch("stream_upd_")
     spark = stream_df.sparkSession
 
     def sink(df: DataFrame, batch_id: int) -> None:
@@ -306,13 +319,7 @@ def run_update_latest(stream_df: DataFrame, keys: list[str]) -> DataFrame:
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, "update", sink)
     w = Window.partitionBy(*keys).orderBy(F.desc("batch_id"))
     return (
         spark.read.parquet(out_dir)
@@ -345,14 +352,7 @@ def run_incremental(
     def sink(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, "append", sink, checkpoint_dir)
     import os
 
     has_batches = os.path.isdir(out_dir) and any(
@@ -367,7 +367,7 @@ def run_incremental(
 
 
 def run_keyed_upsert(
-    stream_df: DataFrame, keys: list[str], order_cols: list[str]
+    stream_df: DataFrame, out_dir: str, keys: list[str], order_cols: list[str]
 ) -> DataFrame:
     """CDC-style streaming MERGE: maintain a latest-row-per-key snapshot
     across micro-batches via foreachBatch — the upsert operator Spark
@@ -392,7 +392,6 @@ def run_keyed_upsert(
     files containing matched keys."""
     from pyspark.sql.window import Window
 
-    out_dir = run_scratch("stream_ups_")
     spark = stream_df.sparkSession
     schema = stream_df.schema
     w = Window.partitionBy(*keys).orderBy(
@@ -417,13 +416,7 @@ def run_keyed_upsert(
         merged.write.mode("overwrite").parquet(f"{out_dir}/v={batch_id}")
         state["version"] = batch_id
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, "update", sink)
     if state["version"] is None:  # zero batches fired — empty snapshot
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(
@@ -507,41 +500,35 @@ def late_tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def run_append(stream_df: DataFrame) -> DataFrame:
+def run_append(stream_df: DataFrame, out_dir: str) -> DataFrame:
     """Execute an append-mode stream with AvailableNow, landing each
-    micro-batch in a per-run parquet sink, and return a LAZY DataFrame
-    over the sink files.
+    micro-batch in the parquet sink `out_dir`, and return a LAZY
+    DataFrame over the sink files.
 
     Append-mode emissions are final (each row emitted exactly once), so
     the union of all batches IS the result — no keep-latest collapse
     needed. Output never funnels through driver memory: an O(distinct
     keys) result like st05's stream dedup stays distributed end-to-end
     (round-3 VERDICT "What's wrong" #1; run_available_now shares the
-    same parquet-sink discipline). The sink dir outlives this call
-    (scratch.run_scratch — removed by the next call), so callers may
-    keep composing on the returned DataFrame until then. The explicit
-    schema makes the read well-defined even when zero batches fired."""
-    out_dir = run_scratch("stream_app_")
+    same parquet-sink discipline). The sink dir is the calling query's
+    own (scratch.run_scratch — removed by that query's next call), so
+    callers may keep composing on the returned DataFrame until then.
+    The explicit schema makes the read well-defined even when zero
+    batches fired."""
     spark = stream_df.sparkSession
     schema = stream_df.schema
 
     def sink(df: DataFrame, batch_id: int) -> None:
         df.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, "append", sink)
     return spark.read.schema(schema).parquet(out_dir)
 
 
-def run_available_now(stream_df: DataFrame) -> DataFrame:
+def run_available_now(stream_df: DataFrame, out_dir: str) -> DataFrame:
     """Execute a complete-mode stream to completion with AvailableNow,
-    rewriting the FULL complete-mode result to a per-run parquet dir on
-    each micro-batch; return a LAZY DataFrame over the final write.
+    rewriting the FULL complete-mode result under `out_dir` on each
+    micro-batch; return a LAZY DataFrame over the final write.
 
     Complete mode re-emits the whole result per batch, so the LAST
     batch's directory IS the final table (each batch lands under
@@ -550,25 +537,18 @@ def run_available_now(stream_df: DataFrame) -> DataFrame:
     the memory sink this round replaced (round-4 watch-list), output
     never funnels through driver memory: the result stays a
     distributed file scan no matter how many windows/keys the
-    aggregation holds. The dir outlives the call (scratch.run_scratch).
-    Append-mode streams use run_append, update-mode ones
-    run_update_latest."""
+    aggregation holds. The dir is the calling query's own
+    (scratch.run_scratch), so it outlives the call. Append-mode
+    streams use run_append, update-mode ones run_update_latest."""
     import os
 
-    out_dir = run_scratch("stream_cpl_")
     spark = stream_df.sparkSession
     schema = stream_df.schema
 
     def sink(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, "complete", sink)
     batches = sorted(
         (int(n.split("=")[1]) for n in os.listdir(out_dir) if "=" in n),
         reverse=True,

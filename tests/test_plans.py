@@ -64,6 +64,69 @@ def test_plan_caches_go_through_cache_slot():
     assert bare == []
 
 
+# Module-level state outside store.py, each with the reason it is not
+# a value kept between calls for some input.
+STATE_OUTSIDE_STORE = {
+    "plans/__init__.py:_REGISTRY": (
+        "the query registry, built once from the code on first use; "
+        "no input can supersede it"
+    ),
+}
+
+
+def test_engine_state_lives_in_the_store():
+    """Everything the engine keeps between calls is a store request
+    (store.py), made for an input identity and released under the
+    store's one rule. Fails on module-level state anywhere else: a
+    module-level name that engine code mutates (assigns or deletes a
+    subscript of, calls a mutating method on, or rebinds through
+    `global`), and a module-level threading.local() or lock."""
+    mutators = {
+        "setdefault", "pop", "popitem", "update", "clear",
+        "append", "extend", "insert", "add", "discard", "remove",
+    }
+    found = set()
+    for path in sorted(ENGINE_DIR.rglob("*.py")):
+        rel = path.relative_to(ENGINE_DIR).as_posix()
+        if rel == "store.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        top = set()
+        for stmt in tree.body:
+            if isinstance(stmt, defs):
+                continue
+            for n in ast.walk(stmt):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                    top.add(n.id)
+                if isinstance(n, ast.Call):
+                    f = n.func
+                    called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                    if called in ("local", "Lock", "RLock"):
+                        found.add(f"{rel}:{n.lineno}")
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Global):
+                found |= {f"{rel}:{g}" for g in n.names}
+                continue
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in mutators
+            ):
+                hit = n.func.value
+            elif isinstance(n, (ast.Assign, ast.AugAssign, ast.Delete)):
+                targets = getattr(n, "targets", None) or [n.target]
+                hit = next(
+                    (t.value for t in targets if isinstance(t, ast.Subscript)),
+                    None,
+                )
+            else:
+                continue
+            if isinstance(hit, ast.Name) and hit.id in top:
+                found.add(f"{rel}:{hit.id}")
+    assert found == set(STATE_OUTSIDE_STORE)
+
+
 def _module_name(path: Path) -> str:
     parts = path.relative_to(REPO).with_suffix("").parts
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)

@@ -611,7 +611,10 @@ def test_st10_upsert_is_batch_chop_independent(spark, tmp_path):
         .parquet(src)
     )
     got = jobs.run_keyed_upsert(
-        stream, keys=["user_id"], order_cols=["ts", "event_id"]
+        stream,
+        str(tmp_path / "snapshots"),
+        keys=["user_id"],
+        order_cols=["ts", "event_id"],
     )
     from pyspark.sql.window import Window
 

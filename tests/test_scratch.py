@@ -9,7 +9,7 @@ import sys
 import threading
 import time
 
-from customer_review__etl_spark import scratch
+from customer_review__etl_spark import scratch, store
 from customer_review__etl_spark.plans import all_queries
 from customer_review__etl_spark.sources import tables
 from customer_review__etl_spark.sources.tables import TABLE_NAMES
@@ -183,5 +183,5 @@ def test_concurrent_requests_leave_one_dir_per_key():
     assert not any(t.is_alive() for t in threads)
     run_dir = scratch._BASE / scratch._RUN
     left = [str(p) for p in run_dir.iterdir() if p.name.startswith("t_stress_")]
-    assert left == [scratch._HELD[(None, "t_stress_")]]
+    assert left == [store._HELD[("dir", None, "t_stress_")][1]]
     assert os.path.isdir(other)

@@ -157,6 +157,29 @@ def test_query_after_out_of_band_rewrite(spark, tmp_path, name, table, column):
     assert after != before
 
 
+def test_cached_relation_is_not_served_after_a_rewrite(spark, tmp_path):
+    """A relation cached through cache_slot is matched by plan, so a
+    fresh frame over the same table reads from it. Loading the table
+    after an out-of-band rewrite supersedes its identity, which
+    refreshes Spark's cached data over the path: the fresh frame counts
+    the new rows."""
+    from customer_review__etl_spark import scratch
+
+    d = str(tmp_path / "sf")
+    path = f"{d}/documents.parquet"
+    os.makedirs(d)
+    shutil.copyfile(f"{SF_DIR}/documents.parquet", path)
+    cached = scratch.cache_slot(
+        "test_rewrite", tables.load(spark, d, "documents").select("doc_id")
+    )
+    n = cached.count()
+    t = pq.read_table(path)
+    tmp = f"{d}/.rewrite.parquet"
+    pq.write_table(t.slice(0, n // 2), tmp)
+    os.replace(tmp, path)
+    assert tables.load(spark, d, "documents").select("doc_id").count() == n // 2
+
+
 def test_io13_warm_call_writes_no_layout(spark, tmp_path):
     """io13 lays the events table out once per identity: over unchanged
     tables a second call builds without launching any job, so no write,

@@ -41,10 +41,10 @@ def _ts_profile(df):
     return row["n"], naive(row["lo"]), naive(row["hi"])
 
 
-def test_stream_and_batch_agree_on_event_time(spark):
+def test_stream_and_batch_agree_on_event_time(spark, tmp_path):
     batch = tables.load(spark, SF_DIR, "events")
     streamed = jobs.run_append(
-        jobs.stream_events(spark, SF_DIR, single_batch=True)
+        jobs.stream_events(spark, SF_DIR, single_batch=True), str(tmp_path)
     )
     assert _ts_profile(streamed) == _ts_profile(batch)
 

@@ -24,9 +24,10 @@ def test_stream_tumbling_equals_batch(spark):
     assert _rows(stream, cols) == _rows(batch, cols)
 
 
-def test_dedup_within_watermark(spark):
+def test_dedup_within_watermark(spark, tmp_path):
     out = jobs.run_append(
-        jobs.dedup_within_watermark(jobs.stream_events(spark, SF_DIR))
+        jobs.dedup_within_watermark(jobs.stream_events(spark, SF_DIR)),
+        str(tmp_path),
     )
     n_keys = (
         tables.load(spark, SF_DIR, "events")
@@ -37,6 +38,16 @@ def test_dedup_within_watermark(spark):
     # With the whole (finite) file inside one watermark horizon per key
     # arrival order, streaming dedup keeps ≥ distinct-keys and ≤ input.
     assert out.select("user_id", "event_type").distinct().count() == n_keys
+
+
+def test_stream_results_outlive_another_querys_call(spark):
+    """st05 and st09 both exit through run_append, each into a sink dir
+    of its own: building st09 leaves the files st05's DataFrame reads."""
+    st05 = SP.st05_stream_dedup(spark, SF_DIR)
+    n = st05.count()
+    SP.st09_stream_stream_join(spark, SF_DIR).collect()
+    assert n > 0
+    assert st05.count() == n
 
 
 def test_stateful_stats_equals_batch(spark):

@@ -97,14 +97,15 @@ def theme_distribution(themed: DataFrame) -> DataFrame:
     )
 
 
-def top_words(themed: DataFrame, k: int = 50) -> DataFrame:
-    """Dashboard A6, scale-safe top-K form (dashboard.py:36)."""
+def top_words(themed: DataFrame) -> DataFrame:
+    """Dashboard A6, scale-safe top-K form (dashboard.py:36): the 50
+    most frequent unigrams."""
     return (
         themed.select(F.explode("unigrams").alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "word")
-        .limit(k)
+        .limit(50)
     )
 
 
@@ -168,10 +169,8 @@ def run_pipeline(
                 "doc_id", "lang", "source", "topic", "theme"
             )
             sinks.write_parquet(processed, processed_path)
-            sinks.write_csv(
-                theme_distribution(themed), dist_path, single_file=True
-            )
-            sinks.write_csv(top_words(themed), words_path, single_file=True)
+            sinks.write_csv(theme_distribution(themed), dist_path)
+            sinks.write_csv(top_words(themed), words_path)
         m = classified.result()
 
         metrics = {

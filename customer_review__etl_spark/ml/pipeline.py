@@ -47,10 +47,10 @@ THEME_LABELS = {
 }
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Native-JVM token column: F1-F5 chain + unigram∪bigram union
-    (mirrors TfidfVectorizer ngram_range=(1,2), cleaner.py:176-182)."""
-    df = df.withColumn("unigrams", T.clean_tokens(F.col(text_col)))
+def with_tokens(df: DataFrame) -> DataFrame:
+    """Native-JVM token column over `text`: F1-F5 chain + unigram∪bigram
+    union (mirrors TfidfVectorizer ngram_range=(1,2), cleaner.py:176-182)."""
+    df = df.withColumn("unigrams", T.clean_tokens(F.col("text")))
     ng = NGram(n=2, inputCol="unigrams", outputCol="bigrams")
     return ng.transform(df).withColumn(
         "tokens", F.concat("unigrams", "bigrams")
@@ -127,11 +127,11 @@ def assign_topics(transformed: DataFrame) -> DataFrame:
     )
 
 
-def topic_top_words(model: PipelineModel, n: int = 10) -> DataFrame:
-    """M4: describeTopics(n) flattened to (topic, rank, term)."""
+def topic_top_words(model: PipelineModel) -> DataFrame:
+    """M4: describeTopics(10) flattened to (topic, rank, term)."""
     cv_model, _, lda_model = model.stages
     vocab = cv_model.vocabulary
-    desc = lda_model.describeTopics(n)
+    desc = lda_model.describeTopics(10)
     sess = desc.sparkSession
     vocab_df = sess.createDataFrame(
         [(i, w) for i, w in enumerate(vocab)], "term_idx INT, term STRING"
@@ -150,33 +150,27 @@ def topic_top_words(model: PipelineModel, n: int = 10) -> DataFrame:
     )
 
 
-def md5_split(df: DataFrame, key_col: str, train_frac_hex: str = "cd") -> DataFrame:
+def md5_split(df: DataFrame, key_col: str) -> DataFrame:
     """M6 as a deterministic content-addressed split: rows whose
     md5(key) first byte < 0xcd (≈80.1%) train, rest test. Reproducible
     across engines, cluster sizes, and runs — no RNG state."""
     h2 = F.substring(F.md5(F.col(key_col).cast("string")), 1, 2)
     return df.withColumn(
         "split",
-        F.when(h2 < F.lit(train_frac_hex), F.lit("train")).otherwise(
+        F.when(h2 < F.lit("cd"), F.lit("train")).otherwise(
             F.lit("test")
         ),
     )
 
 
-def stratified_split(
-    df: DataFrame,
-    key_col: str,
-    strata_col: str,
-    train_num: int = 4,
-    train_den: int = 5,
-) -> DataFrame:
+def stratified_split(df: DataFrame, key_col: str, strata_col: str) -> DataFrame:
     """M6 with the reference's ``stratify=y`` parity (cleaner.py:246-248,
     SURVEY §7 risk (e)): rank rows WITHIN each stratum by md5(key) — a
     deterministic pseudo-random permutation — and train the first
-    ⌊n·train_num/train_den⌋. Per-stratum train fraction is exact within
+    ⌊n·4/5⌋. Per-stratum train fraction is exact within
     one row, unlike a per-stratum hash THRESHOLD whose binomial drift
     (≈±4 pts at n=100) defeats the point of stratifying. Pure integer
-    comparison (rn·den ≤ cnt·num): no float rounding to diverge
+    comparison (rn·5 ≤ cnt·4): no float rounding to diverge
     cross-engine.
 
     Scale (the salted path, round-6 VERDICT ask #3): a naive
@@ -229,17 +223,18 @@ def stratified_split(
     return joined.withColumn(
         "split",
         F.when(
-            rn * F.lit(train_den) <= F.col("_cnt") * F.lit(train_num),
+            rn * F.lit(5) <= F.col("_cnt") * F.lit(4),
             F.lit("train"),
         ).otherwise(F.lit("test")),
     ).drop("_h", "_bkt", "_rn0", "_strat", "_obkt", "_off", "_cnt")
 
 
 def fit_classifier(
-    df_tokens_split: DataFrame, label_col: str = "lang"
+    df_tokens_split: DataFrame,
 ) -> tuple[PipelineModel, DataFrame, DataFrame]:
     """M7+M8: the second, unigram-only TF-IDF (cleaner.py:251-257) +
-    RF(numTrees=100, seed=42); fit on train, transform test."""
+    RF(numTrees=100, seed=42) predicting `lang`; fit on train,
+    transform test."""
     # NOTE: unlike fit_lda, this fit is not staged-with-persist. The
     # RF's internal BaggedPoint persist already bounds its passes, and
     # CountVectorizer's vocabulary tie-breaks (equal counts) follow the
@@ -265,7 +260,7 @@ def fit_classifier(
             # scale unseen serving labels are routine, and a scoring
             # pass that aborts on one is a pipeline outage.
             StringIndexer(
-                inputCol=label_col,
+                inputCol="lang",
                 outputCol="label",
                 stringOrderType="alphabetAsc",
                 handleInvalid="keep",

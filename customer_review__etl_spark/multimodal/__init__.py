@@ -1,9 +1,9 @@
 """Multimodal columns: image/audio/video as opaque `binary` columns
 with typed metadata (north-star extension; the reference is text-only).
 
-The real decode libraries (Pillow/librosa/av) are not in this
-environment, so the decoder registry stubs them behind explicit
-NotImplementedError + a deterministic fake used by tests and plans —
-but the Spark-side plumbing (binary schema, Arrow batch shape,
-mapInPandas signatures, partitioning) is real and tested.
+No media decoder (Pillow/librosa/av) is a dependency, so the decode
+pass runs a deterministic stand-in decoder whose output the DuckDB
+oracle recomputes; the Spark-side plumbing (binary schema, Arrow
+batch shape, mapInPandas signatures, partitioning) is real and
+tested.
 """

@@ -3,9 +3,10 @@ feature-extraction decode pass (Arrow-batched mapInPandas).
 
 Since the driver testdata ships no media files, the blob stand-in is
 the UTF-8 encoding of `documents.text` (ASCII by construction, so
-byte offsets == char offsets); a production deployment reads real
-bytes via spark.read.format("binaryFile") with the identical plan
-shape.
+byte offsets == char offsets), and the decode pass runs a
+deterministic stand-in decoder (`fake_decode`); a production
+deployment reads real bytes via spark.read.format("binaryFile") and
+plugs a real decoder into the identical plan shape.
 
 Scale notes:
 - metadata (length/digest/magic) never leaves the JVM;
@@ -30,9 +31,9 @@ FEATURE_SCHEMA = (
 )
 
 
-def with_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the binary stand-in column."""
-    return df.withColumn("blob", F.encode(F.col(text_col), "UTF-8"))
+def with_blob(df: DataFrame) -> DataFrame:
+    """Attach the binary stand-in column: `text` as UTF-8 bytes."""
+    return df.withColumn("blob", F.encode(F.col("text"), "UTF-8"))
 
 
 def binary_meta(df_blob: DataFrame) -> DataFrame:
@@ -42,182 +43,6 @@ def binary_meta(df_blob: DataFrame) -> DataFrame:
         F.length("blob").cast("long").alias("n_bytes"),
         F.md5("blob").alias("digest"),
         F.lower(F.hex(F.substring(F.col("blob"), 1, 4))).alias("magic_hex"),
-    )
-
-
-def _decode_ppm(blob: bytes) -> tuple[int, int, int, float]:
-    """Binary PPM (P6) decode — pure Python, no libraries: parse the
-    'P6 <w> <h> <maxval>' header (whitespace/#-comment tolerant per
-    the Netpbm spec), then mean Rec.601 luminance over the raw RGB
-    payload. Exact integer header parse; the only float is the final
-    mean, a deterministic sum/size division."""
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(blob) and blob[pos : pos + 1].isspace():
-            pos += 1
-        if pos >= len(blob):  # header ends before 3 fields parsed
-            raise ValueError("truncated PPM header")
-        if blob[pos : pos + 1] == b"#":  # comment to end of line
-            while pos < len(blob) and blob[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(blob) and not blob[pos : pos + 1].isspace():
-            pos += 1
-        if not blob[start:pos].isdigit():
-            raise ValueError("malformed PPM header field")
-        fields.append(int(blob[start:pos]))
-    pos += 1  # single whitespace after maxval, then raw bytes
-    w, h, maxval = fields
-    if maxval > 255:
-        raise NotImplementedError("16-bit PPM not supported")
-    px = blob[pos : pos + w * h * 3]
-    if len(px) != w * h * 3:
-        raise ValueError("truncated PPM payload")
-    # integer-exact weighted sum; one division at the end
-    lum_num = sum(
-        299 * px[i] + 587 * px[i + 1] + 114 * px[i + 2]
-        for i in range(0, len(px), 3)
-    )
-    return w, h, 3, lum_num / (1000.0 * 255.0 * w * h)
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# channels per PNG color type: gray, RGB, palette, gray+alpha, RGBA
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_unfilter(raw: bytes, w: int, h: int, ch: int) -> bytearray:
-    """Invert the per-scanline PNG filters (spec §9: None/Sub/Up/
-    Average/Paeth) over the zlib-inflated stream. Pure integer
-    byte arithmetic — bit-exact by construction."""
-    stride = w * ch
-    if len(raw) != (stride + 1) * h:
-        raise ValueError("PNG payload size mismatch")
-    out = bytearray(stride * h)
-    for y in range(h):
-        f = raw[y * (stride + 1)]
-        line = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-        o = y * stride
-        if f == 0:  # None
-            out[o : o + stride] = line
-        elif f == 1:  # Sub
-            for x in range(stride):
-                a = out[o + x - ch] if x >= ch else 0
-                out[o + x] = (line[x] + a) & 0xFF
-        elif f == 2:  # Up
-            for x in range(stride):
-                b = out[o - stride + x] if y else 0
-                out[o + x] = (line[x] + b) & 0xFF
-        elif f == 3:  # Average
-            for x in range(stride):
-                a = out[o + x - ch] if x >= ch else 0
-                b = out[o - stride + x] if y else 0
-                out[o + x] = (line[x] + (a + b) // 2) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(stride):
-                a = out[o + x - ch] if x >= ch else 0
-                b = out[o - stride + x] if y else 0
-                c = out[o - stride + x - ch] if (y and x >= ch) else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                out[o + x] = (line[x] + pr) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-    return out
-
-
-def _decode_png(blob: bytes) -> tuple[int, int, int, float]:
-    """Native PNG decode for the non-interlaced 8-bit subset — pure
-    stdlib (`zlib` inflate + the filter inversion above), no Pillow
-    (round-15, r14 VERDICT optional ask #7). Handles color types
-    0/2/3/4/6 (gray, RGB, palette via PLTE, gray+alpha, RGBA);
-    16-bit and Adam7-interlaced images stay behind the honest
-    NotImplementedError guard. Luminance is the same integer-exact
-    Rec.601 sum as the PPM path (alpha ignored; palette indices are
-    resolved to their PLTE RGB first); gray uses the gray byte
-    directly."""
-    import zlib
-
-    pos = 8
-    w = h = None
-    bit_depth = color_type = interlace = None
-    plte = None
-    idat = bytearray()
-    while pos + 8 <= len(blob):
-        ln = int.from_bytes(blob[pos : pos + 4], "big")
-        typ = blob[pos + 4 : pos + 8]
-        data = blob[pos + 8 : pos + 8 + ln]
-        if len(data) != ln:
-            raise ValueError("truncated PNG chunk")
-        if typ == b"IHDR":
-            w = int.from_bytes(data[0:4], "big")
-            h = int.from_bytes(data[4:8], "big")
-            bit_depth, color_type, _comp, _filt, interlace = data[8:13]
-        elif typ == b"PLTE":
-            plte = data
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln  # length + type + data + crc
-    if w is None or not idat:
-        raise ValueError("PNG missing IHDR or IDAT")
-    if bit_depth != 8 or interlace != 0:
-        raise NotImplementedError(
-            "only 8-bit non-interlaced PNG decodes natively"
-        )
-    ch = _PNG_CHANNELS.get(color_type)
-    if ch is None:
-        raise ValueError(f"bad PNG color type {color_type}")
-    if color_type == 3 and plte is None:
-        raise ValueError("palette PNG without PLTE chunk")
-    try:
-        inflated = zlib.decompress(bytes(idat))
-    except zlib.error as e:
-        # keep the documented/tested error surface: corrupt streams
-        # raise ValueError, never a bare zlib.error (r15 ADVICE #3)
-        raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
-    px = _png_unfilter(inflated, w, h, ch)
-    if color_type == 3:
-        if px and max(px) >= len(plte) // 3:
-            raise ValueError("PNG palette index out of PLTE range")
-        lum_num = sum(
-            299 * plte[3 * i] + 587 * plte[3 * i + 1] + 114 * plte[3 * i + 2]
-            for i in px
-        )
-        n_ch = 3  # the decoded pixels are RGB
-    elif ch == 1:
-        lum_num, n_ch = 1000 * sum(px), 1
-    elif ch == 2:  # gray+alpha: luminance is the gray channel
-        lum_num, n_ch = 1000 * sum(px[0::2]), 2
-    else:  # RGB / RGBA
-        lum_num = sum(
-            299 * px[i] + 587 * px[i + 1] + 114 * px[i + 2]
-            for i in range(0, len(px), ch)
-        )
-        n_ch = ch
-    return w, h, n_ch, lum_num / (1000.0 * 255.0 * w * h)
-
-
-def decode_image(blob: bytes) -> tuple[int, int, int, float]:
-    """REAL image decode. Uncompressed binary PPM (P6) decodes with
-    the dependency-free parser above, and non-interlaced 8-bit PNG
-    decodes natively via stdlib zlib (round 15) — real bytes→pixels
-    paths that run in this environment. JPEG (and the 16-bit /
-    Adam7-interlaced PNG corners) route to Pillow when installed;
-    the guard below remains for deployments without it."""
-    if blob is None:
-        return 0, 0, 0, 0.0
-    if blob[:2] == b"P6":
-        return _decode_ppm(blob)
-    if blob[:8] == _PNG_SIG:
-        return _decode_png(blob)
-    raise NotImplementedError(
-        "JPEG decoding requires Pillow; PPM(P6) and 8-bit "
-        "non-interlaced PNG decode natively, fake_decode covers "
-        "arbitrary bytes in tests"
     )
 
 
@@ -313,18 +138,14 @@ def blob_chunks(df_blob: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(df_blob: DataFrame, real: bool = False) -> DataFrame:
-    """mapInPandas decode pass over the binary column.
-
-    `real=True` routes to decode_image (NotImplementedError here);
-    the default uses the deterministic fake. Batch shape, Arrow
-    transfer, and output schema are identical either way.
-    """
-    decoder = decode_image if real else fake_decode
+def extract_features(df_blob: DataFrame) -> DataFrame:
+    """mapInPandas decode pass over the binary column, with the
+    deterministic stand-in decoder (`fake_decode`). A real decoder
+    keeps the batch shape, Arrow transfer and output schema."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decoder(b) for b in pdf["blob"]]
+            feats = [fake_decode(b) for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].astype("int64"),

@@ -25,7 +25,6 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for the DuckDB oracle; None → rows-only check
-    doc: str = ""
 
 
 # The external verifier samples the registry head (first ~50 entries), so

@@ -153,7 +153,7 @@ def _hex32(expr_digest: str, offset: int) -> str:
     at 1-based `offset` into a non-negative int64 (ASCII arithmetic, no
     conv()/unhex() — identical text runs on Spark and DuckDB)."""
     terms = " + ".join(
-        f"({_hexdigit_to_int('any', f'substr({expr_digest}, {offset + i}, 1)')}"
+        f"({_hexdigit_to_int(f'substr({expr_digest}, {offset + i}, 1)')}"
         f" * CAST({16 ** (7 - i)} AS BIGINT))"  # INT32 literal would overflow
         for i in range(8)
     )
@@ -288,7 +288,7 @@ def d02_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _hexdigit_to_int(engine: str, char_expr: str) -> str:
+def _hexdigit_to_int(char_expr: str) -> str:
     """ASCII arithmetic hex-digit decode, identical in both engines."""
     return (
         f"(CASE WHEN ascii({char_expr}) >= 97 THEN ascii({char_expr}) - 87 "
@@ -299,7 +299,7 @@ def _hexdigit_to_int(engine: str, char_expr: str) -> str:
 def _bit_expr(engine: str, k: int) -> str:
     """Bit k (0-63) of md5(tok): nibble k//4 of the hex digest, bit
     3-(k%4) within the nibble. `engine` picks the integer-div spelling."""
-    nib = _hexdigit_to_int(engine, f"substr(md5(tok), {k // 4 + 1}, 1)")
+    nib = _hexdigit_to_int(f"substr(md5(tok), {k // 4 + 1}, 1)")
     shift = 2 ** (3 - k % 4)
     div = "div" if engine == "spark" else "//"
     return f"(({nib} {div} {shift}) % 2)"
@@ -327,7 +327,7 @@ def _simhash_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             *[
-                F.expr(_hexdigit_to_int("spark", f"substr(dg, {j + 1}, 1)"))
+                F.expr(_hexdigit_to_int(f"substr(dg, {j + 1}, 1)"))
                 .alias(f"nib{j}")
                 for j in range(16)
             ],
@@ -1306,7 +1306,7 @@ ORDER BY doc_a, doc_b
 _D05_SQL = f"""
 WITH {_D02_CTES},
 pairs AS ({_D02_BODY}),
-{sql_cc_min_label("pairs", "doc_a", "doc_b")}
+{sql_cc_min_label("doc_a", "doc_b")}
 SELECT doc.doc_id,
        least(doc.doc_id, coalesce(c.mn, doc.doc_id)) AS cluster_id,
        CAST(doc.doc_id = least(doc.doc_id, coalesce(c.mn, doc.doc_id))
@@ -1472,7 +1472,7 @@ WITH pairs AS (
   UNION
   SELECT doc_a, doc_b FROM ({_D04_BODY})
 ),
-{sql_cc_min_label("pairs", "doc_a", "doc_b")}
+{sql_cc_min_label("doc_a", "doc_b")}
 SELECT doc.doc_id,
        least(doc.doc_id, coalesce(c.mn, doc.doc_id)) AS cluster_id,
        CAST(doc.doc_id = least(doc.doc_id, coalesce(c.mn, doc.doc_id))

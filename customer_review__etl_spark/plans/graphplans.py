@@ -573,7 +573,7 @@ pairs AS (
   GROUP BY 1, 2
   HAVING count(1) >= {GR05_MIN_ORDERS}
 ),
-{sql_cc_min_label("pairs", "src", "dst")},
+{sql_cc_min_label("src", "dst")},
 nodes AS (SELECT src AS part FROM pairs
           UNION SELECT dst FROM pairs)
 SELECT n.part, least(n.part, coalesce(c.mn, n.part)) AS component

@@ -92,9 +92,7 @@ def shuffle_width(spark) -> int:
         return 64
 
 
-def sql_cc_min_label(
-    pairs: str = "pairs", a: str = "s", b: str = "d", rounds: int = 18
-) -> str:
+def sql_cc_min_label(a: str, b: str) -> str:
     """Unrolled min-label + pointer-jump connected components as oracle
     CTEs (round 13) — the SQL twin of dedupplans.connected_components,
     replacing the all-pairs recursive `reach` closure the CC oracles
@@ -137,9 +135,10 @@ def sql_cc_min_label(
     (propagate + jump) and the edge list once — inlined, the plan tree
     and the parquet file handles under it grow exponentially with
     `rounds` (measured: 'Too many open files' before any row moved)."""
+    rounds = 18
     ctes = [
-        f"edges_m AS MATERIALIZED (SELECT {a} AS s, {b} AS d FROM {pairs} "
-        f"UNION SELECT {b}, {a} FROM {pairs})",
+        f"edges_m AS MATERIALIZED (SELECT {a} AS s, {b} AS d FROM pairs "
+        f"UNION SELECT {b}, {a} FROM pairs)",
         "lab0 AS MATERIALIZED "
         "(SELECT DISTINCT s AS node, s AS lbl FROM edges_m)",
     ]

@@ -46,9 +46,7 @@ def io01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2+S3: nation → header CSV (single-file path) → explicit-schema
     read-back. Hash gate certifies losslessness vs the parquet original."""
     out = run_scratch("io01_csv_")
-    sinks.write_csv(
-        tables.load(spark, sf_dir, "nation"), out, single_file=True
-    )
+    sinks.write_csv(tables.load(spark, sf_dir, "nation"), out)
     return sinks.read_csv(spark, out, _NATION_SCHEMA)
 
 

@@ -55,7 +55,7 @@ def ml01_lda_themes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml02_topic_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4: top-10 terms per topic (cleaner.py:204-208), from the shared
     per-process fit (lda_model_m)."""
-    return P.topic_top_words(lda_model_m(spark, sf_dir), 10)
+    return P.topic_top_words(lda_model_m(spark, sf_dir))
 
 
 def ml03_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:

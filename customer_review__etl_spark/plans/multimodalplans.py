@@ -4,15 +4,10 @@ the stand-in decoder (multimodal/binary.py fake_decode) derives its
 fake (width, height, channels, luminance) from md5-digest bytes with
 pure integer arithmetic, so the oracle recomputes the identical values
 from the hex digest and the hash gate certifies the whole mapInPandas
-Arrow round-trip, not just row counts. (A REAL decoder would drop mm02
-back to rows-only — the oracle checks the stub's contract, which is
-exactly the Spark-side plumbing under test. A real bytes→pixels
-decoder DOES exist and is tested through the same mapInPandas path:
-binary.decode_image parses uncompressed PPM(P6) natively and — since
-round 15 — 8-bit non-interlaced PNG via stdlib zlib (all five scanline
-filters, color types 0/2/3/4/6), no libraries —
-tests/test_multimodal.py; only JPEG and the 16-bit/interlaced PNG
-corners still need Pillow.)"""
+Arrow round-trip, not just row counts. A real decoder would plug into
+the same batch path and drop mm02 back to rows-only: the oracle checks
+the stand-in's contract, which is exactly the Spark-side plumbing
+under test."""
 
 from __future__ import annotations
 
@@ -26,8 +21,8 @@ from .dedupplans import _hexdigit_to_int
 
 def _hexpair(dg: str, p: int) -> str:
     """SQL: byte value of hex digest chars p, p+1 (1-based)."""
-    hi = _hexdigit_to_int("duckdb", f"substr({dg}, {p}, 1)")
-    lo = _hexdigit_to_int("duckdb", f"substr({dg}, {p + 1}, 1)")
+    hi = _hexdigit_to_int(f"substr({dg}, {p}, 1)")
+    lo = _hexdigit_to_int(f"substr({dg}, {p + 1}, 1)")
     return f"(16 * {hi} + {lo})"
 
 
@@ -47,8 +42,8 @@ def mm01_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mm02_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode/feature-extract via mapInPandas (deterministic stub
-    decoder; real decoders plug into the same batch path)."""
+    """Decode/feature-extract via mapInPandas with the deterministic
+    stand-in decoder (binary.fake_decode), recomputed by the oracle."""
     return B.extract_features(_blobs_par(spark, sf_dir))
 
 

@@ -977,12 +977,12 @@ toks AS (
 """
 
 
-def _pl05_sql(unified: bool = False) -> str:
+def _pl05_sql() -> str:
     from .dedupplans import _D09_SQL
     from .textplans import BPE_PATTERN
 
     return f"""
-WITH {_recipe_mixed_ctes(unified=unified)},
+WITH {_recipe_mixed_ctes()},
 excis AS ({_D09_SQL}),
 toks AS (
   SELECT m.doc_id, m.lang,

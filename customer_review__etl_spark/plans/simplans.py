@@ -57,7 +57,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.withColumn("nrm", l2_norm(F.col("embedding")))
 
 
-def _plane_dot_expr(p: int, planes_per_unit: int = 64) -> str:
+def _plane_dot_expr(p: int) -> str:
     """Spark SQL: sequential fold of embedding·plane[p] (see module
     docstring for the integer plane formula)."""
     return (
@@ -566,26 +566,18 @@ def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s09_sql(
-    cap: int | None = None,
-    cap2: int | None = None,
-    depth: int | None = None,
-    order: bool = True,
-) -> str:
+def _s09_sql(order: bool = True) -> str:
     """Oracle twin of s09, generated by the SAME per-level loop as the
-    Spark plan; caps parameterized (round-9 ADVICE #4) so edge tests
-    can differentially exercise the refined + multiprobe paths at
-    every level under small caps, and `depth` parameterized so tests
-    can pin that a deeper level only PRUNES its parent's candidates.
+    Spark plan, from the same module constants (S09_BUCKET_CAP,
+    S09_SUBBUCKET_CAP, S09_MAX_DEPTH): edge tests monkeypatch small
+    caps to differentially exercise the refined + multiprobe paths at
+    every level, and a smaller depth to pin that a deeper level only
+    PRUNES its parent's candidates.
     `order=False` yields the pair set without the final ORDER BY —
     shared verbatim by the s09 spec and s05's recursive closure so the
     two oracles can never drift (round-15: s05 migrated off the
     demoted s03 miner)."""
-    if cap is None:
-        cap = S09_BUCKET_CAP
-    if cap2 is None:
-        cap2 = S09_SUBBUCKET_CAP
-    D = S09_MAX_DEPTH if depth is None else depth
+    cap, cap2, D = S09_BUCKET_CAP, S09_SUBBUCKET_CAP, S09_MAX_DEPTH
     sub_cols = ",\n         ".join(
         f"{_sql_bucket(3, 6 * lv + 3 * b)} AS sub{lv}b{b}"
         for lv in range(1, D + 1)
@@ -727,13 +719,13 @@ PQ_K = 8        # codewords per subspace (vec_id < 8 seed subvectors)
 PQ_TOPK = 3
 
 
-def _pq_d2_expr(m: int, a: str = "embedding", b: str = "cent_emb") -> str:
+def _pq_d2_expr(m: int) -> str:
     """Spark SQL: sequential-fold squared L2 distance between the m-th
-    16-dim subvectors of two array columns. Elements are cast to double
-    BEFORE subtracting — float-minus-float would round at float
-    precision while the DuckDB twin subtracts doubles."""
+    16-dim subvectors of `embedding` and `cent_emb`. Elements are cast
+    to double BEFORE subtracting — float-minus-float would round at
+    float precision while the DuckDB twin subtracts doubles."""
     o = PQ_SUBDIM * m
-    d = f"(cast({a}[d] as double) - cast({b}[d] as double))"
+    d = "(cast(embedding[d] as double) - cast(cent_emb[d] as double))"
     return (
         f"aggregate(sequence({o}, {o + PQ_SUBDIM - 1}), "
         f"cast(0.0 as double), (acc, d) -> acc + {d} * {d})"
@@ -1033,16 +1025,14 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s10_sql(cap: int | None = None, depth: int | None = None) -> str:
+def _s10_sql() -> str:
     """The full s10 capped-ANN query — shared verbatim by the s10 spec
     and ml09's kNN-vote oracle so the candidate semantics can never
-    drift; `cap` parameterized so edge tests differentially exercise
-    the refined + multiprobe path, and `depth` so tests can pin that a
-    deeper level only prunes. Generated by the SAME per-level loop as
-    the Spark plan."""
-    if cap is None:
-        cap = S10_BUCKET_CAP
-    D = S10_MAX_DEPTH if depth is None else depth
+    drift. Generated by the SAME per-level loop as the Spark plan, from
+    the same module constants (S10_BUCKET_CAP, S10_MAX_DEPTH), which
+    edge tests monkeypatch to exercise the refined + multiprobe path
+    and to pin that a deeper level only prunes."""
+    cap, D = S10_BUCKET_CAP, S10_MAX_DEPTH
     sub_cols = ", ".join(
         f"{_sql_bucket(3, 3 * lv + 3)} AS r{lv}" for lv in range(1, D + 1)
     )
@@ -1116,7 +1106,7 @@ def _s10_sql(cap: int | None = None, depth: int | None = None) -> str:
 
 _S05_SQL = f"""
 WITH pairs AS ({_s09_sql(order=False)}),
-{sql_cc_min_label("pairs", "vec_a", "vec_b")}
+{sql_cc_min_label("vec_a", "vec_b")}
 SELECT emb.vec_id,
        least(emb.vec_id, coalesce(c.mn, emb.vec_id)) AS cluster_id,
        CAST(emb.vec_id = least(emb.vec_id, coalesce(c.mn, emb.vec_id))

@@ -88,7 +88,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
+def get_spark(app_name: str) -> SparkSession:
     """Build a local session shaped like the target deployment.
 
     Tests and perfbench use this; the driver supplies its own session to
@@ -100,7 +100,6 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(min(int(cpus) * 2, 64)))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Scan-split sizing is data-scale-relative: the local testdata is
         # one small parquet file per table (sf0.1 lineitem ≈ 10 MB), so
@@ -110,7 +109,7 @@ def get_spark(app_name: str = "customer-review-etl-spark") -> SparkSession:
         # reads many ≥128 MB files and should unset this (default 128m
         # keeps task count = file-chunk count there).
         .config("spark.sql.files.maxPartitionBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         # FAIR job scheduling: io05's two CTAS writes, landings built
         # from separate threads (materialized_df's per-kind locks) and
         # the review pass's two branches (app.run_pipeline: the

@@ -1,6 +1,6 @@
-"""S5: object-store put/get/list — the reference's S3 surface
-(loader.py:74-130 upload_dataframe/upload_file, 169-210
-upload_directory, 215-247 upload_metrics, 249-272 download_file)
+"""S5: object-store put/list and the per-run publish — the upload
+side of the reference's S3 surface (loader.py:74-130
+upload_dataframe, 169-210 upload_directory, 215-247 upload_metrics)
 re-expressed over Hadoop's FileSystem API instead of boto3.
 
 Why Hadoop FS and not a Python S3 client: Spark's own readers/writers
@@ -11,7 +11,7 @@ classpath), ``abfss://``, ``gs://`` …, so the tests exercising a
 against S3. Only bucket lifecycle (create/head) stays in the control
 plane, as in the reference (ml_pipeline_dag.py:219-222).
 
-Scale notes: put/get here are CONTROL-plane conveniences for small
+Scale notes: the puts here are CONTROL-plane conveniences for small
 artifacts (metrics JSON, model files) — O(file) driver-side, exactly
 like the reference's boto3 puts. Bulk data publishes via
 ``df.write.…(bucket.url(key))`` so executors stream straight to the
@@ -48,9 +48,6 @@ class ObjectBucket:
         self._fs.mkdirs(self._jpath(""))
         return self
 
-    def exists(self, key: str = "") -> bool:
-        return bool(self._fs.exists(self._jpath(key)))
-
     # -- object data plane -------------------------------------------
 
     def url(self, key: str) -> str:
@@ -65,27 +62,6 @@ class ObjectBucket:
             out.write(bytearray(data))
         finally:
             out.close()
-        return self.url(key)
-
-    def get_bytes(self, key: str) -> bytes:
-        """get_object parity (loader.py:274-297)."""
-        stream = self._fs.open(self._jpath(key))
-        try:
-            ioutils = self._jvm.org.apache.commons.io.IOUtils
-            return bytes(ioutils.toByteArray(stream))
-        finally:
-            stream.close()
-
-    def put_file(self, local_path: str, key: str) -> str:
-        """upload_file parity (loader.py:137-167)."""
-        self._fs.copyFromLocalFile(
-            False,
-            True,
-            self._jvm.org.apache.hadoop.fs.Path(
-                "file://" + os.path.abspath(local_path)
-            ),
-            self._jpath(key),
-        )
         return self.url(key)
 
     def put_directory(self, local_dir: str, prefix: str) -> list[str]:
@@ -108,7 +84,7 @@ class ObjectBucket:
         )
         return self.list_keys(prefix)
 
-    def list_keys(self, prefix: str = "") -> list[str]:
+    def list_keys(self, prefix: str) -> list[str]:
         """Recursive listing under a key prefix, bucket-relative."""
         jpath = self._jpath(prefix)
         if not self._fs.exists(jpath):
@@ -130,9 +106,9 @@ class ObjectBucket:
 def publish_run(
     bucket: ObjectBucket,
     execution_ts: str,
-    processed_df: DataFrame | None = None,
-    metrics: dict[str, Any] | None = None,
-    models_dir: str | None = None,
+    processed_df: DataFrame,
+    metrics: dict[str, Any],
+    models_dir: str,
 ) -> dict[str, Any]:
     """The reference's per-run S3 publish (ml_pipeline_dag.py:225-260)
     with its exact key layout:
@@ -147,27 +123,22 @@ def publish_run(
     a pandas buffer through the driver), while metrics/models are small
     driver-side puts exactly like the reference. Returns the
     xcom-style manifest of store locations."""
-    manifest: dict[str, Any] = {}
-    if processed_df is not None:
-        data_key = f"data/processed_reviews_{execution_ts}.csv"
-        (
-            processed_df.write.mode("overwrite")
-            .option("header", True)
-            .csv(bucket.url(data_key))
-        )
-        manifest["processed_data"] = bucket.url(data_key)
-    if metrics is not None:
-        metrics_key = f"metrics/model_metrics_{execution_ts}.json"
-        doc = dict(metrics)
-        doc["timestamp"] = execution_ts
-        bucket.put_bytes(
-            metrics_key,
-            json.dumps(doc, indent=2, sort_keys=True, default=str).encode(),
-        )
-        manifest["metrics"] = bucket.url(metrics_key)
-    if models_dir is not None:
-        model_keys = bucket.put_directory(
-            models_dir, f"models/{execution_ts}"
-        )
-        manifest["models"] = [bucket.url(k) for k in model_keys]
-    return manifest
+    data_key = f"data/processed_reviews_{execution_ts}.csv"
+    (
+        processed_df.write.mode("overwrite")
+        .option("header", True)
+        .csv(bucket.url(data_key))
+    )
+    metrics_key = f"metrics/model_metrics_{execution_ts}.json"
+    doc = dict(metrics)
+    doc["timestamp"] = execution_ts
+    bucket.put_bytes(
+        metrics_key,
+        json.dumps(doc, indent=2, sort_keys=True, default=str).encode(),
+    )
+    model_keys = bucket.put_directory(models_dir, f"models/{execution_ts}")
+    return {
+        "processed_data": bucket.url(data_key),
+        "metrics": bucket.url(metrics_key),
+        "models": [bucket.url(k) for k in model_keys],
+    }

@@ -6,14 +6,16 @@ puts (loader.py:74-130, 212-247); here each is the native Spark writer
 — streaming-committed, directory-structured, s3a-ready (pass an
 ``s3a://bucket/...`` path on a cluster with hadoop-aws; bucket
 creation/lifecycle stays in the control plane, not here). The
-object-store key/value surface itself (put/get/list, versioned run
+object-store key/value surface itself (put/list, versioned run
 publish with the reference's exact key layout) lives in
 ``sources/objectstore.py`` over the Hadoop FileSystem API — tested
 end-to-end against a ``file://`` bucket, same code path as ``s3a://``.
 
-Scale notes: writers never funnel data through the driver; `coalesce`
-is exposed but defaults to off (a 100 TB write wants many output
-files); metrics JSON is O(1) driver-side by design.
+Scale notes: writers never funnel data through the driver. The CSV
+sink writes one file, since its outputs are small reports (the theme
+distribution, the top words, nation); bulk data goes through the
+parquet, JSON-lines and ORC sinks, which keep one file per task.
+Metrics JSON is O(1) driver-side by design.
 """
 
 from __future__ import annotations
@@ -26,11 +28,10 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """S3-parity CSV sink (extract.py:117, cleaner.py:318 to_csv):
-    header on, overwrite; `single_file` coalesces for tiny outputs only."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+    header on, overwrite, one file (coalesce(1): small outputs only)."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -63,28 +64,18 @@ def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.read.schema(schema).json(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
+def write_orc(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """ORC sink (built into Spark like parquet): the other columnar
     interchange format, binary-exact for all primitive types."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).orc(path)
 
 
-def write_metrics_json(
-    metrics: dict[str, Any], path: str, timestamp: str | None = None
-) -> str:
-    """S7: flat metrics dict → JSON file with timestamp injection
-    (loader.py:227-240). O(1) data — driver-side by design."""
-    doc = dict(metrics)
-    if timestamp is not None:
-        doc["timestamp"] = timestamp
+def write_metrics_json(metrics: dict[str, Any], path: str) -> str:
+    """S7: flat metrics dict → JSON file (loader.py:227-240). O(1)
+    data — driver-side by design."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w", encoding="utf-8") as f:
-        json.dump(doc, f, indent=2, sort_keys=True)
+        json.dump(metrics, f, indent=2, sort_keys=True)
     return path
 
 

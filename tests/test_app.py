@@ -87,9 +87,7 @@ def test_run_pipeline_same_answer_on_any_core_count(tmp_path):
     repo = str(Path(__file__).resolve().parent.parent)
     answers = []
     for cpus in ("1", "4"):
-        env = dict(
-            os.environ, SPARK_GRAFT_CPUS=cpus, SPARK_GRAFT_DRIVER_MEM="1g"
-        )
+        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
         proc = subprocess.run(
             [sys.executable, "-c", _PASS_SCRIPT, repo, SF_DIR,
              str(tmp_path / f"cpus{cpus}")],

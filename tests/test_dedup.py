@@ -211,12 +211,12 @@ def test_sql_cc_min_label_long_chain_and_margin():
     n = 3000
     # path 0-1-2-...-n, plus an isolated 2-cycle component high up
     sql = f"""
-WITH raw_edges AS (
+WITH pairs AS (
   SELECT _u.i::BIGINT AS s, (_u.i + 1)::BIGINT AS d
   FROM (SELECT unnest(range(0, {n})) AS i) _u(i)
   UNION ALL SELECT 900001, 900002
 ),
-{sql_cc_min_label("raw_edges", "s", "d")}
+{sql_cc_min_label("s", "d")}
 SELECT node, mn FROM cluster
 """
     got = dict(con.execute(sql).fetchall())
@@ -224,11 +224,11 @@ SELECT node, mn FROM cluster
     assert got[900001] == 900001 and got[900002] == 900001
     # reversed ids: the min sits at the FAR end of the path
     sql_rev = f"""
-WITH raw_edges AS (
+WITH pairs AS (
   SELECT ({n} - _u.i)::BIGINT AS s, ({n} - _u.i - 1)::BIGINT AS d
   FROM (SELECT unnest(range(0, {n})) AS i) _u(i)
 ),
-{sql_cc_min_label("raw_edges", "s", "d")}
+{sql_cc_min_label("s", "d")}
 SELECT node, mn FROM cluster
 """
     got = dict(con.execute(sql_rev).fetchall())

@@ -1,9 +1,7 @@
 """Multimodal plumbing: deterministic stub decode, Arrow batch path,
-binary metadata, and the explicit real-decoder guard."""
+binary metadata and frame sampling."""
 
 from __future__ import annotations
-
-import pytest
 
 from customer_review__etl_spark.multimodal import binary as B
 from customer_review__etl_spark.sources import tables
@@ -18,11 +16,6 @@ def test_fake_decode_deterministic():
     assert 64 <= w <= 255 and 64 <= h <= 255 and 1 <= c <= 4
     assert 0.0 <= lum <= 1.0
     assert B.fake_decode(None) == (0, 0, 0, 0.0)
-
-
-def test_real_decoder_guard():
-    with pytest.raises(NotImplementedError):
-        B.decode_image(b"bytes")
 
 
 def test_extract_features_schema_and_rows(spark):
@@ -53,215 +46,3 @@ def test_frame_sample_strided(spark):
         n_frames = doc_rows[0]["n_frames"]
         idx = sorted(r["frame_idx"] for r in doc_rows)
         assert idx == list(range(0, n_frames, B.FRAME_STRIDE))
-
-
-def _ppm(w, h, rgb):
-    """Binary P6 bytes for a solid-color w×h image."""
-    return b"P6\n# test image\n%d %d\n255\n" % (w, h) + bytes(rgb) * (w * h)
-
-
-def test_real_ppm_decode_exact():
-    """decode_image really decodes uncompressed PPM — no libraries:
-    exact dims/channels, exact Rec.601 mean luminance."""
-    w, h = 4, 3
-    img = _ppm(w, h, (255, 0, 0))  # pure red
-    assert B.decode_image(img) == (4, 3, 3, 299 * 255 / (1000.0 * 255.0))
-    gray = _ppm(2, 2, (128, 128, 128))
-    gw, gh, gc, gl = B.decode_image(gray)
-    assert (gw, gh, gc) == (2, 2, 3)
-    assert abs(gl - 128 / 255.0) < 1e-12
-    # comment + multi-space header tolerated
-    weird = b"P6  # c\n 2\n1 255\n" + bytes((0, 0, 0)) * 2
-    assert B.decode_image(weird)[:3] == (2, 1, 3)
-
-
-def test_real_decode_through_mapinpandas(spark):
-    """The real decoder rides the SAME mapInPandas batch path as the
-    fake: PPM blobs in, exact features out, across partitions."""
-    rows = [
-        (1, bytearray(_ppm(4, 3, (255, 0, 0)))),
-        (2, bytearray(_ppm(2, 5, (0, 255, 0)))),
-        (3, bytearray(_ppm(3, 3, (0, 0, 255)))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id BIGINT, blob BINARY").repartition(2)
-    got = {
-        r["doc_id"]: (r["width"], r["height"], r["n_channels"],
-                      round(r["mean_lum"], 9))
-        for r in B.extract_features(df, real=True).collect()
-    }
-    assert got == {
-        1: (4, 3, 3, round(299 / 1000.0, 9)),
-        2: (2, 5, 3, round(587 / 1000.0, 9)),
-        3: (3, 3, 3, round(114 / 1000.0, 9)),
-    }
-
-
-# ---------------------------------------------------------------------------
-# Native PNG decode (round 15): a golden-fixture ENCODER lives in the
-# test so the decoder's filter inversion is checked against pixels we
-# constructed, with zero image libraries anywhere.
-
-
-def _png(w, h, pixels, color_type, filters=None, plte=None):
-    """Minimal PNG encoder for golden fixtures: 8-bit, non-interlaced,
-    one IDAT. `pixels` is the raw per-row byte matrix (h rows of
-    w*channels bytes); `filters[y]` picks each row's filter type and
-    the encoder applies the spec's forward filter so the decoder must
-    invert it."""
-    import struct
-    import zlib
-
-    ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    stride = w * ch
-    filters = filters or [0] * h
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    raw = bytearray()
-    prev = bytes(stride)
-    for y in range(h):
-        row, f = bytes(pixels[y]), filters[y]
-        assert len(row) == stride
-        raw.append(f)
-        for x in range(stride):
-            a = row[x - ch] if x >= ch else 0
-            b = prev[x]
-            c = prev[x - ch] if x >= ch else 0
-            if f == 0:
-                v = row[x]
-            elif f == 1:
-                v = row[x] - a
-            elif f == 2:
-                v = row[x] - b
-            elif f == 3:
-                v = row[x] - (a + b) // 2
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                v = row[x] - pr
-            raw.append(v & 0xFF)
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if plte is not None:
-        out += chunk(b"PLTE", bytes(plte))
-    return out + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-
-
-def test_png_decode_rgb_all_filters():
-    """Each scanline uses a DIFFERENT filter type (None/Sub/Up/
-    Average/Paeth) over non-trivial pixel data — decode must invert
-    every filter exactly to reproduce the known Rec.601 mean."""
-    w, h = 5, 5
-    pixels = [
-        [((3 * y + 7 * x + 11) * 37) % 256 for x in range(w * 3)]
-        for y in range(h)
-    ]
-    img = _png(w, h, pixels, color_type=2, filters=[0, 1, 2, 3, 4])
-    lum_num = sum(
-        299 * row[i] + 587 * row[i + 1] + 114 * row[i + 2]
-        for row in pixels for i in range(0, w * 3, 3)
-    )
-    assert B.decode_image(img) == (
-        w, h, 3, lum_num / (1000.0 * 255.0 * w * h)
-    )
-
-
-def test_png_decode_color_types():
-    """Gray (0), gray+alpha (4), RGBA (6), palette (3): channels and
-    luminance per the decoder's documented rules (alpha ignored,
-    palette resolved through PLTE)."""
-    g = _png(3, 2, [[10, 20, 30], [40, 50, 60]], color_type=0,
-             filters=[1, 4])
-    assert B.decode_image(g) == (3, 2, 1, (10 + 20 + 30 + 40 + 50 + 60)
-                                 / (255.0 * 6))
-    ga = _png(2, 1, [[100, 255, 200, 0]], color_type=4)
-    assert B.decode_image(ga) == (2, 1, 2, (100 + 200) / (255.0 * 2))
-    rgba = _png(1, 2, [[255, 0, 0, 7], [0, 255, 0, 9]], color_type=6,
-                filters=[2, 3])
-    assert B.decode_image(rgba) == (
-        1, 2, 4, (299 * 255 + 587 * 255) / (1000.0 * 255.0 * 2)
-    )
-    pal = _png(2, 2, [[0, 1], [1, 0]], color_type=3,
-               plte=[255, 0, 0, 0, 0, 255])
-    assert B.decode_image(pal) == (
-        2, 2, 3, (2 * 299 * 255 + 2 * 114 * 255) / (1000.0 * 255.0 * 4)
-    )
-
-
-def test_png_unsupported_corners_still_guarded():
-    """16-bit and interlaced stay behind NotImplementedError; JPEG
-    magic raises the narrowed guard; corrupt streams raise ValueError."""
-    import struct
-    import zlib as _z
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", _z.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    deep = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 1, 1, 16, 0, 0, 0, 0)
-    ) + chunk(b"IDAT", _z.compress(b"\x00\x00\x00")) + chunk(b"IEND", b"")
-    with pytest.raises(NotImplementedError):
-        B.decode_image(deep)
-    lace = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 1)
-    ) + chunk(b"IDAT", _z.compress(b"\x00\x00")) + chunk(b"IEND", b"")
-    with pytest.raises(NotImplementedError):
-        B.decode_image(lace)
-    with pytest.raises(NotImplementedError):
-        B.decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
-    # chunk declaring more data than the stream holds
-    bad = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
-    ) + struct.pack(">I", 100) + b"IDAT" + b"\x00" * 10
-    with pytest.raises(ValueError):
-        B.decode_image(bad)
-    # payload shorter than (stride+1)*h after inflate
-    short = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
-    ) + chunk(b"IDAT", _z.compress(b"\x00\x01")) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError):
-        B.decode_image(short)
-    # corrupt deflate bytes in IDAT: ValueError, never a bare
-    # zlib.error (r15 ADVICE #3)
-    garbled = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)
-    ) + chunk(b"IDAT", b"\xde\xad\xbe\xef") + chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="corrupt PNG IDAT"):
-        B.decode_image(garbled)
-    # palette index past the PLTE table: ValueError, never IndexError
-    oob = sig + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 3, 0, 0, 0)
-    ) + chunk(b"PLTE", bytes([10, 20, 30])) + chunk(
-        b"IDAT", _z.compress(b"\x00\x05")
-    ) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="palette index"):
-        B.decode_image(oob)
-
-
-def test_png_decode_through_mapinpandas(spark):
-    """PNG blobs ride the same real-decode mapInPandas path as PPM —
-    mixed formats in one column decode per-row by magic bytes."""
-    rows = [
-        (1, bytearray(_png(2, 2, [[255, 0, 0] * 2] * 2, color_type=2))),
-        (2, bytearray(_ppm(2, 2, (0, 255, 0)))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id BIGINT, blob BINARY")
-    got = {
-        r["doc_id"]: (r["width"], r["height"], r["n_channels"],
-                      round(r["mean_lum"], 9))
-        for r in B.extract_features(df, real=True).collect()
-    }
-    assert got == {
-        1: (2, 2, 3, round(299 / 1000.0, 9)),
-        2: (2, 2, 3, round(587 / 1000.0, 9)),
-    }

@@ -22,14 +22,19 @@ def _bucket(spark, tmp_path):
     return ObjectBucket(spark, f"file://{tmp_path}/ml-pipeline-bucket").ensure()
 
 
+def _object(tmp_path, key):
+    """The local file behind a key of the file:// bucket."""
+    return tmp_path / "ml-pipeline-bucket" / key
+
+
 def test_put_get_bytes_roundtrip(spark, tmp_path):
     b = _bucket(spark, tmp_path)
     payload = b"col_a,col_b\n1,x\n2,y\n"
     url = b.put_bytes("data/raw.csv", payload)
     assert url.endswith("/ml-pipeline-bucket/data/raw.csv")
-    assert b.get_bytes("data/raw.csv") == payload
-    assert b.exists("data/raw.csv")
-    assert not b.exists("data/missing.csv")
+    assert _object(tmp_path, "data/raw.csv").read_bytes() == payload
+    assert _object(tmp_path, "data/raw.csv").exists()
+    assert not _object(tmp_path, "data/missing.csv").exists()
 
 
 def test_publish_run_key_layout_and_contents(spark, tmp_path):
@@ -62,11 +67,16 @@ def test_publish_run_key_layout_and_contents(spark, tmp_path):
     ]
 
     # metrics round-trip with injected timestamp
-    doc = json.loads(b.get_bytes(f"metrics/model_metrics_{TS}.json"))
+    doc = json.loads(
+        _object(tmp_path, f"metrics/model_metrics_{TS}.json").read_bytes()
+    )
     assert doc["accuracy"] == 0.91 and doc["timestamp"] == TS
 
     # model bytes survive the hop
-    assert b.get_bytes(f"models/{TS}/classifier.bin") == b"\x00\x01model"
+    assert (
+        _object(tmp_path, f"models/{TS}/classifier.bin").read_bytes()
+        == b"\x00\x01model"
+    )
 
     # the processed dataset is executor-written (part files under the
     # .csv key) and reads back exactly through the same store URL
@@ -112,7 +122,7 @@ def test_publish_run_model_dir_loads_from_bucket(spark, tmp_path):
     sinks.save_model(model, model_dir)
 
     b = _bucket(spark, tmp_path)
-    manifest = publish_run(b, TS, models_dir=model_dir)
+    manifest = publish_run(b, TS, df, {"n": 6}, model_dir)
 
     keys = b.list_keys(f"models/{TS}")
     assert any(k.rsplit("/", 1)[-1].startswith("part-") for k in keys)
@@ -124,4 +134,4 @@ def test_publish_run_model_dir_loads_from_bucket(spark, tmp_path):
     )
 
     # publishing again under the same key replaces, not nests
-    assert publish_run(b, TS, models_dir=model_dir) == manifest
+    assert publish_run(b, TS, df, {"n": 6}, model_dir) == manifest

@@ -66,7 +66,7 @@ def test_sql_cc_min_label_symmetrizes_internally():
     con = duckdb.connect()
     got = con.execute(
         "WITH pairs(x, y) AS (VALUES (2, 1), (3, 1), (9, 7)),\n"
-        + sql_cc_min_label("pairs", "x", "y")
+        + sql_cc_min_label("x", "y")
         + "\nSELECT node, mn FROM cluster ORDER BY node"
     ).fetchall()
     assert got == [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)]

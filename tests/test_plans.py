@@ -5,6 +5,7 @@ codegen) asserted on the actual explain output — not just eyeballed."""
 from __future__ import annotations
 
 import ast
+import copy
 from pathlib import Path
 
 import __spark_entry__ as entrymod
@@ -132,22 +133,82 @@ def _module_name(path: Path) -> str:
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
+def _non_test_trees() -> tuple[list[Path], dict[Path, ast.Module]]:
+    """The engine's files, and the parsed trees of all non-test code:
+    the engine, perfbench/ and __spark_entry__.py."""
+    engine = sorted(ENGINE_DIR.rglob("*.py"))
+    others = sorted((REPO / "perfbench").glob("*.py"))
+    trees = {
+        p: ast.parse(p.read_text(), str(p))
+        for p in [*engine, *others, REPO / "__spark_entry__.py"]
+    }
+    return engine, trees
+
+
+def _is_function(stmt) -> bool:
+    return isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef))
+
+
+def _class_of(expr, classes):
+    """The class C when `expr` is a call chain that starts with C(...),
+    such as C(a).ensure(); else None."""
+    while isinstance(expr, (ast.Call, ast.Attribute)):
+        called = getattr(expr, "func", None)
+        if isinstance(called, ast.Name) and called.id in classes:
+            return called.id
+        expr = expr.func if isinstance(expr, ast.Call) else expr.value
+    return None
+
+
+def _method_uses(node, classes, owner=None) -> set[str]:
+    """'C.m' for each attribute m taken, inside `node`, on a value of
+    an engine class C: a C(...) call chain, a name bound to one, a
+    parameter annotated C, or `self` inside a method of C (`owner`)."""
+    typed = {"self": owner} if owner else {}
+    for n in ast.walk(node):
+        if isinstance(n, ast.arg) and n.annotation is not None:
+            ann = n.annotation
+            name = getattr(ann, "id", getattr(ann, "value", None))
+            if name in classes:
+                typed[n.arg] = name
+        elif isinstance(n, ast.Assign) and _class_of(n.value, classes):
+            for t in n.targets:
+                if isinstance(t, ast.Name):
+                    typed[t.id] = _class_of(n.value, classes)
+    uses = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Attribute):
+            v = n.value
+            if isinstance(v, ast.Name):
+                cls = typed.get(v.id)
+            else:
+                cls = _class_of(v, classes)
+            if cls:
+                uses.add(f"{cls}.{n.attr}")
+    return uses
+
+
 def test_engine_code_is_reached_by_non_test_code():
     """Only what a user reaches stays in the engine. Every engine
     module is imported by non-test code (the engine, perfbench/,
     __spark_entry__.py), and every top-level engine def, class and
     constant (an assignment target) is used by name from a live
     top-level statement of that code, other than its own statement.
+    So is every method of an engine class with no base class (Spark
+    calls the methods of its subclasses): a live statement must take
+    it as an attribute of a value of that class (see _method_uses);
+    dunder methods come with their class.
     Liveness is a fixed point: the other module-level statements and
     all of perfbench/ and __spark_entry__.py are live; an engine name
     becomes live once a live statement names it. Imports and __all__
     entries are not uses; dunder names such as __version__ are
     exempt."""
-    engine = sorted(ENGINE_DIR.rglob("*.py"))
-    others = sorted((REPO / "perfbench").glob("*.py"))
-    trees = {
-        p: ast.parse(p.read_text(), str(p))
-        for p in [*engine, *others, REPO / "__spark_entry__.py"]
+    engine, trees = _non_test_trees()
+    classes = {
+        s.name
+        for p in engine
+        for s in trees[p].body
+        if isinstance(s, ast.ClassDef) and not s.bases
     }
 
     imported = set()
@@ -189,7 +250,8 @@ def test_engine_code_is_reached_by_non_test_code():
             ]
         return []
 
-    # (path, name, statement) of every engine name not yet reached
+    # (path, name, statement, owning class) of every engine name not
+    # yet reached; a method's name is "Class.method"
     pending, live = [], []
     for path, tree in trees.items():
         for stmt in tree.body:
@@ -198,29 +260,168 @@ def test_engine_code_is_reached_by_non_test_code():
             defined = targets(stmt) if path in engine else []
             if any(n.startswith("__") for n in defined):
                 continue  # __all__, __version__: not engine code
-            if defined:
-                pending += [(path, n, stmt) for n in defined]
+            if defined and getattr(stmt, "name", None) in classes:
+                methods = [
+                    m for m in stmt.body
+                    if _is_function(m) and not m.name.startswith("__")
+                ]
+                shell = copy.copy(stmt)
+                shell.body = [m for m in stmt.body if m not in methods]
+                pending.append((path, stmt.name, shell, stmt.name))
+                pending += [
+                    (path, f"{stmt.name}.{m.name}", m, stmt.name)
+                    for m in methods
+                ]
+            elif defined:
+                pending += [(path, n, stmt, None) for n in defined]
             else:
-                live.append(stmt)
+                live.append((stmt, None))
 
     def names(stmts):
-        return {
-            n.id if isinstance(n, ast.Name) else n.attr
-            for s in stmts
-            for n in ast.walk(s)
-            if isinstance(n, (ast.Name, ast.Attribute))
-        }
+        used = set()
+        for s, owner in stmts:
+            used |= _method_uses(s, classes, owner)
+            used |= {
+                n.id if isinstance(n, ast.Name) else n.attr
+                for n in ast.walk(s)
+                if isinstance(n, (ast.Name, ast.Attribute))
+            }
+        return used
 
     used = names(live)
     while reached := [d for d in pending if d[1] in used]:
         pending = [d for d in pending if d[1] not in used]
-        used |= names(s for _, _, s in reached)
+        used |= names((s, owner) for _, _, s, owner in reached)
     unreached = [
-        f"{p.relative_to(REPO)}:{s.lineno} {n}" for p, n, s in pending
+        f"{p.relative_to(REPO)}:{s.lineno} {n}" for p, n, s, _ in pending
     ]
     assert not (unimported or unreached), (
         f"modules only tests import: {unimported}; "
         f"names only tests reach: {unreached}"
+    )
+
+
+# Engine options that no non-test call varies, each with the reason it
+# stays an option.
+OPTIONS_NO_CALL_VARIES = {
+    "app/pipeline.py:run_pipeline": (
+        ("bucket_url", "execution_ts"),
+        "deployment settings: the object store a run publishes to and "
+        "the run id its keys carry are the deployment's, not the engine's",
+    ),
+}
+
+
+def test_engine_options_are_set_by_a_user():
+    """Only what a user sets stays an option. Every defaulted parameter
+    of a top-level engine function or of a method of an engine class
+    with no base class, and every defaulted dataclass field, takes at
+    least two distinct values across the calls in non-test code (the
+    engine, perfbench/, __spark_entry__.py), an omitted argument
+    counting as the default, and at least one of those calls omits it.
+    A value is an argument's source text; a call with *args or
+    **kwargs may pass anything. Calls are matched by name: `f(...)` or
+    `x.f(...)` (self bound for a method), `C(...)` for a dataclass's
+    fields.
+
+    Every parameter of a top-level engine function, and of a method of
+    an engine class with no base class, is read by its body. Exempt
+    are the signatures Spark or the registry fixes: registry builders
+    (spark, sf_dir), and the methods of subclasses of Spark's classes
+    (DataSource readers). foreachBatch sinks are nested functions,
+    which neither check covers."""
+    engine, trees = _non_test_trees()
+    found: dict[str, str] = {}
+    sigs: dict[str, list] = {}  # callee name -> [(where, params, defaults)]
+    for path in engine:
+        rel = path.relative_to(ENGINE_DIR).as_posix()
+        for stmt in trees[path].body:
+            fns = [(stmt.name, stmt, 0)] if _is_function(stmt) else []
+            if isinstance(stmt, ast.ClassDef):
+                fields = [
+                    f for f in stmt.body
+                    if isinstance(f, ast.AnnAssign) and f.simple
+                ]
+                sigs.setdefault(stmt.name, []).append((
+                    f"{rel}:{stmt.name}",
+                    [f.target.id for f in fields],
+                    {f.target.id: f.value for f in fields if f.value},
+                ))
+                fns += [
+                    (m.name, m, 1)
+                    for m in stmt.body
+                    if _is_function(m) and not stmt.bases
+                ]
+            for name, fn, bound in fns:
+                qual = name if fn is stmt else f"{stmt.name}.{name}"
+                where = f"{rel}:{qual}"
+                a = fn.args
+                positional = [x.arg for x in a.posonlyargs + a.args]
+                first = len(positional) - len(a.defaults)
+                defaults = dict(zip(positional[first:], a.defaults))
+                defaults |= {
+                    x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                }
+                callee = stmt.name if name == "__init__" else name
+                sigs.setdefault(callee, []).append(
+                    (where, positional[bound:], defaults)
+                )
+                params = positional[bound:] + [x.arg for x in a.kwonlyargs]
+                params += [x.arg for x in (a.vararg, a.kwarg) if x]
+                if params == ["spark", "sf_dir"]:
+                    continue  # registry builder
+                read = {
+                    n.id for n in ast.walk(fn)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+                }
+                for x in params:
+                    if x not in read:
+                        found[f"{where}({x})"] = "never read by its body"
+
+    values: dict[str, set[str]] = {}
+    omitted: set[str] = set()
+    calls = [n for t in trees.values() for n in ast.walk(t)
+             if isinstance(n, ast.Call)]
+    for call in calls:
+        f = call.func
+        name = getattr(f, "attr", getattr(f, "id", None))
+        star = any(isinstance(x, ast.Starred) for x in call.args) or any(
+            k.arg is None for k in call.keywords
+        )
+        for where, positional, defaults in sigs.get(name, []):
+            given = {
+                p: ast.unparse(x)
+                for p, x in zip(positional, call.args)
+                if not isinstance(x, ast.Starred)
+            }
+            given |= {
+                k.arg: ast.unparse(k.value) for k in call.keywords if k.arg
+            }
+            for p, d in defaults.items():
+                key = f"{where}({p})"
+                if p in given or star:
+                    values.setdefault(key, set()).add(given.get(p, "*"))
+                else:
+                    values.setdefault(key, set()).add(ast.unparse(d))
+                    omitted.add(key)
+    for where, _, defaults in (s for lst in sigs.values() for s in lst):
+        for p in defaults:
+            key = f"{where}({p})"
+            vals = sorted(values.get(key, ()))
+            if len(vals) < 2:
+                found[key] = f"takes only {vals} across non-test calls"
+            elif key not in omitted:
+                found[key] = "no non-test call omits it"
+
+    exempt = {
+        f"{where}({p})"
+        for where, (params, _) in OPTIONS_NO_CALL_VARIES.items()
+        for p in params
+    }
+    assert set(found) == exempt, "\n".join(
+        [f"{k}: {v}" for k, v in sorted(found.items()) if k not in exempt]
+        + [f"{k}: exempt, but a user sets it"
+           for k in sorted(exempt - set(found))]
     )
 
 

@@ -75,7 +75,7 @@ def test_s10_refined_path_matches_oracle(spark, monkeypatch):
         "CREATE VIEW embeddings AS "
         f"SELECT * FROM '{SF001}/embeddings.parquet'"
     )
-    orows = set(con.execute(simplans._s10_sql(cap=2)).fetchall())
+    orows = set(con.execute(simplans._s10_sql()).fetchall())
     assert srows, "cap must be small enough to refine yet emit pairs"
     assert srows == orows
 
@@ -97,12 +97,12 @@ def test_s10_depth2_level_loop_matches_oracle(spark, monkeypatch):
     assert simplans.S10_MAX_DEPTH >= 2
     s2 = {(r.q_id, r.n_id, r.cos, r.rn)
           for r in simplans.s10_capped_ann(spark, sf).collect()}
-    o2 = set(con.execute(simplans._s10_sql(cap=2)).fetchall())
+    o2 = set(con.execute(simplans._s10_sql()).fetchall())
     assert s2 and s2 == o2
     monkeypatch.setattr(simplans, "S10_MAX_DEPTH", 1)
     s1 = {(r.q_id, r.n_id, r.cos, r.rn)
           for r in simplans.s10_capped_ann(spark, sf).collect()}
-    o1 = set(con.execute(simplans._s10_sql(cap=2, depth=1)).fetchall())
+    o1 = set(con.execute(simplans._s10_sql()).fetchall())
     assert s1 == o1
     assert s2 != s1, "level 2 must be active (it reshapes the top-k)"
 

@@ -100,7 +100,7 @@ def test_adaptive_shallow_equals_depth_max_oracle(spark):
         f"SELECT * FROM '{SF01}/embeddings.parquet'"
     )
     orows = set(
-        con.execute(simplans._s09_sql(depth=simplans.S09_MAX_DEPTH)).fetchall()
+        con.execute(simplans._s09_sql()).fetchall()
     )
     assert srows == orows
 
@@ -122,7 +122,7 @@ def test_adaptive_depth_honors_stress_caps(spark, monkeypatch):
         "CREATE VIEW embeddings AS "
         f"SELECT * FROM '{SF001}/embeddings.parquet'"
     )
-    orows = set(con.execute(simplans._s09_sql(cap=2, cap2=2)).fetchall())
+    orows = set(con.execute(simplans._s09_sql()).fetchall())
     assert srows == orows
 
 

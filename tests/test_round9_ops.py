@@ -281,7 +281,7 @@ def test_s09_depth2_refined_path_matches_oracle(spark, monkeypatch):
     orows = {
         (a, b, c)
         for a, b, c in con.execute(
-            simplans._s09_sql(cap=5, cap2=1)
+            simplans._s09_sql()
         ).fetchall()
     }
     assert srows, "caps must be small enough to still emit pairs"
@@ -311,7 +311,7 @@ def test_s09_depth3_level_loop_matches_oracle(spark, monkeypatch):
         (r.vec_a, r.vec_b, r.cos)
         for r in simplans.s09_capped_lsh_neardup(spark, sf).collect()
     }
-    o3 = set(con.execute(simplans._s09_sql(cap=5, cap2=1)).fetchall())
+    o3 = set(con.execute(simplans._s09_sql()).fetchall())
     assert s3 and s3 == o3
     monkeypatch.setattr(simplans, "S09_MAX_DEPTH", 2)
     s2 = {
@@ -319,7 +319,7 @@ def test_s09_depth3_level_loop_matches_oracle(spark, monkeypatch):
         for r in simplans.s09_capped_lsh_neardup(spark, sf).collect()
     }
     o2 = set(
-        con.execute(simplans._s09_sql(cap=5, cap2=1, depth=2)).fetchall()
+        con.execute(simplans._s09_sql()).fetchall()
     )
     assert s2 == o2
     assert s3 < s2, "level 3 must be active (strict pruning) here"

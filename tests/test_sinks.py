@@ -13,7 +13,7 @@ from conftest import SF_DIR
 def test_csv_roundtrip(spark, tmp_path):
     df = tables.load(spark, SF_DIR, "nation")
     path = str(tmp_path / "nation_csv")
-    sinks.write_csv(df, path, single_file=True)
+    sinks.write_csv(df, path)
     back = sinks.read_csv(
         spark, path, "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT"
     )
@@ -34,9 +34,8 @@ def test_parquet_partitioned_roundtrip(spark, tmp_path):
 
 def test_metrics_json(tmp_path):
     path = sinks.write_metrics_json(
-        {"accuracy": 0.9, "rows": 10},
+        {"accuracy": 0.9, "rows": 10, "timestamp": "2026-01-01T00:00:00"},
         str(tmp_path / "m" / "metrics.json"),
-        timestamp="2026-01-01T00:00:00",
     )
     with open(path, encoding="utf-8") as f:
         doc = json.load(f)

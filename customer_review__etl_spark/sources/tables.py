@@ -25,6 +25,8 @@ request use it:
   tables is rewritten. A scratch directory such a value lives in is
   keyed on (sf_dir, prefix) (scratch.run_scratch), so the rebuild
   removes the superseded one.
+The same snapshot of an sf_dir's tables (`snapshot`) is the identity a
+registry query's prepared plan is held for (plans._prepared).
 A path that cannot be stat'ed (a remote object store) has no identity,
 so nothing made for it is served again: its schema is inferred on
 every read, and a value derived from an sf_dir none of whose tables
@@ -179,6 +181,13 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def snapshot(sf_dir: str) -> tuple | None:
+    """The identities of the tables under sf_dir; None when none of
+    them can be stat'ed (nothing to key on)."""
+    snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
+    return snap if any(snap) else None
+
+
 def derived(
     sf_dir: str, kind: Any, build: Callable[[], Any], app: str | None = None
 ) -> Any:
@@ -189,6 +198,6 @@ def derived(
     call builds. A value that lives in one Spark application as well as
     in files (a catalog table) passes `app`, the application's id: a
     new application builds it again."""
-    snap = tuple(identity(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES)
-    ident = (snap, app) if any(snap) else None
+    snap = snapshot(sf_dir)
+    ident = None if snap is None else (snap, app)
     return store.request(("derived", sf_dir, kind), ident, build)

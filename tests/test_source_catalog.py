@@ -17,11 +17,16 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from customer_review__etl_spark import store
+from customer_review__etl_spark.plans import all_queries
 from customer_review__etl_spark.plans import dedupplans as D
 from customer_review__etl_spark.sources import tables
 
 from conftest import SF_DIR
 from test_differential_edges import _compare
+
+sys.path.append(os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+from workloads import DASHBOARD  # noqa: E402
 
 # the sf0.01 fixture beside the default one; at this scale the rewrite
 # below changes every checked answer (the test asserts it)
@@ -153,6 +158,49 @@ def test_query_after_out_of_band_rewrite(spark, tmp_path, name, table, column):
     _copy_tables(SF01, d)
     before = _compare(spark, d, name, tables.TABLE_NAMES)
     _rewrite_in_place(f"{d}/{table}.parquet/part-0.parquet", column)
+    after = _compare(spark, d, name, tables.TABLE_NAMES)
+    assert after != before
+
+
+# The table each dashboard query reads whose first half changes its
+# answer (a row shift, as above, cannot change a01's group counts).
+DASHBOARD_TABLE = {
+    "a01_group_count": "events",
+    "q1_pricing_summary": "lineitem",
+    "q3_shipping_priority": "lineitem",
+    "q5_local_supplier_volume": "lineitem",
+    "q6_forecast_revenue": "lineitem",
+    "q10_returned_items": "lineitem",
+    "q17_small_qty_revenue": "lineitem",
+    "w03_running_sum": "events",
+    "g04_pivot": "orders",
+    "j02_inner_equi": "orders",
+    "t03_topk_words": "documents",
+    "io13_partition_pruned_read": "events",
+    "a13_grouped_quantiles": "orders",
+    "w12_retention_cohorts": "events",
+    "a10_funnel_stages": "events",
+}
+
+
+@pytest.mark.parametrize("name", DASHBOARD)
+def test_held_plan_after_out_of_band_rewrite(spark, tmp_path, name):
+    """A dashboard query warmed twice through the registry holds its
+    analyzed plan (plans._prepared). A table it reads is rewritten in
+    place, keeping the first half of its rows in a new part file, as a
+    writer that names its parts does: that changes the tables'
+    identity, so the next call builds again (a held plan would list the
+    removed part) and answers the oracle over the new rows."""
+    d = str(tmp_path / "sf")
+    _copy_tables(SF01, d)
+    all_queries()[name].fn(spark, d)
+    before = _compare(spark, d, name, tables.TABLE_NAMES)
+    assert ("plan", name) in store._HELD
+    table = f"{d}/{DASHBOARD_TABLE[name]}.parquet"
+    t = pq.read_table(f"{table}/part-0.parquet")
+    pq.write_table(t.slice(0, t.num_rows // 2), f"{table}/.rewrite.parquet")
+    os.replace(f"{table}/.rewrite.parquet", f"{table}/part-1.parquet")
+    os.remove(f"{table}/part-0.parquet")
     after = _compare(spark, d, name, tables.TABLE_NAMES)
     assert after != before
 

@@ -16,7 +16,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from customer_review__etl_spark import plans
-from customer_review__etl_spark.plans import relational
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -24,9 +23,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
     The reference's dashboard theme-distribution semantics
     (dashboard.py:29-30 value_counts) transplanted onto the events
-    table: null-guard → group-count → deterministic desc sort.
+    table: null-guard → group-count → deterministic desc sort. It goes
+    through the registry, so the engine's confs are applied to `spark`.
     """
-    return relational.a01_group_count(spark, "/root/testdata/sf0.001")
+    return plans.all_queries()["a01_group_count"].fn(
+        spark, "/root/testdata/sf0.001"
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -117,6 +117,12 @@ def d01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _distinct_grams(sql: str) -> Column:
+    """One row per distinct element of the gram array that the SQL
+    expression `sql` builds (the shingle and n-gram explodes)."""
+    return F.explode(F.array_distinct(F.expr(sql)))
+
+
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-token shingles per doc: (doc_id, sh). Docs with <3
     tokens have no shingles and exit the near-dup path."""
@@ -127,13 +133,9 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("tk") >= 3)
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, size(tk) - 2), "
-                        "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))"
-                    )
-                )
+            _distinct_grams(
+                "transform(sequence(1, size(tk) - 2), "
+                "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))"
             ).alias("sh"),
         )
     )
@@ -204,6 +206,27 @@ def _bands(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "e.band", "e.bh")
 
 
+def _band_pairs(bands: DataFrame, key: str) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) of the banded self-join shared by
+    d02 and d03: two docs pair when some band's (band, `key`) value is
+    equal, a hash equi-join on the exploded band rows."""
+    b2 = bands.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("band").alias("band_b"),
+        F.col(key).alias(f"{key}_b"),
+    )
+    return (
+        bands.join(
+            b2,
+            (F.col("band") == F.col("band_b"))
+            & (F.col(key) == F.col(f"{key}_b"))
+            & (F.col("doc_id") < F.col("doc_b")),
+        )
+        .select(F.col("doc_id").alias("doc_a"), "doc_b")
+        .distinct()
+    )
+
+
 def _verify_jaccard(sh: DataFrame, cand: DataFrame, a: str, b: str) -> DataFrame:
     """Exact-Jaccard verification of a candidate pair set against the
     shingle stream: |A∩B| via an equi-join on shingle digests, |A∪B|
@@ -259,22 +282,7 @@ def d02_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator semantics.
     """
     sh = shingles_m(spark, sf_dir)
-    bands = _bands(_minhash_sigs(sh))
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("bh").alias("bh_b"),
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bh") == F.col("bh_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(_bands(_minhash_sigs(sh)), "bh")
     # No trailing presentation sort (r16): the driver's correctness
     # check is an order-insensitive value hash, and a global sort of
     # the result costs a range exchange whose boundary sampling
@@ -378,21 +386,7 @@ def d03_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("doc_id", "e.band", "e.bv")
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("bv").alias("bv_b"),
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bv") == F.col("bv_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(bands, "bv")
     ca = ch.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"c{c}").alias(f"a{c}") for c in range(4)],
@@ -700,6 +694,23 @@ def _covered_docs(grams: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     )
 
 
+def _uncovered(
+    spark: SparkSession, sf_dir: str, covered: DataFrame
+) -> DataFrame:
+    """The level-2 input of d10 and d11: (doc_id, lang, norm) of every
+    doc not in `covered`, its text normalized."""
+    return (
+        _docs_par(spark, sf_dir)
+        .select("doc_id", "lang", "text")
+        .join(covered, "doc_id", "left_anti")
+        .select(
+            "doc_id",
+            "lang",
+            T.normalize_text(F.col("text")).alias("norm"),
+        )
+    )
+
+
 def _d10_cand2(uncovered):
     """d10's level-2 recovery candidates: (lang, lbucket, 6-gram)
     groups over the uncovered stream under the same DF cap."""
@@ -708,13 +719,9 @@ def _d10_cand2(uncovered):
         "doc_id",
         "lang",
         "lbucket",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, length(norm) - {L - 1}), "
-                    f"i -> substring(norm, i, {L}))"
-                )
-            )
+        _distinct_grams(
+            f"transform(sequence(1, length(norm) - {L - 1}), "
+            f"i -> substring(norm, i, {L}))"
         ).alias("g"),
     )
     return _expand_group_pairs(_capped_gram_groups(g2, NGRAM_DF_CAP))
@@ -766,14 +773,7 @@ def d10_adaptive_block_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered = _covered_docs(g1, ("lang", "lbucket", "g"))
     L = D10_L2_LEN
     uncovered = (
-        _docs_par(spark, sf_dir)
-        .select("doc_id", "lang", "text")
-        .join(covered, "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            "lang",
-            T.normalize_text(F.col("text")).alias("norm"),
-        )
+        _uncovered(spark, sf_dir, covered)
         .withColumn("lbucket", F.floor(F.length("norm") / 100))
         .filter(F.length("norm") >= L)
     )
@@ -930,7 +930,15 @@ def d07_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_pd_barrier` keeps Catalyst from double-evaluating the
     containment filter inside the join."""
     arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
-    inter = _pair_gram_intersections(spark, arrays, _d07_candidates(arrays))
+    return _contained(
+        _pair_gram_intersections(spark, arrays, _d07_candidates(arrays))
+    )
+
+
+def _contained(inter: DataFrame) -> DataFrame:
+    """d07's verify over _pair_gram_intersections rows (shared by d11's
+    level 2): the pairs whose containment |A∩B| / min(|A|, |B|) is at
+    least D07_CONT_MIN."""
     return (
         inter.select(
             "doc_a",
@@ -990,13 +998,9 @@ def _d11_cand2(uncovered):
     g2 = uncovered.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, length(norm) - {L - 1}), "
-                    f"i -> substring(norm, i, {L}))"
-                )
-            )
+        _distinct_grams(
+            f"transform(sequence(1, length(norm) - {L - 1}), "
+            f"i -> substring(norm, i, {L}))"
         ).alias("g"),
     )
     return _expand_group_pairs(
@@ -1042,16 +1046,8 @@ def d11_adaptive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays = cache_slot("gram_arrays", gram_arrays_m(spark, sf_dir))
     g1 = arrays.select("doc_id", "lang", F.explode("grams").alias("g"))
     covered = _covered_docs(g1, ("lang", "g"))
-    uncovered = (
-        _docs_par(spark, sf_dir)
-        .select("doc_id", "lang", "text")
-        .join(covered, "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            "lang",
-            T.normalize_text(F.col("text")).alias("norm"),
-        )
-        .filter(F.length("norm") >= D10_L2_LEN)
+    uncovered = _uncovered(spark, sf_dir, covered).filter(
+        F.length("norm") >= D10_L2_LEN
     )
     # Level 1 is d07 VERBATIM — its verified pairs are the shared d07
     # landing; levels are disjoint (covered vs uncovered endpoints),
@@ -1059,19 +1055,7 @@ def d11_adaptive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvl1 = d07_pairs_m(spark, sf_dir)
     cand2 = _d11_cand2(uncovered).distinct()
     inter2 = _pair_gram_intersections(spark, arrays, cand2)
-    lvl2 = (
-        inter2.select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / F.least("n_a", "n_b").cast("double")
-            ).alias("containment"),
-            "_pd_barrier",
-        )
-        .filter(F.col("containment") >= D07_CONT_MIN)
-        .drop("_pd_barrier")
-    )
+    lvl2 = _contained(inter2)
     return lvl1.unionByName(lvl2)
 
 
@@ -1177,6 +1161,26 @@ def d08_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def survivor_map(items: DataFrame, key: str, labels: DataFrame) -> DataFrame:
+    """The keep-first dedup map over `connected_components` labels
+    (d05, d06, s05): every `key` of `items` with its cluster_id (the
+    lowest id in its component; a singleton maps to itself) and a
+    survivor flag. A semi-join on survivor=1 is the deduplicated
+    collection."""
+    ids = items.select(key)
+    return (
+        ids.join(labels, ids[key] == labels["node"], "left")
+        .select(
+            key,
+            F.coalesce(F.col("lbl"), F.col(key)).alias("cluster_id"),
+        )
+        .withColumn(
+            "survivor",
+            (F.col(key) == F.col("cluster_id")).cast("int"),
+        )
+    )
+
+
 def d05_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse d02's near-dup PAIRS into clusters and pick each
     cluster's keep-first survivor — the step that turns pair mining
@@ -1191,18 +1195,7 @@ def d05_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     labels = connected_components(pairs)
-    docs = _docs(spark, sf_dir).select("doc_id")
-    return (
-        docs.join(labels, docs["doc_id"] == labels["node"], "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("lbl"), F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn(
-            "survivor",
-            (F.col("doc_id") == F.col("cluster_id")).cast("int"),
-        )
-    )
+    return survivor_map(_docs(spark, sf_dir), "doc_id", labels)
 
 
 def d06_unified_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,18 +1224,7 @@ def d06_unified_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     labels = connected_components(edges)
-    docs = _docs(spark, sf_dir).select("doc_id")
-    return (
-        docs.join(labels, docs["doc_id"] == labels["node"], "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("lbl"), F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn(
-            "survivor",
-            (F.col("doc_id") == F.col("cluster_id")).cast("int"),
-        )
-    )
+    return survivor_map(_docs(spark, sf_dir), "doc_id", labels)
 
 
 # --------------------------------------------------------------------------
@@ -1537,13 +1519,9 @@ def dc03_verbatim_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("doc_id").alias("train_doc"),
             "norm",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, length(norm) - 2), "
-                        "i -> substr(norm, i, 3))"
-                    )
-                )
+            _distinct_grams(
+                "transform(sequence(1, length(norm) - 2), "
+                "i -> substr(norm, i, 3))"
             ).alias("g"),
         )
     )

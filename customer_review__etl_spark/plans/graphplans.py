@@ -44,10 +44,10 @@ PR_ITERS = 3          # fixed, unrolled in the oracle
 PR_D_NUM, PR_D_DEN = 85, 100  # damping 0.85 as an integer ratio
 
 
-def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed edge list (src, dst) of the co-purchase graph: both
-    directions of every within-order part pair, deduplicated across
-    orders. NULL part keys drop (no node identity)."""
+def _order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ok, src, dst): the lineitem self-join on the order key, one row
+    per ordered pair of distinct-per-order parts (the pair with itself
+    included). NULL part keys drop (no node identity)."""
     li = (
         tables.load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -60,8 +60,15 @@ def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst")
     )
+    return a.join(b, "ok")
+
+
+def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed edge list (src, dst) of the co-purchase graph: both
+    directions of every within-order part pair, deduplicated across
+    orders."""
     return (
-        a.join(b, "ok")
+        _order_part_pairs(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
@@ -83,20 +90,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _copurchase_thresholded_build(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    li = (
-        tables.load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_partkey").isNotNull())
-        .distinct()
-    )
-    a = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src")
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst")
-    )
     return (
-        a.join(b, "ok")
+        _order_part_pairs(spark, sf_dir)
         .filter(F.col("src") < F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_orders"))

@@ -618,6 +618,7 @@ def _pl04_mixed(
     differ in exactly one declared dimension each."""
     from . import dedupplans
     from .dedupplans import DECON_EVAL_MOD
+    from .relational import uniform_mix
 
     if unified:
         # the unified survivor map runs an eager CC fixpoint — read the
@@ -652,26 +653,8 @@ def _pl04_mixed(
         .join(dc1.hint("merge"), "doc_id", "left_anti")
         .join(dc3.hint("merge"), "doc_id", "left_anti")
     )
-    # p14's mix device over the post-gate corpus: uniform-language
-    # targets, content-addressed membership (16-bit md5 fraction)
-    stats = clean.groupBy("lang").agg(F.count(F.lit(1)).alias("n_g"))
-    tot = stats.agg(
-        F.sum("n_g").alias("n_total"), F.count(F.lit(1)).alias("n_groups")
-    )
-    rates = stats.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(1.0),
-            (F.lit(0.4) * F.col("n_total").cast("double"))
-            / (F.col("n_groups") * F.col("n_g")).cast("double"),
-        ).alias("rate"),
-    )
-    frac16 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("double")
-    return clean.join(F.broadcast(rates), "lang").filter(
-        frac16 < F.col("rate") * F.lit(65536.0)
-    )
+    # p14's mix device over the post-gate corpus
+    return uniform_mix(clean)
 
 
 def pl05_data_recipe_excised(spark: SparkSession, sf_dir: str) -> DataFrame:

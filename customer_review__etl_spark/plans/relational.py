@@ -23,7 +23,7 @@ Scale notes (100 TB manners) per family:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -117,6 +117,36 @@ def p06_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _range_offsets(
+    spark: SparkSession, df: DataFrame, keys: list[str], total: Column
+) -> tuple[DataFrame, Column]:
+    """The two-phase global offset (p16, pack_sequences, p20): range-
+    partition `df` by its unique sort `keys` so partitions are globally
+    ordered, and read back only the O(#partitions) per-partition
+    `total`s. Returns the partitioned rows with their `pid`, and each
+    row's offset: the sum of `total` over all earlier partitions.
+
+    localCheckpoint pins ONE materialized partitioning: the offsets
+    pass and the caller's ranking pass must see identical boundaries,
+    and RangePartitioner re-samples per execution otherwise."""
+    n_parts = spark.sparkContext.defaultParallelism
+    rp = (
+        df.repartitionByRange(n_parts, *keys)
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    totals = rp.groupBy("pid").agg(total.alias("n")).collect()
+    offsets: dict[int, int] = {}
+    acc = 0
+    for r in sorted(totals, key=lambda r: r.pid):
+        offsets[r.pid] = acc
+        acc += r.n
+    if not offsets:
+        return rp, F.lit(0)
+    omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    return rp, omap[F.col("pid")]
+
+
 def p16_scalable_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p06's global ordinal at scale — the two-phase form its docstring
     names, made real (the j06→j10 / s01→s02 baseline→scale-twin
@@ -133,28 +163,7 @@ def p16_scalable_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     read is bounded by partition count (cluster size), the same class
     as the CC fixpoint scalar reads."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    n_parts = spark.sparkContext.defaultParallelism
-    # localCheckpoint pins ONE materialized partitioning: the offsets
-    # pass and the ranking pass must see identical boundaries, and
-    # RangePartitioner re-samples per execution otherwise.
-    rp = (
-        ev.repartitionByRange(n_parts, "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = rp.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r.pid):
-        offsets[r.pid] = acc
-        acc += r.n
-    if offsets:
-        omap = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        )
-        base = omap[F.col("pid")]
-    else:
-        base = F.lit(0)
+    rp, base = _range_offsets(spark, ev, ["event_id"], F.count(F.lit(1)))
     w = Window.partitionBy("pid").orderBy("event_id")
     return (
         rp.withColumn(
@@ -279,6 +288,14 @@ def p14_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto a narrow scan — the corpus itself never shuffles;
     the keep predicate is pure map-side arithmetic."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    return uniform_mix(docs).select("doc_id", "lang", "rate")
+
+
+def uniform_mix(docs: DataFrame) -> DataFrame:
+    """p14's mix device, shared with pl04's post-gate corpus: the rows
+    of `docs` (doc_id, lang, ...) a doc's 16-bit md5 fraction keeps at
+    its language's rate, min(1, 0.4 · n_total / (n_groups · n_g)),
+    which the `rate` column carries."""
     stats = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_g"))
     tot = stats.agg(
         F.sum("n_g").alias("n_total"), F.count(F.lit(1)).alias("n_groups")
@@ -294,10 +311,8 @@ def p14_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     frac16 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
     ).cast("double")
-    return (
-        docs.join(F.broadcast(rates), "lang")
-        .filter(frac16 < F.col("rate") * F.lit(65536.0))
-        .select("doc_id", "lang", "rate")
+    return docs.join(F.broadcast(rates), "lang").filter(
+        frac16 < F.col("rate") * F.lit(65536.0)
     )
 
 
@@ -479,7 +494,7 @@ def pack_sequences(
     *carry). Zero-token docs contribute no slice.
 
     Running-sum + bucket-break, zero UDF. The global cumulative token
-    count reuses p16's two-phase scalable-ordinal machinery: range
+    count is the two-phase offset of _range_offsets: range
     partition by doc_id (globally ordered partitions), read back only
     the O(#partitions) per-partition token SUMS to compute offsets,
     then tok_start = offset + per-partition running sum − n. No
@@ -490,26 +505,7 @@ def pack_sequences(
     after the range partition is the explode's narrow map."""
     B = PACK_BUDGET
     docs = docs.filter(F.col("n_tokens") > 0)
-    n_parts = spark.sparkContext.defaultParallelism
-    # localCheckpoint pins ONE materialized partitioning (p16's rule):
-    # the offsets pass and the running-sum pass must see identical
-    # RangePartitioner boundaries.
-    rp = (
-        docs.repartitionByRange(n_parts, "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    sums = rp.groupBy("pid").agg(F.sum("n_tokens").alias("s")).collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(sums, key=lambda r: r.pid):
-        offsets[r.pid] = acc
-        acc += r.s
-    if offsets:
-        omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        base = omap[F.col("pid")]
-    else:
-        base = F.lit(0)
+    rp, base = _range_offsets(spark, docs, ["doc_id"], F.sum("n_tokens"))
     w = Window.partitionBy("pid").orderBy("doc_id")
     cum = rp.withColumn(
         "tok_start",
@@ -2048,7 +2044,7 @@ def p20_length_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, n_tokens, stage, ordinal) schedule, ordinal unique and
     gapless across stages.
 
-    Scale: the global ordinal is p16's two-phase machinery verbatim —
+    Scale: the global ordinal is _range_offsets' two-phase offset —
     range-partition by the unique composite sort key (stage, h,
     doc_id), read back O(#partitions) counts as offsets, ordinal =
     offset + local rank; no single-partition window. The md5 shuffle
@@ -2067,23 +2063,9 @@ def p20_length_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.bin(F.col("n_tokens"))).cast("long").alias("stage"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    rp = (
-        keyed.repartitionByRange(n_parts, "stage", "h", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+    rp, base = _range_offsets(
+        spark, keyed, ["stage", "h", "doc_id"], F.count(F.lit(1))
     )
-    counts = rp.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r.pid):
-        offsets[r.pid] = acc
-        acc += r.n
-    if offsets:
-        omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        base = omap[F.col("pid")]
-    else:
-        base = F.lit(0)
     w = Window.partitionBy("pid").orderBy("stage", "h", "doc_id")
     return (
         rp.withColumn("ordinal", (base + F.row_number().over(w)).cast("long"))
@@ -2576,6 +2558,39 @@ def u01_grouped_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type").applyInPandas(norm, schema)
 
 
+def _ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The u03/u06 input: (user_id, event_id, ts, c) of every event
+    with a value, c its value in integer cents."""
+    return (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .select(
+            "user_id", "event_id", "ts", cents(F.col("value")).alias("c")
+        )
+    )
+
+
+def _ewma_step(c: int, prev: int | None) -> int:
+    """One step of the u03/u06 recurrence in integer cents: a user's
+    first value, then (c + prev) div 2 truncated toward zero, matching
+    SQL DIV / DuckDB //."""
+    if prev is None:
+        return int(c)
+    q = int(c) + prev
+    return -((-q) // 2) if q < 0 else q // 2
+
+
+def _ewma_frame(pdf: pd.DataFrame, out: list[int]) -> pd.DataFrame:
+    """The u03/u06 output rows: `pdf`'s keys with their EWMA values."""
+    return pd.DataFrame(
+        {
+            "user_id": pdf["user_id"],
+            "event_id": pdf["event_id"],
+            "ewma_cents": out,
+        }
+    )
+
+
 def u03_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA smoothing of event value (alpha = 1/2) in INTEGER
     cents: ewma_n = (cents_n + ewma_{n-1}) div 2 with truncating
@@ -2595,32 +2610,16 @@ def u03_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recurrence itself is O(rows per user)."""
     import pandas as pd
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "user_id", "event_id", "ts", cents(F.col("value")).alias("c")
-        )
-    )
+    ev = _ewma_events(spark, sf_dir)
     schema = "user_id BIGINT, event_id BIGINT, ewma_cents BIGINT"
 
     def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "event_id"])
         out, prev = [], None
         for c in pdf["c"].astype("int64"):
-            q = int(c) if prev is None else int(c) + prev
-            if prev is not None:
-                # truncate toward zero, matching SQL DIV / DuckDB //
-                q = -((-q) // 2) if q < 0 else q // 2
-            prev = q
-            out.append(q)
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "ewma_cents": out,
-            }
-        )
+            prev = _ewma_step(c, prev)
+            out.append(prev)
+        return _ewma_frame(pdf, out)
 
     # Explicit repartition on the group key (the d04/round-7 lesson,
     # r16): the grouped-map exchange is ENSURE_REQUIREMENTS, so AQE
@@ -2715,13 +2714,7 @@ def u06_ewma_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented rewrite when group count explodes."""
     import pandas as pd
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "user_id", "event_id", "ts", cents(F.col("value")).alias("c")
-        )
-    )
+    ev = _ewma_events(spark, sf_dir)
     schema = "user_id BIGINT, event_id BIGINT, ewma_cents BIGINT"
 
     def fold(batches):
@@ -2733,19 +2726,9 @@ def u06_ewma_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 if u != prev_key:
                     prev_key, prev = u, None
-                q = int(c) if prev is None else int(c) + prev
-                if prev is not None:
-                    # truncate toward zero, matching SQL DIV / DuckDB //
-                    q = -((-q) // 2) if q < 0 else q // 2
-                prev = q
-                out.append(q)
-            yield pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"],
-                    "event_id": pdf["event_id"],
-                    "ewma_cents": out,
-                }
-            )
+                prev = _ewma_step(c, prev)
+                out.append(prev)
+            yield _ewma_frame(pdf, out)
 
     return (
         ev.repartition(shuffle_width(spark), "user_id")

@@ -104,20 +104,31 @@ def s01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 for queries vec_id < 16: the
     correctness baseline every ANN variant is judged against."""
     emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    q = _side(emb.filter(F.col("vec_id") < N_QUERIES), "q")
+    c = _side(emb, "n")
+    return _cos_topk(
+        c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")), TOPK
     )
-    c = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
+
+
+def _side(emb: DataFrame, p: str, *extra: Column) -> DataFrame:
+    """One side of a query/neighbor candidate join: vec_id, embedding
+    and nrm renamed to {p}_id, {p}_emb and {p}_nrm, plus `extra`."""
+    return emb.select(
+        F.col("vec_id").alias(f"{p}_id"),
+        F.col("embedding").alias(f"{p}_emb"),
+        F.col("nrm").alias(f"{p}_nrm"),
+        *extra,
     )
+
+
+def _cos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact-cosine top-k tail of s01, s04, s07 and s10: the `k`
+    nearest n_id per q_id among the candidate `pairs` (both _side
+    column sets), by exact cosine, ties broken by n_id."""
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "n_id")
     return (
-        c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
-        .select(
+        pairs.select(
             "q_id",
             "n_id",
             cosine_from_norms(
@@ -126,7 +137,7 @@ def s01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOPK)
+        .filter(F.col("rn") <= k)
         .select("q_id", "n_id", "cos", "rn")
     )
 
@@ -168,36 +179,19 @@ def s04_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vec_id", "embedding", "nrm", F.col("cent_id").alias("cell"))
     )
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    q = _side(
+        assigned.filter(F.col("vec_id") < N_QUERIES),
+        "q",
         F.col("cell").alias("q_cell"),
     )
-    c = assigned.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-        F.col("cell").alias("n_cell"),
-    )
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("cos"), "n_id")
-    return (
+    c = _side(assigned, "n", F.col("cell").alias("n_cell"))
+    return _cos_topk(
         q.join(
             c,
             (F.col("q_cell") == F.col("n_cell"))
             & (F.col("q_id") != F.col("n_id")),
-        )
-        .select(
-            "q_id",
-            "n_id",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("n_emb"),
-                F.col("q_nrm"), F.col("n_nrm"),
-            ).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= IVF_TOPK)
-        .select("q_id", "n_id", "cos", "rn")
+        ),
+        IVF_TOPK,
     )
 
 
@@ -291,7 +285,21 @@ def _s09_effective_depth_scan(spark: SparkSession, sf_dir: str) -> int:
             for b in (0, 1)
         ],
     )
-    bands = e.select(
+    bands = _s09_bands(e, [], D - 1)
+    fine = bands.groupBy(
+        "band", "bv", *[f"r{lv}" for lv in range(1, D)]
+    ).agg(F.count(F.lit(1)).alias("n")).collect()
+    return _cascade_effective_depth(
+        [tuple(r) for r in fine], 2, (S09_BUCKET_CAP, S09_SUBBUCKET_CAP), D
+    )
+
+
+def _s09_bands(e: DataFrame, lead: list[str], levels: int) -> DataFrame:
+    """s09's banded rows: each row of `e` (band0/1 and sub{lv}b{b}
+    columns) explodes to one row per band, (`lead`..., band, bv,
+    r1..r_levels), r_lv being that band's level-lv sub-bucket."""
+    return e.select(
+        *lead,
         F.explode(
             F.array(
                 *[
@@ -300,20 +308,14 @@ def _s09_effective_depth_scan(spark: SparkSession, sf_dir: str) -> int:
                         F.col(f"band{b}").alias("bv"),
                         *[
                             F.col(f"sub{lv}b{b}").alias(f"r{lv}")
-                            for lv in range(1, D)
+                            for lv in range(1, levels + 1)
                         ],
                     )
                     for b in (0, 1)
                 ]
             )
-        ).alias("e")
-    ).select("e.*")
-    fine = bands.groupBy(
-        "band", "bv", *[f"r{lv}" for lv in range(1, D)]
-    ).agg(F.count(F.lit(1)).alias("n")).collect()
-    return _cascade_effective_depth(
-        [tuple(r) for r in fine], 2, (S09_BUCKET_CAP, S09_SUBBUCKET_CAP), D
-    )
+        ).alias("e"),
+    ).select(*lead, "e.*")
 
 
 def _s10_effective_depth(spark: SparkSession, sf_dir: str) -> int:
@@ -342,6 +344,112 @@ def _s10_effective_depth_scan(spark: SparkSession, sf_dir: str) -> int:
     return _cascade_effective_depth(
         [tuple(r) for r in fine], 1, (S10_BUCKET_CAP,), D
     )
+
+
+def _capped_keys(
+    rows: DataFrame, base: list[str], caps: tuple[int, ...], D: int
+) -> tuple[DataFrame, DataFrame]:
+    """The occupancy-capped key loop of s09 and s10, one pass per level
+    lv = 1..D over `rows` (the `base` key columns plus r1..rD); `caps[0]`
+    gates level 1 and `caps[-1]` every deeper level. Returns (keyed,
+    probes). HOME keys k1..kD: level lv splits on r_lv iff the parent
+    path's occupancy exceeds its cap (a child key can only be live when
+    the parent's is; unmatched size rows give NULL n, so the sentinel
+    -1). PROBE keys p1..pD: a row probes its own sub-key plus the 3
+    hamming-1 variants iff the TARGET path (base, p1..p_{lv-1}) is
+    refined; the occupancy it keys on is the same row every home member
+    of that path keyed on, so both sides of every reachable pair agree
+    on whether level lv participates. Size tables broadcast."""
+    keyed = rows
+    probes = rows
+    path = list(base)
+    for lv in range(1, D + 1):
+        cap = caps[0] if lv == 1 else caps[-1]
+        src = keyed if lv == 1 else keyed.filter(F.col(f"k{lv - 1}") >= 0)
+        sizes = src.groupBy(*path).agg(F.count(F.lit(1)).alias("n"))
+        keyed = (
+            keyed.join(F.broadcast(sizes), path, "left")
+            .withColumn(
+                f"k{lv}",
+                F.when(F.col("n") > cap, F.col(f"r{lv}"))
+                .otherwise(F.lit(-1))
+                .cast("long"),
+            )
+            .drop("n")
+        )
+        ppath = base + [f"p{i}" for i in range(1, lv)]
+        tsizes = sizes.select(
+            *[F.col(c).alias(p) for c, p in zip(path, ppath)],
+            F.col("n").alias("tn"),
+        )
+        probes = (
+            probes.join(F.broadcast(tsizes), ppath, "left")
+            .withColumn(
+                f"p{lv}",
+                F.explode(
+                    F.when(
+                        F.col("tn") > cap,
+                        F.array(
+                            F.col(f"r{lv}"),
+                            F.col(f"r{lv}").bitwiseXOR(F.lit(1)),
+                            F.col(f"r{lv}").bitwiseXOR(F.lit(2)),
+                            F.col(f"r{lv}").bitwiseXOR(F.lit(4)),
+                        ),
+                    ).otherwise(F.array(F.lit(-1).cast("long")))
+                ),
+            )
+            .drop("tn")
+        )
+        path = path + [f"k{lv}"]
+    return keyed, probes
+
+
+def _sql_capped_keys(
+    src: str, base: list[str], carry: list[str], caps: tuple[int, ...], D: int
+) -> list[str]:
+    """DuckDB twin of _capped_keys: the sizes{lv}, keyed{lv} and p{lv}
+    CTEs over the `src` CTE, probes carrying `carry` columns."""
+    ctes = []
+    path = list(base)
+    for lv in range(1, D + 1):
+        c = caps[0] if lv == 1 else caps[-1]
+        keycols = ", ".join(path)
+        prev = src if lv == 1 else f"keyed{lv - 1}"
+        where = "" if lv == 1 else f" WHERE k{lv - 1} >= 0"
+        join = "JOIN" if lv == 1 else "LEFT JOIN"
+        ctes.append(
+            f"sizes{lv} AS (SELECT {keycols}, count(1) AS n FROM {prev}"
+            f"{where} GROUP BY {keycols})"
+        )
+        ctes.append(
+            f"keyed{lv} AS (\n"
+            f"  SELECT k.*, CASE WHEN s.n > {c} THEN k.r{lv} ELSE -1 END"
+            f" AS k{lv}\n"
+            f"  FROM {prev} k {join} sizes{lv} s USING ({keycols})\n)"
+        )
+        pprev = src if lv == 1 else f"p{lv - 1}"
+        on = " AND ".join(
+            f"s.{k} = p.{pk}"
+            for k, pk in zip(path, base + [f"p{i}" for i in range(1, lv)])
+        )
+        keep = ", ".join(
+            [f"p.p{i}" for i in range(1, lv)]
+            + [f"p.r{i}" for i in range(lv + 1, D + 1)]
+        )
+        keep = f" {keep}," if keep else ""
+        ctes.append(
+            f"p{lv} AS (\n"
+            f"  SELECT {', '.join(f'p.{x}' for x in carry)},{keep}"
+            f" _u{lv}.p{lv}\n"
+            f"  FROM {pprev} p LEFT JOIN sizes{lv} s ON {on},\n"
+            f"       UNNEST(CASE WHEN s.n > {c}\n"
+            f"                   THEN [p.r{lv}, xor(p.r{lv}, 1),"
+            f" xor(p.r{lv}, 2), xor(p.r{lv}, 4)]\n"
+            f"                   ELSE [CAST(-1 AS BIGINT)] END)"
+            f" AS _u{lv}(p{lv})\n)"
+        )
+        path = path + [f"k{lv}"]
+    return ctes
 
 
 S09_BUCKET_CAP = 200  # level-1 (band, bucket) occupancy refinement cap
@@ -452,24 +560,7 @@ def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ),
     )
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"band{b}").alias("bv"),
-                        *[
-                            F.col(f"sub{lv}b{b}").alias(f"r{lv}")
-                            for lv in range(1, D + 1)
-                        ],
-                    )
-                    for b in (0, 1)
-                ]
-            )
-        ).alias("e"),
-    ).select("vec_id", "e.*")
+    bands = _s09_bands(emb, ["vec_id"], D)
     # One loop builds both sides. HOME keys k1..kD: level lv splits on
     # r_lv iff the parent path's occupancy exceeds its cap (a child key
     # can only be live when the parent's is — unmatched size rows give
@@ -480,47 +571,9 @@ def s09_capped_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of every reachable pair agree on whether level lv
     # participates (the depth-2 consistency rule, now per level).
     # Size tables are ≤ 2·8^lv rows and broadcast.
-    keyed = bands
-    probes = bands
-    path = ["band", "bv"]
-    for lv in range(1, D + 1):
-        cap = S09_BUCKET_CAP if lv == 1 else S09_SUBBUCKET_CAP
-        src = keyed if lv == 1 else keyed.filter(F.col(f"k{lv - 1}") >= 0)
-        sizes = src.groupBy(*path).agg(F.count(F.lit(1)).alias("n"))
-        keyed = (
-            keyed.join(F.broadcast(sizes), path, "left")
-            .withColumn(
-                f"k{lv}",
-                F.when(F.col("n") > cap, F.col(f"r{lv}"))
-                .otherwise(F.lit(-1))
-                .cast("long"),
-            )
-            .drop("n")
-        )
-        ppath = ["band", "bv"] + [f"p{i}" for i in range(1, lv)]
-        tsizes = sizes.select(
-            *[F.col(c).alias(p) for c, p in zip(path, ppath)],
-            F.col("n").alias("tn"),
-        )
-        probes = (
-            probes.join(F.broadcast(tsizes), ppath, "left")
-            .withColumn(
-                f"p{lv}",
-                F.explode(
-                    F.when(
-                        F.col("tn") > cap,
-                        F.array(
-                            F.col(f"r{lv}"),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(1)),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(2)),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(4)),
-                        ),
-                    ).otherwise(F.array(F.lit(-1).cast("long")))
-                ),
-            )
-            .drop("tn")
-        )
-        path = path + [f"k{lv}"]
+    keyed, probes = _capped_keys(
+        bands, ["band", "bv"], (S09_BUCKET_CAP, S09_SUBBUCKET_CAP), D
+    )
     k2 = keyed.select(
         F.col("vec_id").alias("vec_b"),
         F.col("band").alias("band_b"),
@@ -598,46 +651,9 @@ def _s09_sql(order: bool = True) -> str:
         "  FROM embeddings\n)",
         f"bands AS (\n  {band_rows}\n)",
     ]
-    path = ["band", "bv"]
-    for lv in range(1, D + 1):
-        c = cap if lv == 1 else cap2
-        keycols = ", ".join(path)
-        prev = "bands" if lv == 1 else f"keyed{lv - 1}"
-        where = "" if lv == 1 else f" WHERE k{lv - 1} >= 0"
-        join = "JOIN" if lv == 1 else "LEFT JOIN"
-        ctes.append(
-            f"sizes{lv} AS (SELECT {keycols}, count(1) AS n FROM {prev}"
-            f"{where} GROUP BY {keycols})"
-        )
-        ctes.append(
-            f"keyed{lv} AS (\n"
-            f"  SELECT k.*, CASE WHEN s.n > {c} THEN k.r{lv} ELSE -1 END"
-            f" AS k{lv}\n"
-            f"  FROM {prev} k {join} sizes{lv} s USING ({keycols})\n)"
-        )
-        pprev = "bands" if lv == 1 else f"p{lv - 1}"
-        on = " AND ".join(
-            f"s.{k} = p.{pk}"
-            for k, pk in zip(
-                path, ["band", "bv"] + [f"p{i}" for i in range(1, lv)]
-            )
-        )
-        keep = ", ".join(
-            [f"p.p{i}" for i in range(1, lv)]
-            + [f"p.r{i}" for i in range(lv + 1, D + 1)]
-        )
-        keep = f" {keep}," if keep else ""
-        ctes.append(
-            f"p{lv} AS (\n"
-            f"  SELECT p.vec_id, p.band, p.bv,{keep} _u{lv}.p{lv}\n"
-            f"  FROM {pprev} p LEFT JOIN sizes{lv} s ON {on},\n"
-            f"       UNNEST(CASE WHEN s.n > {c}\n"
-            f"                   THEN [p.r{lv}, xor(p.r{lv}, 1),"
-            f" xor(p.r{lv}, 2), xor(p.r{lv}, 4)]\n"
-            f"                   ELSE [CAST(-1 AS BIGINT)] END)"
-            f" AS _u{lv}(p{lv})\n)"
-        )
-        path = path + [f"k{lv}"]
+    ctes += _sql_capped_keys(
+        "bands", ["band", "bv"], ["vec_id", "band", "bv"], (cap, cap2), D
+    )
     keymatch = " AND ".join(
         f"a.p{lv} = b.k{lv}" for lv in range(1, D + 1)
     )
@@ -693,24 +709,13 @@ def s05_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the capped-LSH candidate join, components via min-label
     propagation with pointer jumping (O(log diameter) rounds), output
     is a left join of the full collection against the label map."""
-    from .dedupplans import connected_components
+    from .dedupplans import connected_components, survivor_map
 
     pairs = s09_pairs_m(spark, sf_dir).select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
     labels = connected_components(pairs)
-    vecs = _emb(spark, sf_dir).select("vec_id")
-    return (
-        vecs.join(labels, vecs["vec_id"] == labels["node"], "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("lbl"), F.col("vec_id")).alias("cluster_id"),
-        )
-        .withColumn(
-            "survivor",
-            (F.col("vec_id") == F.col("cluster_id")).cast("int"),
-        )
-    )
+    return survivor_map(_emb(spark, sf_dir), "vec_id", labels)
 
 
 PQ_M = 4        # s06: subspaces (64 dims → 4 × 16)
@@ -854,38 +859,17 @@ def s07_multiprobe_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(ANN_PLANES)
         ],
     )
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(probes).alias("probe"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-        F.col("bucket").alias("n_bucket"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "n_id")
+    q = _side(emb, "q", F.explode(probes).alias("probe"))
+    c = _side(emb, "n", F.col("bucket").alias("n_bucket"))
     # the neighbor side carries the full corpus embeddings - never
     # broadcastable at scale; pinned sort-merge (round-12 audit)
-    return (
+    return _cos_topk(
         q.join(
             c.hint("merge"),
             (F.col("probe") == F.col("n_bucket"))
             & (F.col("q_id") != F.col("n_id")),
-        )
-        .select(
-            "q_id",
-            "n_id",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("n_emb"),
-                F.col("q_nrm"), F.col("n_nrm"),
-            ).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ANN_TOPK)
-        .select("q_id", "n_id", "cos", "rn")
+        ),
+        ANN_TOPK,
     )
 
 
@@ -947,57 +931,16 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ),
     )
-    keyed = emb
-    probes = emb
-    path = ["bucket"]
-    for lv in range(1, D + 1):
-        src = keyed if lv == 1 else keyed.filter(F.col(f"k{lv - 1}") >= 0)
-        sizes = src.groupBy(*path).agg(F.count(F.lit(1)).alias("n"))
-        keyed = (
-            keyed.join(F.broadcast(sizes), path, "left")
-            .withColumn(
-                f"k{lv}",
-                F.when(F.col("n") > S10_BUCKET_CAP, F.col(f"r{lv}"))
-                .otherwise(F.lit(-1))
-                .cast("long"),
-            )
-            .drop("n")
-        )
-        ppath = ["bucket"] + [f"p{i}" for i in range(1, lv)]
-        tsizes = sizes.select(
-            *[F.col(c).alias(p) for c, p in zip(path, ppath)],
-            F.col("n").alias("tn"),
-        )
-        probes = (
-            probes.join(F.broadcast(tsizes), ppath, "left")
-            .withColumn(
-                f"p{lv}",
-                F.explode(
-                    F.when(
-                        F.col("tn") > S10_BUCKET_CAP,
-                        F.array(
-                            F.col(f"r{lv}"),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(1)),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(2)),
-                            F.col(f"r{lv}").bitwiseXOR(F.lit(4)),
-                        ),
-                    ).otherwise(F.array(F.lit(-1).cast("long")))
-                ),
-            )
-            .drop("tn")
-        )
-        path = path + [f"k{lv}"]
-    q = probes.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    keyed, probes = _capped_keys(emb, ["bucket"], (S10_BUCKET_CAP,), D)
+    q = _side(
+        probes,
+        "q",
         F.col("bucket").alias("q_bucket"),
         *[F.col(f"p{lv}") for lv in range(1, D + 1)],
     )
-    c = keyed.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
+    c = _side(
+        keyed,
+        "n",
         F.col("bucket").alias("n_bucket"),
         *[F.col(f"k{lv}").alias(f"k{lv}_n") for lv in range(1, D + 1)],
     )
@@ -1006,23 +949,9 @@ def s10_capped_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for lv in range(1, D + 1):
         cond = cond & (F.col(f"p{lv}") == F.col(f"k{lv}_n"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "n_id")
     # neighbor side = full corpus embeddings: pinned sort-merge
     # (round-12 audit; ml09 inherits via the shared generator)
-    return (
-        q.join(c.hint("merge"), cond)
-        .select(
-            "q_id",
-            "n_id",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("n_emb"),
-                F.col("q_nrm"), F.col("n_nrm"),
-            ).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ANN_TOPK)
-        .select("q_id", "n_id", "cos", "rn")
-    )
+    return _cos_topk(q.join(c.hint("merge"), cond), ANN_TOPK)
 
 
 def _s10_sql() -> str:
@@ -1043,45 +972,9 @@ def _s10_sql() -> str:
         f"         {sub_cols}\n"
         "  FROM embeddings\n)",
     ]
-    path = ["bucket"]
-    for lv in range(1, D + 1):
-        keycols = ", ".join(path)
-        prev = "e" if lv == 1 else f"keyed{lv - 1}"
-        where = "" if lv == 1 else f" WHERE k{lv - 1} >= 0"
-        join = "JOIN" if lv == 1 else "LEFT JOIN"
-        ctes.append(
-            f"sizes{lv} AS (SELECT {keycols}, count(1) AS n FROM {prev}"
-            f"{where} GROUP BY {keycols})"
-        )
-        ctes.append(
-            f"keyed{lv} AS (\n"
-            f"  SELECT k.*, CASE WHEN s.n > {cap} THEN k.r{lv} ELSE -1 END"
-            f" AS k{lv}\n"
-            f"  FROM {prev} k {join} sizes{lv} s USING ({keycols})\n)"
-        )
-        pprev = "e" if lv == 1 else f"p{lv - 1}"
-        on = " AND ".join(
-            f"s.{k} = p.{pk}"
-            for k, pk in zip(
-                path, ["bucket"] + [f"p{i}" for i in range(1, lv)]
-            )
-        )
-        keep = ", ".join(
-            [f"p.p{i}" for i in range(1, lv)]
-            + [f"p.r{i}" for i in range(lv + 1, D + 1)]
-        )
-        keep = f" {keep}," if keep else ""
-        ctes.append(
-            f"p{lv} AS (\n"
-            f"  SELECT p.vec_id, p.v, p.bucket,{keep} _u{lv}.p{lv}\n"
-            f"  FROM {pprev} p LEFT JOIN sizes{lv} s ON {on},\n"
-            f"       UNNEST(CASE WHEN s.n > {cap}\n"
-            f"                   THEN [p.r{lv}, xor(p.r{lv}, 1),"
-            f" xor(p.r{lv}, 2), xor(p.r{lv}, 4)]\n"
-            f"                   ELSE [CAST(-1 AS BIGINT)] END)"
-            f" AS _u{lv}(p{lv})\n)"
-        )
-        path = path + [f"k{lv}"]
+    ctes += _sql_capped_keys(
+        "e", ["bucket"], ["vec_id", "v", "bucket"], (cap,), D
+    )
     keymatch = " AND ".join(f"q.p{lv} = c.k{lv}" for lv in range(1, D + 1))
     body = ",\n        ".join(ctes)
     return f"""
@@ -1145,25 +1038,14 @@ def s08_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal global ranks for exactly the rows a pool admits."""
     from .textplans import _bm25_scores
 
-    lex_pool = (
-        _bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(RRF_POOL)
-        .withColumn(
-            "r_lex",
-            F.row_number()
-            .over(Window.orderBy(F.desc("bm25"), "doc_id"))
-            .cast("long"),
-        )
-        .select("doc_id", "r_lex")
-    )
+    lex_pool = _rrf_pool(_bm25_scores(spark, sf_dir), "bm25", "r_lex")
     emb = _emb(spark, sf_dir).filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
     anchor = emb.filter(F.col("vec_id") == RRF_ANCHOR).select(
         F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
     )
-    sem_pool = (
+    sem = (
         emb.filter(F.col("vec_id") != RRF_ANCHOR)
         .crossJoin(F.broadcast(anchor))
         .select(
@@ -1173,16 +1055,8 @@ def s08_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("q_nrm"), F.col("nrm"),
             ).alias("cos"),
         )
-        .orderBy(F.desc("cos"), "doc_id")
-        .limit(RRF_POOL)
-        .withColumn(
-            "r_sem",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cos"), "doc_id"))
-            .cast("long"),
-        )
-        .select("doc_id", "r_sem")
     )
+    sem_pool = _rrf_pool(sem, "cos", "r_sem")
     fused = lex_pool.join(sem_pool, "doc_id", "full_outer").select(
         "doc_id",
         "r_lex",
@@ -1193,6 +1067,20 @@ def s08_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rrf"),
     )
     return fused.orderBy(F.desc("rrf"), "doc_id").limit(RRF_TOPK)
+
+
+def _rrf_pool(scored: DataFrame, score: str, rank: str) -> DataFrame:
+    """One retriever's s08 pool: the tie-broken top-RRF_POOL doc_ids by
+    `score` (desc, then doc_id), each with its 1-based `rank`."""
+    order = [F.desc(score), "doc_id"]
+    return (
+        scored.orderBy(*order)
+        .limit(RRF_POOL)
+        .withColumn(
+            rank, F.row_number().over(Window.orderBy(*order)).cast("long")
+        )
+        .select("doc_id", rank)
+    )
 
 
 def _s08_sql() -> str:

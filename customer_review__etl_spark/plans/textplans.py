@@ -18,7 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -400,8 +400,16 @@ def t13_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("b"),
         )
     )
+    return _surprisal_per_doc(docs, bits, "n_tokens")
+
+
+def _surprisal_per_doc(docs: DataFrame, bits: DataFrame, n: str) -> DataFrame:
+    """The per-doc tail of t13 and t15: every doc of `docs` with its
+    count `n` of scored units, the sum of their integer surprisal bits
+    `b` from `bits` (doc_id, b), and the mean. A doc with no scored
+    unit gets n = 0 and NULL bits."""
     per_doc = bits.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
+        F.count(F.lit(1)).alias(n),
         F.sum("b").alias("sum_bits"),
     )
     return (
@@ -409,11 +417,10 @@ def t13_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
+            F.coalesce(n, F.lit(0)).cast("long").alias(n),
             F.col("sum_bits"),
             (
-                F.col("sum_bits").cast("double")
-                / F.col("n_tokens").cast("double")
+                F.col("sum_bits").cast("double") / F.col(n).cast("double")
             ).alias("mean_bits"),
         )
     )
@@ -534,23 +541,7 @@ def _t15_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("b"),
         )
     )
-    per_doc = bits.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("b").alias("sum_bits"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.col("sum_bits"),
-            (
-                F.col("sum_bits").cast("double")
-                / F.col("n_bigrams").cast("double")
-            ).alias("mean_bits"),
-        )
-    )
+    return _surprisal_per_doc(docs, bits, "n_bigrams")
 
 
 _T15_CORE = None  # assigned below (needs sql helpers defined at import)
@@ -973,19 +964,37 @@ def t20_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_novel"),
         )
     )
+    return _zero_filled(
+        spark,
+        sf_dir,
+        per_doc,
+        ["n_grams", "n_novel"],
+        F.expr(
+            "CASE WHEN coalesce(n_grams, 0) = 0 THEN NULL "
+            "ELSE CAST(coalesce(n_novel, 0) AS DOUBLE) "
+            "/ CAST(n_grams AS DOUBLE) END"
+        ).alias("novelty"),
+    )
+
+
+def _zero_filled(
+    spark: SparkSession,
+    sf_dir: str,
+    per_doc: DataFrame,
+    counts: list[str],
+    *extra: Column,
+) -> DataFrame:
+    """Every document with its `per_doc` row (doc_id keyed): each of
+    the `counts` columns is 0 for a doc it has no row for; `extra`
+    columns follow."""
     return (
         _docs_par(spark, sf_dir)
         .select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
-            F.expr(
-                "CASE WHEN coalesce(n_grams, 0) = 0 THEN NULL "
-                "ELSE CAST(coalesce(n_novel, 0) AS DOUBLE) "
-                "/ CAST(n_grams AS DOUBLE) END"
-            ).alias("novelty"),
+            *[F.coalesce(c, F.lit(0)).alias(c) for c in counts],
+            *extra,
         )
     )
 
@@ -1185,15 +1194,8 @@ def t22_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_bpe_tokens"),
         )
     )
-    return (
-        _docs_par(spark, sf_dir)
-        .select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
-        )
+    return _zero_filled(
+        spark, sf_dir, per_doc, ["n_words", "n_bpe_tokens"]
     )
 
 

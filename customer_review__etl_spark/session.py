@@ -2,7 +2,11 @@
 
 The driver owns the SparkSession for `queries()`, so everything this
 engine needs beyond defaults must be settable at RUNTIME. `ensure_confs`
-is called by every plan entry point; it is idempotent and cheap.
+applies it where a session enters the engine, and only there:
+`get_spark`, every registry call (`plans._prepared`, which
+`__spark_entry__.entry` goes through too) and the streaming clone
+(`jobs._stream_session`). Code below those places (`tables.load`,
+`jobs.stream_events`) reads under the confs they set.
 
 Builder-only confs. Static confs are fixed when the JVM starts or
 the first session is built, so `ensure_confs` cannot apply them to a
@@ -76,15 +80,12 @@ CODEGEN_CACHE_ENTRIES = 4096
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
-    """Idempotently apply runtime confs this engine depends on."""
+    """Idempotently apply the runtime confs this engine depends on. A
+    conf the session refuses raises: answers read under another time
+    zone or cast mode would differ without an error."""
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception:
-            # Non-fatal: a conf may be static in exotic deployments; the
-            # plans that need it will fail loudly with a clear error.
-            pass
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
     return spark
 
 

@@ -50,7 +50,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
 from .. import store
-from ..session import ensure_confs
 
 TABLE_NAMES = [
     "region",
@@ -94,7 +93,6 @@ def _schema(
     """(physical schema, identity) of the parquet table at `path`; the
     schema is inferred once per identity, and a superseded identity
     first refreshes what Spark has cached over the path."""
-    ensure_confs(spark)  # nanosAsLong decides the inferred ts type
     ident = identity(path)
     schema = store.request(
         ("schema", path),

@@ -96,7 +96,6 @@ def stream_events(
     batch-equivalence claim only holds for single-batch replay — the
     watermarked stream dedup (st05), where a multi-batch replay could
     evict state past the watermark and re-emit keys — must pass it."""
-    ensure_confs(spark)
     # The file stream source wants a directory; glob-filter to the one
     # events file inside the sf dir.
     # events.parquet is a single FILE in the driver layout but a

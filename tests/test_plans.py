@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import ast
 import copy
+import io
+import tokenize
+from collections import defaultdict
 from pathlib import Path
 
 import __spark_entry__ as entrymod
@@ -423,6 +426,115 @@ def test_engine_options_are_set_by_a_user():
         + [f"{k}: exempt, but a user sets it"
            for k in sorted(exempt - set(found))]
     )
+
+
+# The shortest copy the guard below reports: the smallest length at
+# which the engine has no copy, with 8 as the floor. Below 8 a run is
+# mostly one expression's layout: at 7 the engine has 9 runs, such as
+# a select that closes on `cosine_from_norms(...).alias("cos")` over
+# differently named columns, and j12's two bucket-range explodes.
+COPY_MIN_LINES = 8
+
+
+def _code_lines(path: Path) -> list[tuple[int, str]]:
+    """The code of `path` as (line number, normalized text) pairs, one
+    per physical line that holds code: comments, docstrings and the
+    insides of multi-line strings dropped, every string literal read as
+    S (one S for adjacent literals, which Python joins into one) and
+    every number as 0, tokens joined by one space."""
+    src = path.read_text()
+    docstrings = set()
+    for node in ast.walk(ast.parse(src)):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(body, list) and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            docstrings.add((body[0].lineno, body[0].col_offset))
+    fstring_start = getattr(tokenize, "FSTRING_START", None)
+    fstring_end = getattr(tokenize, "FSTRING_END", None)
+    lines: dict[int, list[str]] = defaultdict(list)
+    depth = 0
+    last = None
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        kind = tok.type
+        if fstring_start is not None and kind == fstring_start:
+            depth += 1
+            if depth > 1:
+                continue
+            kind = tokenize.STRING
+        elif depth:
+            depth -= kind == fstring_end
+            continue
+        if kind in (tokenize.COMMENT, tokenize.NL):
+            continue
+        if kind == tokenize.STRING:
+            if tok.start not in docstrings and last != "S":
+                lines[tok.start[0]].append("S")
+            last = "S"
+            continue
+        last = None
+        if kind == tokenize.NUMBER:
+            lines[tok.start[0]].append("0")
+        elif kind not in (
+            tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT,
+            tokenize.ENDMARKER,
+        ):
+            lines[tok.start[0]].append(tok.string)
+    return [(n, " ".join(toks)) for n, toks in sorted(lines.items())]
+
+
+def copied_runs(engine_dir: Path, w: int) -> list[str]:
+    """Every run of `w` or more normalized code lines (_code_lines)
+    that appears twice in the engine under `engine_dir`, as
+    "a.py:first-last == b.py:first-last". Two windows of one file that
+    overlap are the same code, not a copy, and a window with no name in
+    it (the entries of a list of literals) is data."""
+    seqs = {
+        p.relative_to(engine_dir): _code_lines(p)
+        for p in sorted(engine_dir.rglob("*.py"))
+    }
+    where = defaultdict(list)
+    for p, seq in seqs.items():
+        for i in range(len(seq) - w + 1):
+            window = tuple(t for _, t in seq[i:i + w])
+            if any(
+                tok not in ("S", "0") and (tok[0].isalpha() or tok[0] == "_")
+                for line in window
+                for tok in line.split()
+            ):
+                where[window].append((p, i))
+    starts = defaultdict(set)
+    for occ in where.values():
+        for j, (pa, ia) in enumerate(occ):
+            for pb, ib in occ[j + 1:]:
+                if pa != pb or ib - ia >= w:
+                    starts[(pa, pb, ib - ia)].add(ia)
+    runs = []
+    for (pa, pb, shift), firsts in starts.items():
+        lo = prev = None
+        for i in sorted(firsts) + [None]:
+            if lo is not None and i != prev + 1:
+                a, b = seqs[pa], seqs[pb]
+                runs.append(
+                    f"{pa}:{a[lo][0]}-{a[prev + w - 1][0]} == "
+                    f"{pb}:{b[lo + shift][0]}-{b[prev + shift + w - 1][0]}"
+                )
+                lo = None
+            if lo is None:
+                lo = i
+            prev = i
+    return sorted(runs)
+
+
+def test_no_copied_plan_code():
+    """One copy of each device. A query that needs what another query
+    already does calls the function that does it; a second copy is
+    where a fix to one copy misses the other."""
+    runs = copied_runs(ENGINE_DIR, COPY_MIN_LINES)
+    assert not runs, "copied engine code:\n" + "\n".join(runs)
 
 
 def test_registry_head_covers_every_family():
